@@ -946,33 +946,35 @@ def _q72_funnel(spark, sf: str) -> DataFrame:
 def _q73_adjacent_pattern(spark, sf: str) -> DataFrame:
     """CEP adjacency (MATCH_RECOGNIZE PATTERN (A B)): click IMMEDIATELY
     followed by purchase (no intervening event of any type) within 1 h,
-    per user — one lag() over the keyed sort (operators/cep.adjacent_pairs)."""
-    from watermark_detector_spark.operators.cep import adjacent_pairs
+    per user — the k=2 case of operators/cep.sequence_match, one lead()
+    over the (ts, event_id) keyed sort."""
+    from watermark_detector_spark.operators.cep import sequence_match
 
     e = _t(spark, sf, "events")
-    return adjacent_pairs(e, "click", "purchase", max_gap_s=3600,
-                          tiebreak_cols=("event_id",))
+    return sequence_match(e, ["click", "purchase"], max_gap_s=3600).select(
+        "user_id", F.col("t_first").alias("first_ts"),
+        F.col("t_last").alias("second_ts"))
 
 
 def _q74_stream_pattern(spark, sf: str) -> DataFrame:
     """STREAMING CEP adjacency (applyInPandasWithState + event-time
     timeout): click immediately followed by purchase within 1 h per
     user, decided only once the second event drops below the watermark
-    (buffer-above-watermark, emit-on-finalize — streaming/state.
-    pattern_match_stream). Emission rule the oracle replays: pairs whose
-    second event time < final watermark (max event time truncated to ms,
-    minus 30 min)."""
-    from watermark_detector_spark.streaming.state import pattern_match_stream
+    (buffer-above-watermark, emit-on-finalize — the k=2 case of
+    streaming/state.sequence_match_stream). Emission rule the oracle
+    replays: pairs whose second event time < final watermark (max event
+    time truncated to ms, minus 30 min)."""
+    from watermark_detector_spark.streaming.state import sequence_match_stream
 
     src, _ = _events_stream(spark, sf)
-    pm = pattern_match_stream(src, "click", "purchase", max_gap_s=3600,
-                              watermark="30 minutes")
+    pm = sequence_match_stream(src, ["click", "purchase"], max_gap_s=3600,
+                               watermark="30 minutes")
     name = "wmd_q74_" + uuid.uuid4().hex[:8]
     _run_to_memory(pm, name, "append")
     return spark.table(name).select(
         "user_id",
-        F.date_format("first_ts", _TS_FMT_SPARK).alias("first_ts"),
-        F.date_format("second_ts", _TS_FMT_SPARK).alias("second_ts"),
+        F.date_format("t_first", _TS_FMT_SPARK).alias("first_ts"),
+        F.date_format("t_last", _TS_FMT_SPARK).alias("second_ts"),
     )
 
 
@@ -1098,8 +1100,8 @@ def _q81_stream_sequence(spark, sf: str) -> DataFrame:
     """STREAMING k-step CEP (k=3, strict contiguity): view, view, click
     as three CONSECUTIVE events per user, each gap <= 24 h, decided when
     the window's last event drops below the watermark (streaming/state.
-    sequence_match_stream — pattern_match_stream generalized to k steps
-    with a k-1 finalized-tail state + gap-based expiry). Emission rule
+    sequence_match_stream — a k-1 finalized-tail state + gap-based
+    expiry on the shared event-buffer skeleton). Emission rule
     the oracle replays: matches whose last event time < final watermark
     (max event time ms-floored, minus 30 min), via the same k-1-lead
     window SQL as the batch twin (operators/cep.sequence_match)."""

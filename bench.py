@@ -16,7 +16,7 @@ every parallelism level so scaling runs differ ONLY in core count.
 
 Env:
   SPARK_GRAFT_SF_DIR       (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS         (default 32)  — local[N] parallelism
+  SPARK_GRAFT_CPUS         (default: CPUs this process may run on) — local[N]
   WMD_BENCH_DOCS           (default 200000) — bench corpus size
   WMD_BENCH_SKIP_TESTDATA  (default unset) — flagship only (scaling runs)
 """
@@ -29,8 +29,9 @@ import shutil
 import sys
 import time
 
+from watermark_detector_spark.session import DEFAULT_CPUS as CPUS
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # WMD_EXECUTORS: if set, use local-cluster[N,8,8192] (separate executor
 # JVMs + py-files shipping — the faithful N-executor cluster stand-in)
 N_EXECUTORS = int(os.environ.get("WMD_EXECUTORS", "0"))

@@ -22,8 +22,9 @@ import statistics
 import sys
 import time
 
+from watermark_detector_spark.session import DEFAULT_CPUS as CPUS
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEATS = int(os.environ.get("WMD_EXTRA_REPEATS", "3"))
 PLANS_DIR = os.environ.get("WMD_PLANS_DIR", "/root/repo/plans/r08")
 

@@ -2,12 +2,12 @@ import pandas as pd
 import pytest
 
 from watermark_detector_spark.fixtures import FixtureConfig, generate
-from watermark_detector_spark.session import get_spark
+from watermark_detector_spark.session import DEFAULT_CPUS, get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="wmd-tests", cpus=8)
+    s = get_spark(app_name="wmd-tests", cpus=DEFAULT_CPUS)
     yield s
     s.stop()
 

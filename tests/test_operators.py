@@ -1165,12 +1165,12 @@ def test_funnel_greedy_semantics(spark):
 
 
 def test_adjacent_pairs_strict_adjacency(spark):
-    """adjacent_pairs(): only CONSECUTIVE A->B rows match — an
-    intervening event of any type breaks the pattern, and the gap
-    bound is enforced."""
+    """Adjacency (the k=2 sequence_match): only CONSECUTIVE A->B rows
+    match — an intervening event of any type breaks the pattern, and the
+    gap bound is enforced."""
     from datetime import datetime
 
-    from watermark_detector_spark.operators.cep import adjacent_pairs
+    from watermark_detector_spark.operators.cep import sequence_match
 
     T = lambda s: datetime(2024, 1, 1, 0, 0, s)
     rows = [
@@ -1181,8 +1181,9 @@ def test_adjacent_pairs_strict_adjacency(spark):
     ]
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_type string, event_id long")
-    got = adjacent_pairs(df, "click", "purchase", max_gap_s=30,
-                         tiebreak_cols=("event_id",)).collect()
+    got = sequence_match(df, ["click", "purchase"], max_gap_s=30).select(
+        "user_id", F.col("t_first").alias("first_ts"),
+        F.col("t_last").alias("second_ts")).collect()
     assert [(r["user_id"], r["first_ts"], r["second_ts"]) for r in got] == [
         (1, T(0), T(5))
     ]

@@ -199,7 +199,8 @@ def test_funnel_is_single_sort_single_exchange(spark):
 
 
 def test_adjacent_pattern_is_single_window_pass(spark):
-    """q73: one lag() pass — exactly one Exchange, one Sort, no join."""
+    """q73 (the k=2 sequence_match): one lead() pass — exactly one
+    Exchange, one Sort, no join."""
     plan = _plan(entrymod.queries()["q73_adjacent_pattern"](spark, SF))
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1

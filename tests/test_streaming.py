@@ -258,55 +258,6 @@ def test_sink_hadoop_fs_uri_root(spark, tmp_path_factory):
     assert got.count() == 110
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, fixture_cfg,
-                                                      fixture_paths,
-                                                      tmp_path_factory):
-    """The Spark-4 state-v2 operator (transformWithStateInPandas +
-    ValueState) must land on the same final per-domain best as the
-    applyInPandasWithState implementation — two stateful APIs, one
-    contract. Where the state-v2 wire protocol is unavailable (no
-    protobuf in this container), the operator must refuse with a clear
-    error instead of crashing the query, and the run is skipped."""
-    from watermark_detector_spark.streaming.state import (
-        HAS_TRANSFORM_WITH_STATE,
-        track_best_v2,
-    )
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        pages0 = read_pages_stream(spark, fixture_paths["pages_stream"])
-        kept0 = kept_detections(detected_pages(pages0, fixture_cfg.signatures))
-        with pytest.raises(RuntimeError, match="transformWithStateInPandas"):
-            track_best_v2(kept0)
-        pytest.skip("state-v2 protocol needs google.protobuf (not in container)")
-
-    root = tmp_path_factory.mktemp("tws")
-    pages = read_pages_stream(spark, fixture_paths["pages_stream"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
-    kept = kept.where(~F.col("url").contains("/flush/"))
-    q = (
-        track_best_v2(kept)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("best_v2_out")
-        .option("checkpointLocation", str(root / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT domain, max(best_score) AS best_score "
-                  "FROM best_v2_out GROUP BY domain")
-        .toPandas().sort_values("domain").reset_index(drop=True)
-    )
-    pages_b = spark.read.parquet(fixture_paths["pages"])
-    want = (
-        kept_detections(detected_pages(pages_b, fixture_cfg.signatures))
-        .groupBy("domain").agg(F.max("score").alias("best_score"))
-        .toPandas().sort_values("domain").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
-
-
 def test_sink_crash_between_data_and_manifest(spark, tmp_path_factory):
     """Fault injection on the exactly-once protocol's crash window: data
     files land, the process dies BEFORE the manifest publishes. The
@@ -592,15 +543,15 @@ def test_concurrent_compact_during_active_stream(spark, fixture_cfg,
 
 
 def test_pattern_match_stream_semantics(spark, tmp_path_factory):
-    """Streaming CEP adjacency: out-of-order arrival across micro-
-    batches buffers correctly, a LATE event (below watermark on
-    arrival) is dropped and cannot fabricate a match, emission happens
-    via event-time TIMEOUT for keys that stop receiving data, and
-    pairs whose second event never drops below the final watermark are
-    (correctly) not emitted."""
+    """Streaming CEP adjacency (the k=2 sequence matcher): out-of-order
+    arrival across micro-batches buffers correctly, a LATE event (below
+    watermark on arrival) is dropped and cannot fabricate a match,
+    emission happens via event-time TIMEOUT for keys that stop receiving
+    data, and pairs whose second event never drops below the final
+    watermark are (correctly) not emitted."""
     from datetime import datetime
 
-    from watermark_detector_spark.streaming.state import pattern_match_stream
+    from watermark_detector_spark.streaming.state import sequence_match_stream
 
     T = lambda m, s: datetime(2024, 1, 1, 10, m, s)
     root = tmp_path_factory.mktemp("cep_stream")
@@ -630,8 +581,10 @@ def test_pattern_match_stream_semantics(spark, tmp_path_factory):
     stream = (spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string")
         .option("maxFilesPerTrigger", 1).parquet(str(src_dir)))
-    pm = pattern_match_stream(stream, "click", "purchase", max_gap_s=3600,
-                              watermark="1 minute")
+    pm = sequence_match_stream(stream, ["click", "purchase"], max_gap_s=3600,
+                               watermark="1 minute").select(
+        "user_id", F.col("t_first").alias("first_ts"),
+        F.col("t_last").alias("second_ts"))
     q = (pm.writeStream.outputMode("append").format("memory")
          .queryName("cep_pattern_test")
          .option("checkpointLocation", str(root / "ckpt"))
@@ -744,13 +697,14 @@ def test_compact_sort_clustered_rewrite(spark, tmp_path_factory):
 
 
 def test_pattern_match_stream_expires_dead_heads(spark, tmp_path_factory):
-    """A retained head whose pairing window the watermark has passed is
-    EVICTED (state bounded by horizon, not by total keys ever seen):
-    u1's lone click can never match once wm > click+gap, so its state
-    row must disappear from the store."""
+    """Adjacency (the k=2 sequence matcher): a retained head whose
+    pairing window the watermark has passed is EVICTED (state bounded
+    by horizon, not by total keys ever seen): u1's lone click can never
+    match once wm > click+gap, so its state row must disappear from the
+    store."""
     from datetime import datetime
 
-    from watermark_detector_spark.streaming.state import pattern_match_stream
+    from watermark_detector_spark.streaming.state import sequence_match_stream
 
     T = lambda m, s: datetime(2024, 1, 1, 10, m, s)
     root = tmp_path_factory.mktemp("cep_expiry")
@@ -772,8 +726,8 @@ def test_pattern_match_stream_expires_dead_heads(spark, tmp_path_factory):
     stream = (spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string")
         .option("maxFilesPerTrigger", 1).parquet(str(src_dir)))
-    pm = pattern_match_stream(stream, "click", "purchase", max_gap_s=60,
-                              watermark="1 minute")
+    pm = sequence_match_stream(stream, ["click", "purchase"], max_gap_s=60,
+                               watermark="1 minute")
     q = (pm.writeStream.outputMode("append").format("memory")
          .queryName("cep_expiry_test")
          .option("checkpointLocation", str(root / "ckpt"))
@@ -951,9 +905,15 @@ def test_sequence_match_stream_semantics(spark, tmp_path_factory):
     assert state_rows and state_rows[-1] == 1, state_rows
 
 
-def test_sequence_match_stream_equals_batch(spark, tmp_path_factory):
+@pytest.mark.parametrize("steps,n_matches", [
+    (["view", "click", "purchase"], 3),
+    (["click", "purchase"], 4),
+], ids=["k3", "k2"])
+def test_sequence_match_stream_equals_batch(spark, tmp_path_factory, steps,
+                                            n_matches):
     """On an in-order replay where every match finalizes, the streaming
-    operator emits exactly the batch sequence_match rows."""
+    operator emits exactly the batch sequence_match rows — for k=3 and
+    for the k=2 adjacency case."""
     from datetime import datetime
 
     from watermark_detector_spark.operators.cep import sequence_match
@@ -973,8 +933,7 @@ def test_sequence_match_stream_equals_batch(spark, tmp_path_factory):
         rows, "event_id long, ts timestamp, user_id long, event_type string")
     want = sorted(
         (r["user_id"], r["t_first"], r["t_last"], r["first_id"])
-        for r in sequence_match(df, ["view", "click", "purchase"],
-                                max_gap_s=600).collect())
+        for r in sequence_match(df, steps, max_gap_s=600).collect())
 
     root = tmp_path_factory.mktemp("seq_eq")
     src_dir = root / "src"
@@ -990,16 +949,17 @@ def test_sequence_match_stream_equals_batch(spark, tmp_path_factory):
     stream = (spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string")
         .option("maxFilesPerTrigger", 1).parquet(str(src_dir)))
-    sm = sequence_match_stream(stream, ["view", "click", "purchase"],
-                               max_gap_s=600, watermark="1 minute")
+    sm = sequence_match_stream(stream, steps, max_gap_s=600,
+                               watermark="1 minute")
+    name = "seq_eq_test_k" + str(len(steps))
     q = (sm.writeStream.outputMode("append").format("memory")
-         .queryName("seq_eq_test")
+         .queryName(name)
          .option("checkpointLocation", str(root / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination()
     got = sorted((r["user_id"], r["t_first"], r["t_last"], r["first_id"])
-                 for r in spark.table("seq_eq_test").collect())
-    assert got == want and len(got) == 3
+                 for r in spark.table(name).collect())
+    assert got == want and len(got) == n_matches
 
 
 def test_funnel_stream_ttl_reclaims_inactive_keys(spark, tmp_path_factory):

@@ -1,12 +1,13 @@
 """Complex-event-processing primitives over keyed event streams/tables:
-ordered-sequence funnels and adjacent-pattern detection.
+ordered-sequence funnels, strict-contiguity sequences (k >= 2, so
+adjacent pairs are the k=2 case), greedy ``A B+ C`` runs and absence.
 
 These are the batch forms of the CEP surface (the streaming session /
-stateful operators in streaming/ are their event-time twins). Both are
-pure window/aggregate compositions — one shuffle on the key, a per-key
-sort, no UDF, no self-join — so they hold their shape on 10^12-event
-tables: the cost is the keyed sort-merge pass, identical to any
-sessionization.
+stateful operators in streaming/ are their event-time twins). The
+window-based ones are pure window/aggregate compositions — one shuffle
+on the key, a per-key sort, no UDF, no self-join — so they hold their
+shape on 10^12-event tables: the cost is the keyed sort-merge pass,
+identical to any sessionization.
 
 Semantics are pinned so an independent SQL engine can replay them
 exactly (the driver oracles do):
@@ -18,8 +19,9 @@ exactly (the driver oracles do):
   deterministic and one-pass; it can miss a later chain that would fit
   the window when the earliest one does not — the standard funnel
   trade-off, documented here rather than hidden.
-- ``adjacent_pairs``: MATCH_RECOGNIZE ``PATTERN (A B)`` over the keyed
-  event order — consecutive-row matches only, with a max gap.
+- ``sequence_match``: MATCH_RECOGNIZE ``PATTERN (S1 ... Sk)`` over the
+  keyed (ts, id) order — consecutive-row matches only, with a max gap;
+  ``PATTERN (A B)`` adjacency is ``sequence_match(df, [A, B], gap)``.
 """
 
 from __future__ import annotations
@@ -111,31 +113,6 @@ def funnel(df: DataFrame, steps: list[str], within_s: int,
     )
 
 
-def adjacent_pairs(df: DataFrame, first: str, second: str, max_gap_s: int,
-                   key_col: str = "user_id", ts_col: str = "ts",
-                   type_col: str = "event_type",
-                   tiebreak_cols: tuple = ()) -> DataFrame:
-    """MATCH_RECOGNIZE ``PATTERN (A B)``: CONSECUTIVE events per key
-    where type A is immediately followed by type B within ``max_gap_s``
-    seconds (no other event of any type between them — the strict
-    adjacency CEP primitive). One lag() over the keyed sort."""
-    order = [F.col(ts_col), *[F.col(c) for c in tiebreak_cols]]
-    w = W.partitionBy(key_col).orderBy(*order)
-    lagged = df.select(
-        key_col,
-        F.col(ts_col).alias("second_ts"),
-        F.col(type_col).alias("second_type"),
-        F.lag(type_col).over(w).alias("first_type"),
-        F.lag(ts_col).over(w).alias("first_ts"),
-    )
-    return lagged.where(
-        (F.col("first_type") == first)
-        & (F.col("second_type") == second)
-        & (F.col("second_ts")
-           <= F.col("first_ts") + F.expr(f"INTERVAL {int(max_gap_s)} SECOND"))
-    ).select(key_col, "first_ts", "second_ts")
-
-
 def sequence_match(df: DataFrame, steps: list[str], max_gap_s: int,
                    key_col: str = "user_id", ts_col: str = "ts",
                    type_col: str = "event_type",
@@ -149,9 +126,9 @@ def sequence_match(df: DataFrame, steps: list[str], max_gap_s: int,
     window expression — no iteration, no state).
 
     Output: (key, t_first, t_last, first_id). Cost: ONE keyed
-    sort-merge pass carrying k-1 lead() columns — the same single
-    Exchange+Sort as adjacent_pairs regardless of k, so the shape
-    holds at 10^12 events. ``sequence_match_stream`` (streaming/state)
+    sort-merge pass carrying k-1 lead() columns — a single
+    Exchange+Sort regardless of k, so the shape holds at 10^12
+    events. ``sequence_match_stream`` (streaming/state)
     is the event-time twin; q81's oracle replays this SQL.
 
     Each step may be a single type name or a collection of

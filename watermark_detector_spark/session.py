@@ -13,9 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[32], 128 GiB); on a real cluster
-# these come from spark-submit --conf and the same builder applies them.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local-mode defaults sized from the host this process may run on; on a
+# real cluster these come from spark-submit --conf and the same builder
+# applies them.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
+
+
+def _default_driver_memory() -> str:
+    """About half of physical RAM (``/proc/meminfo`` MemTotal), capped
+    at 48g. In local mode the driver JVM is the executor; a heap sized
+    past physical RAM on a host without swap gets the JVM OOM-killed
+    instead of garbage-collected."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh
+                   if ln.startswith("MemTotal:"))
+    return f"{max(1, min(48, kib // (2 * 1024 * 1024)))}g"
 
 
 def engine_conf(cpus: int = DEFAULT_CPUS) -> dict[str, str]:
@@ -107,9 +120,9 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     # local mode: the driver JVM IS the executor — size it accordingly
-    # (sandbox has 128 GiB; ignored when a JVM already exists)
+    # (ignored when a JVM already exists)
     builder = builder.config(
-        "spark.driver.memory", driver_memory or os.environ.get("WMD_DRIVER_MEM", "48g")
+        "spark.driver.memory", driver_memory or _default_driver_memory()
     )
     builder = builder.config("spark.ui.enabled", "false")
     spark = builder.getOrCreate()

@@ -2,23 +2,34 @@
 
 The reference's only stateful computation is the running-min validation
 loss that triggers a best-model checkpoint (train_watermarks.py:127,
-161-163). Its engine analog: per-domain running state via
+161-163). Its engine analog: per-key running state via
 ``applyInPandasWithState`` — arbitrary state schema, watermark-aware
 timeouts, RocksDB-backed when the provider is configured
 (session.engine_conf).
 
-Two operators:
+Operators:
 - ``track_best``   — per-domain running best score + totals; emits a
   commit record only on improvement (checkpoint-on-improve analog).
 - ``session_stats`` — per-domain session aggregation with event-time
   timeout (the reference's dilation-gap region merging,
   train_watermarks.py:65-67, lifted to event time).
+- ``sequence_match_stream``, ``funnel_stream``, ``kleene_match_stream``,
+  ``absence_alert_stream`` — the event-time twins of the batch CEP
+  operators in operators/cep.py. All four run on ONE per-user
+  event-buffer skeleton (``_per_user_stream`` + ``_event_buffer_fn``):
+  read the buffered events from state, add the rows at or above the
+  watermark, sort by (ts, id), then hand the buffer to the operator's
+  step, which finalizes the events below the watermark, keeps what a
+  future match still needs and arms (or expires) the event-time timer
+  (``_keep_until``).
+- ``near_dup_gate_stream`` — minhash-LSH first-arrival dedup gate keyed
+  on band buckets.
 """
 
 from __future__ import annotations
 
 import contextlib
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -108,6 +119,12 @@ SESSION_STATE_SCHEMA = T.StructType(
 _US = 1_000_000
 
 
+def _micros(ts: pd.Series):
+    """Event-time column → int64 epoch microseconds (floored) — the one
+    ts→µs conversion every operator in this module uses."""
+    return ts.values.astype("datetime64[ns]").astype("int64") // 1000
+
+
 def _session_fn_factory(gap_s: int):
     gap_us = gap_s * _US
 
@@ -130,8 +147,8 @@ def _session_fn_factory(gap_s: int):
             s, e, n, mx = None, None, 0, float("-inf")
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values("warc_ts")
-        for ts, score in zip(rows["warc_ts"], rows["score"]):
-            t = int(pd.Timestamp(ts).value // 1000)  # ns → us
+        for t, score in zip(_micros(rows["warc_ts"]), rows["score"]):
+            t = int(t)
             if s is None:
                 s, e, n, mx = t, t, 1, float(score)
             elif t - e <= gap_us:
@@ -151,128 +168,97 @@ def _session_fn_factory(gap_s: int):
     return _fn
 
 
-PATTERN_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("first_ts", T.TimestampType(), False),
-        T.StructField("second_ts", T.TimestampType(), False),
-    ]
-)
-PATTERN_STATE_SCHEMA = T.StructType(
-    [
+# ---------------------------------------------------------------------------
+# per-user event-buffer skeleton shared by the streaming CEP operators
+# ---------------------------------------------------------------------------
+
+# (ts_us, event_type, event_id) triples, sorted by (ts, id)
+_Buffer = list[tuple[int, str, int]]
+_StepFn = Callable[[Any, _Buffer, list, int, GroupState],
+                   list[dict[str, Any]]]
+
+
+def _buffer_state_schema(*extra: T.StructField) -> T.StructType:
+    """Every CEP operator's state: its event buffer as three parallel
+    arrays, followed by the operator's own fields."""
+    return T.StructType([
         T.StructField("ts_us", T.ArrayType(T.LongType()), True),
         T.StructField("types", T.ArrayType(T.StringType()), True),
         T.StructField("ids", T.ArrayType(T.LongType()), True),
-    ]
-)
+        *extra,
+    ])
 
 
-def _pattern_fn_factory(first_type: str, second_type: str, max_gap_s: int):
-    gap_us = max_gap_s * _US
+def _write(state: GroupState, buf: _Buffer, *extra) -> None:
+    state.update(([r[0] for r in buf], [r[1] for r in buf],
+                  [r[2] for r in buf], *extra))
 
-    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+
+def _keep_until(state: GroupState, buf: _Buffer, extra: tuple, wm_us: int,
+                fire_us: int | None) -> None:
+    """Keep ``buf`` and ``extra`` and wake the key once the watermark
+    passes ``fire_us``. A fire time already below the watermark (or
+    None) means nothing kept can matter anymore: the state row is
+    dropped, which is what bounds state for keys that go silent."""
+    if fire_us is None or fire_us < wm_us:
+        state.remove()
+    else:
+        _write(state, buf, *extra)
+        state.setTimeoutTimestamp(fire_us // 1000 + 1)
+
+
+def _event_buffer_fn(step: _StepFn, fresh: tuple):
+    """Read the key's buffer and fields from state (``fresh`` fields for
+    a new key), add the rows at or above the watermark — later rows are
+    late and dropped, the same late-data contract as the windowed
+    aggregations; a timeout call carries no rows — sort by (ts, id), and
+    let ``step`` finalize, write the state back and return output rows."""
+
+    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame],
+            state: GroupState) -> Iterator[pd.DataFrame]:
         (user,) = key
         wm_us = state.getCurrentWatermarkMs() * 1000
         if state.exists:
-            ts_l, ty_l, id_l = state.get
-            buf = [(int(t), str(y), int(i))
-                   for t, y, i in zip(ts_l, ty_l, id_l)]
+            ts_l, ty_l, id_l, *extra = state.get
+            buf = list(zip(ts_l, ty_l, id_l))
         else:
-            buf = []
+            buf, extra = [], list(fresh)
         if not state.hasTimedOut:
-            chunks = [p for p in pdf_iter if len(p)]
-            if chunks:
-                rows = pd.concat(chunks, ignore_index=True)
-                for ts, ty, eid in zip(rows["ts"], rows["event_type"],
-                                       rows["event_id"]):
-                    t_us = int(pd.Timestamp(ts).value // 1000)
-                    if t_us < wm_us:
-                        continue  # late by watermark: dropped, like any
-                        # event-time operator downstream of withWatermark
-                    buf.append((t_us, str(ty), int(eid)))
+            for pdf in pdf_iter:
+                for t, ty, eid in zip(_micros(pdf["ts"]), pdf["event_type"],
+                                      pdf["event_id"]):
+                    if t >= wm_us:
+                        buf.append((int(t), str(ty), int(eid)))
         buf.sort(key=lambda r: (r[0], r[2]))
-        # events strictly below the watermark are FINAL: no event can
-        # ever land between them anymore, so adjacency among them is
-        # decided — emit matches, keep only the LAST final event (it may
-        # be the 'first' of a pair completed by a future event)
-        n_final = sum(1 for r in buf if r[0] < wm_us)
-        out = []
-        for i in range(1, n_final):
-            a, b = buf[i - 1], buf[i]
-            if (a[1] == first_type and b[1] == second_type
-                    and b[0] - a[0] <= gap_us):
-                out.append({"user_id": user,
-                            "first_ts": pd.Timestamp(a[0], unit="us"),
-                            "second_ts": pd.Timestamp(b[0], unit="us")})
-        keep = buf[max(0, n_final - 1):]
-        pending = [r for r in keep if r[0] >= wm_us]
-        if not keep:
-            state.remove()
-        elif pending:
-            state.update((
-                [r[0] for r in keep],
-                [r[1] for r in keep],
-                [r[2] for r in keep],
-            ))
-            # fire when the watermark passes the earliest pending
-            # event so its adjacency finalizes even if this key
-            # never receives another row
-            state.setTimeoutTimestamp(pending[0][0] // 1000 + 1)
-        else:
-            # only the retained head remains. It can only ever be the
-            # FIRST of a future pair, and any future event has
-            # ts >= watermark — so once the watermark passes
-            # head + max_gap no match is possible and keeping the entry
-            # would leak one state row per inactive key forever (the
-            # bounded-state claim). Expire it on that boundary.
-            expiry_ms = (keep[0][0] + gap_us) // 1000 + 1
-            if expiry_ms * 1000 <= wm_us:
-                state.remove()
-            else:
-                state.update((
-                    [r[0] for r in keep],
-                    [r[1] for r in keep],
-                    [r[2] for r in keep],
-                ))
-                state.setTimeoutTimestamp(expiry_ms)
+        out = step(user, buf, extra, wm_us, state)
         if out:
             yield pd.DataFrame(out)
 
     return _fn
 
 
-def pattern_match_stream(events: DataFrame, first_type: str, second_type: str,
-                         max_gap_s: int,
-                         watermark: str = "30 minutes") -> DataFrame:
-    """Streaming CEP adjacency (the event-time twin of
-    operators/cep.adjacent_pairs): per-user, emit (first_ts, second_ts)
-    whenever an event of ``first_type`` is IMMEDIATELY followed by one
-    of ``second_type`` within ``max_gap_s`` — with out-of-order arrival
-    handled by buffering and watermark-driven finalization.
-
-    An adjacency is only decidable once no event can still arrive
-    between the two rows, i.e. once the second row drops below the
-    event-time watermark; the operator buffers per-key events above the
-    watermark (state bounded by horizon x per-key event rate), emits
-    matches from the finalized prefix, retains the last finalized event
-    as a potential pattern head, and arms an event-time timeout so
-    finalization happens even for keys that stop receiving data. Late
-    events (below the watermark on arrival) are dropped — identical
-    late-data semantics to the windowed aggregations. Emission contract
-    (what the q74 oracle replays): exactly the pairs whose second event
-    time is strictly below the final watermark (max event time - delay)."""
+def _per_user_stream(events: DataFrame, watermark: str, step: _StepFn,
+                     fresh: tuple, output_schema: T.StructType,
+                     state_schema: T.StructType,
+                     output_mode: str = "append") -> DataFrame:
     return (
         events.select("user_id", "ts", "event_type", "event_id")
         .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _pattern_fn_factory(first_type, second_type, max_gap_s),
-            outputStructType=PATTERN_OUTPUT_SCHEMA,
-            stateStructType=PATTERN_STATE_SCHEMA,
-            outputMode="append",
+            _event_buffer_fn(step, fresh),
+            outputStructType=output_schema,
+            stateStructType=state_schema,
+            outputMode=output_mode,
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+def _n_final(buf: _Buffer, wm_us: int) -> int:
+    """Length of the FINALIZED prefix of a sorted buffer: events strictly
+    below the watermark, between which no event can land anymore."""
+    return sum(1 for r in buf if r[0] < wm_us)
 
 
 SEQUENCE_OUTPUT_SCHEMA = T.StructType(
@@ -283,17 +269,11 @@ SEQUENCE_OUTPUT_SCHEMA = T.StructType(
         T.StructField("first_id", T.LongType(), False),
     ]
 )
-SEQUENCE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("types", T.ArrayType(T.StringType()), True),
-        T.StructField("ids", T.ArrayType(T.LongType()), True),
-        T.StructField("n_tail", T.LongType(), True),
-    ]
-)
+SEQUENCE_STATE_SCHEMA = _buffer_state_schema(
+    T.StructField("n_tail", T.LongType(), True))
 
 
-def _sequence_fn_factory(steps: list[str], max_gap_s: int):
+def _sequence_step(steps: list, max_gap_s: int) -> _StepFn:
     from watermark_detector_spark.operators.cep import normalize_steps
 
     # alternation support: each step is a set of acceptable type names
@@ -303,40 +283,19 @@ def _sequence_fn_factory(steps: list[str], max_gap_s: int):
     gap_us = max_gap_s * _US
     k = len(step_sets)
 
-    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            ts_l, ty_l, id_l, n_tail = state.get
-            buf = [(int(t), str(y), int(i))
-                   for t, y, i in zip(ts_l, ty_l, id_l)]
-            n_tail = int(n_tail)
-        else:
-            buf, n_tail = [], 0
-        if not state.hasTimedOut:
-            chunks = [p for p in pdf_iter if len(p)]
-            if chunks:
-                rows = pd.concat(chunks, ignore_index=True)
-                for ts, ty, eid in zip(rows["ts"], rows["event_type"],
-                                       rows["event_id"]):
-                    t_us = int(pd.Timestamp(ts).value // 1000)
-                    if t_us < wm_us:
-                        continue  # late by watermark: dropped
-                    buf.append((t_us, str(ty), int(eid)))
+    def step(user, buf, extra, wm_us, state):
+        (n_tail,) = extra
         # Tail entries all have ts < the watermark at the batch that
         # finalized them, pending/new entries have ts >= it — so after
-        # this sort the old tail is still exactly buf[:n_tail] and
+        # the sort the old tail is still exactly buf[:n_tail] and
         # contiguity within the finalized prefix is immutable (any
         # future arrival has ts >= wm > every finalized ts).
-        buf.sort(key=lambda r: (r[0], r[2]))
-        n_final = sum(1 for r in buf if r[0] < wm_us)
+        n_final = _n_final(buf, wm_us)
         out = []
         # windows ENDING in a newly-finalized event are newly decided;
         # windows ending inside the old tail were emitted already
         for i in range(max(k - 1, n_tail), n_final):
             win = buf[i - k + 1:i + 1]
-            if len(win) < k:
-                continue
             if all(win[j][1] in step_sets[j] for j in range(k)) and all(
                     win[j][0] - win[j - 1][0] <= gap_us
                     for j in range(1, k)):
@@ -345,58 +304,36 @@ def _sequence_fn_factory(steps: list[str], max_gap_s: int):
                             "t_last": pd.Timestamp(win[-1][0], unit="us"),
                             "first_id": win[0][2]})
         keep = buf[max(0, n_final - (k - 1)):]
-        tail_len = min(k - 1, n_final)
-        pending = [r for r in keep if r[0] >= wm_us]
-        if not keep:
-            state.remove()
-        elif pending:
-            state.update((
-                [r[0] for r in keep],
-                [r[1] for r in keep],
-                [r[2] for r in keep],
-                tail_len,
-            ))
-            state.setTimeoutTimestamp(pending[0][0] // 1000 + 1)
-        else:
-            # tail-only state: any future match through the tail must
-            # chain consecutively through its LAST element, and future
-            # events have ts >= wm — once wm > tail_last + gap no such
-            # chain can satisfy the gap rule, so expire (same bounded-
-            # state contract as pattern_match_stream).
-            expiry_ms = (keep[-1][0] + gap_us) // 1000 + 1
-            if expiry_ms * 1000 <= wm_us:
-                state.remove()
-            else:
-                state.update((
-                    [r[0] for r in keep],
-                    [r[1] for r in keep],
-                    [r[2] for r in keep],
-                    tail_len,
-                ))
-                state.setTimeoutTimestamp(expiry_ms)
-        if out:
-            yield pd.DataFrame(out)
+        # wake when the earliest pending event finalizes. With only the
+        # tail left: any future match through it must chain
+        # consecutively through its LAST element, and future events have
+        # ts >= wm — once wm > tail_last + gap no such chain can satisfy
+        # the gap rule, so the tail expires then.
+        fire_us = next((r[0] for r in keep if r[0] >= wm_us),
+                       keep[-1][0] + gap_us if keep else None)
+        _keep_until(state, keep, (min(k - 1, n_final),), wm_us, fire_us)
+        return out
 
-    return _fn
+    return step
 
 
 def sequence_match_stream(events: DataFrame, steps: list[str],
                           max_gap_s: int,
                           watermark: str = "30 minutes") -> DataFrame:
     """Streaming k-step CEP with strict contiguity (the event-time twin
-    of operators/cep.sequence_match, generalizing pattern_match_stream
-    from 2 to k steps): per-user, emit (t_first, t_last, first_id)
-    whenever k CONSECUTIVE events match ``steps`` in order with every
-    consecutive gap <= ``max_gap_s``, decided only once the window's
-    last event drops below the event-time watermark (no event can then
-    ever be inserted inside the window). Out-of-order arrivals above
-    the watermark are buffered; state per key is the pending buffer
+    of operators/cep.sequence_match): per-user, emit (t_first, t_last,
+    first_id) whenever k CONSECUTIVE events match ``steps`` in order
+    with every consecutive gap <= ``max_gap_s``, decided only once the
+    window's last event drops below the event-time watermark (no event
+    can then ever be inserted inside the window). k=2 is MATCH_RECOGNIZE
+    ``PATTERN (A B)`` adjacency (q74). Out-of-order arrivals above the
+    watermark are buffered; state per key is the pending buffer
     (bounded by the watermark horizon x event rate) plus the last k-1
     finalized events — retained as possible prefixes of future windows
     and EXPIRED via an event-time timer once the watermark passes
     tail_last + max_gap (state stays bounded for inactive keys). Late
     events drop with the same semantics as windowed aggregations.
-    Emission contract (what the q81 oracle replays): exactly the
+    Emission contract (what the q74/q81 oracles replay): exactly the
     matches whose last event time is strictly below the final
     watermark."""
     if len(steps) < 2:
@@ -405,18 +342,9 @@ def sequence_match_stream(events: DataFrame, steps: list[str],
         # (IndexError) or silently diverge from sequence_match
         raise ValueError(
             f"sequence_match_stream needs >= 2 steps, got {len(steps)}")
-    return (
-        events.select("user_id", "ts", "event_type", "event_id")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sequence_fn_factory(list(steps), max_gap_s),
-            outputStructType=SEQUENCE_OUTPUT_SCHEMA,
-            stateStructType=SEQUENCE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _per_user_stream(events, watermark,
+                            _sequence_step(list(steps), max_gap_s), (0,),
+                            SEQUENCE_OUTPUT_SCHEMA, SEQUENCE_STATE_SCHEMA)
 
 
 FUNNEL_OUTPUT_SCHEMA = T.StructType(
@@ -427,60 +355,32 @@ FUNNEL_OUTPUT_SCHEMA = T.StructType(
         T.StructField("t_complete", T.TimestampType(), False),
     ]
 )
-FUNNEL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("chain_us", T.ArrayType(T.LongType()), True),
-        T.StructField("buf_ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("buf_types", T.ArrayType(T.StringType()), True),
-        T.StructField("buf_ids", T.ArrayType(T.LongType()), True),
-    ]
-)
+FUNNEL_STATE_SCHEMA = _buffer_state_schema(
+    T.StructField("chain_us", T.ArrayType(T.LongType()), True))
 
 _UNSET = -1
 
 
-def _funnel_stream_fn_factory(steps: list[str], within_s: int,
-                              state_ttl_s: int | None = None):
+def _funnel_step(steps: list[str], within_s: int,
+                 state_ttl_s: int | None) -> _StepFn:
     horizon_us = within_s * _US
     k = len(steps)
 
-    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            chain_l, ts_l, ty_l, id_l = state.get
-            chain = [int(c) for c in chain_l]
-            buf = [(int(t), str(y), int(i))
-                   for t, y, i in zip(ts_l, ty_l, id_l)]
-        else:
-            chain = [_UNSET] * k
-            buf = []
+    def step(user, buf, extra, wm_us, state):
+        chain = list(extra[0])
         if state.hasTimedOut and state_ttl_s is not None and not buf:
             # TTL expiry: nothing pending arrived for state_ttl_s of
             # event time — drop the chain (chain-restart semantics the
             # caller opted into; a later event for this key starts a
             # fresh chain at step 0).
             state.remove()
-            return
-        if not state.hasTimedOut:
-            chunks = [p for p in pdf_iter if len(p)]
-            if chunks:
-                rows = pd.concat(chunks, ignore_index=True)
-                for ts, ty, eid in zip(rows["ts"], rows["event_type"],
-                                       rows["event_id"]):
-                    t_us = int(pd.Timestamp(ts).value // 1000)
-                    if t_us >= wm_us:  # below-watermark arrivals are late
-                        buf.append((t_us, str(ty), int(eid)))
-        buf.sort(key=lambda r: (r[0], r[2]))
+            return []
         # advance the greedy chain over the FINALIZED prefix, in event-
         # time order — identical to the batch funnel restricted to
         # events below the final watermark
+        n_final = _n_final(buf, wm_us)
         changed = False
-        pending = []
-        for t_us, ty, eid in buf:
-            if t_us >= wm_us:
-                pending.append((t_us, ty, eid))
-                continue
+        for t_us, ty, _ in buf[:n_final]:
             for i in range(k):
                 if chain[i] == _UNSET:
                     if ty == steps[i] and (i == 0 or (chain[i - 1] != _UNSET
@@ -488,15 +388,11 @@ def _funnel_stream_fn_factory(steps: list[str], within_s: int,
                         chain[i] = t_us
                         changed = True
                     break  # only the next unset step can advance
+        pending = buf[n_final:]
         if chain[0] == _UNSET and not pending:
             state.remove()
         else:
-            state.update((
-                chain,
-                [r[0] for r in pending],
-                [r[1] for r in pending],
-                [r[2] for r in pending],
-            ))
+            _write(state, pending, chain)
             if pending:
                 state.setTimeoutTimestamp(pending[0][0] // 1000 + 1)
             elif state_ttl_s is not None:
@@ -505,19 +401,18 @@ def _funnel_stream_fn_factory(steps: list[str], within_s: int,
                 # event time instead of living for the query lifetime
                 state.setTimeoutTimestamp(wm_us // 1000
                                           + state_ttl_s * 1000)
-        if changed and chain[0] != _UNSET:
-            level, t_complete = 0, chain[0]
-            for i in range(k):
-                if chain[i] == _UNSET or chain[i] - chain[0] > horizon_us:
-                    break
-                level, t_complete = i + 1, chain[i]
-            yield pd.DataFrame(
-                [{"user_id": user, "funnel_level": level,
-                  "t_start": pd.Timestamp(chain[0], unit="us"),
-                  "t_complete": pd.Timestamp(t_complete, unit="us")}]
-            )
+        if not changed:
+            return []
+        level, t_complete = 0, chain[0]
+        for i in range(k):
+            if chain[i] == _UNSET or chain[i] - chain[0] > horizon_us:
+                break
+            level, t_complete = i + 1, chain[i]
+        return [{"user_id": user, "funnel_level": level,
+                 "t_start": pd.Timestamp(chain[0], unit="us"),
+                 "t_complete": pd.Timestamp(t_complete, unit="us")}]
 
-    return _fn
+    return step
 
 
 def funnel_stream(events: DataFrame, steps: list[str], within_s: int,
@@ -541,97 +436,188 @@ def funnel_stream(events: DataFrame, steps: list[str], within_s: int,
     chain-RESTART semantics can pass ``state_ttl_s`` to reclaim state
     for keys inactive (no pending events) for that much event time —
     a later event for an expired key starts a fresh chain at step 0,
-    exactly the expiry-timer design of pattern_match_stream. Late
+    the same expiry-timer design as sequence_match_stream. Late
     events drop with the same semantics as the windowed aggregations."""
-    return (
-        events.select("user_id", "ts", "event_type", "event_id")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_stream_fn_factory(list(steps), within_s, state_ttl_s),
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    steps = list(steps)
+    return _per_user_stream(events, watermark,
+                            _funnel_step(steps, within_s, state_ttl_s),
+                            ([_UNSET] * len(steps),), FUNNEL_OUTPUT_SCHEMA,
+                            FUNNEL_STATE_SCHEMA, output_mode="update")
 
 
-try:  # Spark 4 arbitrary-state v2 API (transformWithStateInPandas)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+KLEENE_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType(), False),
+        T.StructField("t_first", T.TimestampType(), False),
+        T.StructField("t_last", T.TimestampType(), False),
+        T.StructField("n_mid", T.LongType(), False),
+        T.StructField("first_id", T.LongType(), False),
+    ]
+)
+# pending buffer + an O(1) run-length automaton: the previous finalized
+# event (adjacency/A-candidate) and the current mid-run accumulator.
+# -1 sentinels stand in for "absent" (state columns can't be scalar
+# NULLs across the Arrow boundary without object-dtype churn).
+KLEENE_STATE_SCHEMA = _buffer_state_schema(
+    T.StructField("prev_ts_us", T.LongType(), True),
+    T.StructField("prev_type", T.StringType(), True),
+    *(T.StructField(name, T.LongType(), True)
+      for name in ("prev_id", "a_ok", "a_ts_us", "a_id", "n_mid",
+                   "last_mid_ts_us")))
 
-    class BestScoreProcessor(StatefulProcessor):
-        """``track_best`` re-expressed on the Spark 4 state-v2 API
-        (transformWithStateInPandas + ValueState): same
-        emit-on-improvement contract, equivalence-tested against the
-        applyInPandasWithState implementation
-        (t:test_transform_with_state_matches_apply_in_pandas). The v2
-        API is the forward path — typed state handles (value/list/map),
-        timers, and TTL live on the same RocksDB store."""
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "best", "best_score double, n_improvements long, n_seen long"
-            )
+def _kleene_step(first, mid, last, max_gap_s: int) -> _StepFn:
+    from watermark_detector_spark.operators.cep import normalize_steps
 
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (domain,) = key
-            if self._state.exists():
-                best, n_impr, n_seen = self._state.get()
+    firsts, mids, lasts = (frozenset(s)
+                           for s in normalize_steps([first, mid, last]))
+    gap_us = max_gap_s * _US
+
+    def step(user, buf, extra, wm_us, state):
+        prev_ts, prev_ty, prev_id, a_ok, a_ts, a_id, n_mid, last_mid = extra
+        n_final = _n_final(buf, wm_us)
+        out = []
+        # advance the automaton over the newly FINALIZED prefix — the
+        # exact incremental form of the batch RLE (operators/cep.
+        # kleene_match): a mid event extends the run iff its immediate
+        # predecessor was a gap-respecting mid, else starts a fresh run
+        # whose A-candidate is that predecessor; a non-mid event closes
+        # the run, emitting iff it is a gap-respecting ``last`` and the
+        # run opened with a gap-respecting ``first``.
+        for t_us, ty, eid in buf[:n_final]:
+            if ty in mids:
+                if n_mid > 0 and t_us <= last_mid + gap_us:
+                    n_mid += 1
+                else:
+                    a_ok = int(prev_ts >= 0 and prev_ty in firsts
+                               and t_us <= prev_ts + gap_us)
+                    a_ts, a_id, n_mid = prev_ts, prev_id, 1
+                last_mid = t_us
             else:
-                best, n_impr, n_seen = float("-inf"), 0, 0
-            improved = False
-            for pdf in rows:
-                if len(pdf) == 0:
+                if (n_mid > 0 and a_ok and ty in lasts
+                        and t_us <= last_mid + gap_us):
+                    out.append({"user_id": user,
+                                "t_first": pd.Timestamp(a_ts, unit="us"),
+                                "t_last": pd.Timestamp(t_us, unit="us"),
+                                "n_mid": n_mid,
+                                "first_id": a_id})
+                n_mid = 0
+            prev_ts, prev_ty, prev_id = t_us, ty, eid
+        # finalized events are folded into the automaton, never kept.
+        # With nothing pending, the last finalized event can still be
+        # the A (or the run can still extend/close): both require a
+        # future event within gap of prev_ts, and future events have
+        # ts >= wm — expire once the watermark passes prev_ts + gap.
+        pending = buf[n_final:]
+        fire_us = (pending[0][0] if pending
+                   else prev_ts + gap_us if prev_ts >= 0 else None)
+        _keep_until(state, pending, (prev_ts, prev_ty, prev_id, a_ok, a_ts,
+                                     a_id, n_mid, last_mid), wm_us, fire_us)
+        return out
+
+    return step
+
+
+def kleene_match_stream(events: DataFrame, first, mid, last,
+                        max_gap_s: int,
+                        watermark: str = "30 minutes") -> DataFrame:
+    """STREAMING ``PATTERN (A B+ C)`` with strict contiguity and
+    greedy-maximal quantification — the event-time twin of
+    operators/cep.kleene_match. Events are buffered above the
+    watermark and fed to an O(1)-state run-length automaton in
+    finalized event-time order, so out-of-order arrival cannot corrupt
+    the run structure; a match emits in the micro-batch where its C
+    event drops below the watermark. Unlike the k-step matcher the
+    automaton never retains finalized events — state is the pending
+    buffer plus eight scalars (previous event + run accumulator),
+    regardless of how long a B+ run grows, and expires via event-time
+    timer once the watermark passes last_event + max_gap. Emission
+    contract (what the driver oracle replays): exactly the batch
+    ``kleene_match`` over the events strictly below the final
+    watermark."""
+    return _per_user_stream(events, watermark,
+                            _kleene_step(first, mid, last, max_gap_s),
+                            (-1, "", -1, 0, -1, -1, 0, -1),
+                            KLEENE_OUTPUT_SCHEMA, KLEENE_STATE_SCHEMA)
+
+
+ABSENCE_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType(), False),
+        T.StructField("a_ts", T.TimestampType(), False),
+        T.StructField("a_id", T.LongType(), False),
+    ]
+)
+ABSENCE_STATE_SCHEMA = _buffer_state_schema()
+
+
+def _absence_step(first_type: str, second_type: str, within_s: int) -> _StepFn:
+    within_us = within_s * _US
+
+    def step(user, buf, extra, wm_us, state):
+        # the buffer holds the undecided A's and the B's that can still
+        # suppress an out-of-order A (with first_type == second_type
+        # every event is an A).
+        # Suppression: an A with ANY B in (a, a+within] will never
+        # alert. Re-checking against the full retained B set is exact:
+        # B's pruned below the watermark were already applied in their
+        # arrival batch, and no future A can pair with them (a future
+        # A has ts >= wm > pruned b, so b is not after it). A late B
+        # was dropped on arrival, so it cannot retro-suppress.
+        b_ts = [t for t, ty, _ in buf if ty == second_type != first_type]
+        out, keep = [], []
+        for t, ty, eid in buf:
+            if ty == first_type:
+                if any(t < b <= t + within_us for b in b_ts):
                     continue
-                n_seen += len(pdf)
-                batch_max = float(pdf["score"].max())
-                if batch_max > best:
-                    best, n_impr, improved = batch_max, n_impr + 1, True
-            self._state.update((best, n_impr, n_seen))
-            if improved:
-                yield pd.DataFrame(
-                    [{"domain": domain, "best_score": best,
-                      "n_improvements": n_impr, "n_seen": n_seen}]
-                )
+                # absence is PROVEN once the watermark passes a + within:
+                # no suppressing B can arrive anymore
+                if t + within_us < wm_us:
+                    out.append({"user_id": user,
+                                "a_ts": pd.Timestamp(t, unit="us"),
+                                "a_id": eid})
+                else:
+                    keep.append((t, ty, eid))
+            elif ty == second_type and t >= wm_us:
+                # a B below the watermark can never suppress a future A
+                keep.append((t, ty, eid))
+        # fire when the earliest pending decision finalizes; with only
+        # B's left, when the watermark sweeps past them (state then
+        # collapses — bounded state for inactive keys)
+        fire_us = next((t + within_us for t, ty, _ in keep
+                        if ty == first_type),
+                       keep[-1][0] if keep else None)
+        _keep_until(state, keep, (), wm_us, fire_us)
+        return out
 
-        def close(self) -> None:
-            pass
-
-    # the state-v2 wire protocol between JVM and the python driver
-    # worker is protobuf-based; without google.protobuf the query
-    # crashes at init, so gate on BOTH imports
-    import google.protobuf  # noqa: F401
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - pyspark < 4 or no protobuf
-    HAS_TRANSFORM_WITH_STATE = False
+    return step
 
 
-def track_best_v2(kept: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """``track_best`` on transformWithStateInPandas (state v2). Requires
-    the RocksDB state store provider (session.engine_conf sets it) and
-    the protobuf package (the state-v2 JVM↔python protocol); raises a
-    clear error where either is missing instead of crashing the query."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithStateInPandas unavailable: requires pyspark >= 4.0 "
-            "AND the google.protobuf package (state-v2 wire protocol). "
-            "Use streaming.state.track_best (applyInPandasWithState) instead."
-        )
-    return (
-        kept.withWatermark("warc_ts", watermark)
-        .groupBy("domain")
-        .transformWithStateInPandas(
-            statefulProcessor=BestScoreProcessor(),
-            outputStructType=BEST_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
+def absence_alert_stream(events: DataFrame, first_type: str,
+                         second_type: str, within_s: int,
+                         watermark: str = "30 minutes") -> DataFrame:
+    """Streaming CEP NOT-pattern (the event-time twin of
+    operators/cep.absence_match; Flink CEP ``notFollowedBy`` with a
+    time bound): per key, ALERT on every ``first_type`` event that is
+    NOT followed by a ``second_type`` event within ``within_s``
+    seconds — the timeout-alert primitive (order never shipped, error
+    never recovered).
+
+    Absence is only decidable once no suppressing event can still
+    arrive, i.e. once the event-time watermark passes ``a + within``;
+    pending A's buffer in state until then, B's buffer while they can
+    still suppress a future out-of-order A (ts >= watermark), and an
+    event-time timeout finalizes silent keys — state is bounded by
+    horizon x per-key rate on both sides. Late events (below the
+    watermark on arrival) are dropped, so a late B does not
+    retro-suppress — identical late-data semantics to the windowed
+    aggregations. Emission contract (what the q103 oracle replays):
+    exactly the A events with no B in ``(a_ts, a_ts + within]`` whose
+    deadline ``a_ts + within`` lies strictly below the final watermark
+    (max event time, ms floor, minus the delay)."""
+    return _per_user_stream(events, watermark,
+                            _absence_step(first_type, second_type, within_s),
+                            (), ABSENCE_OUTPUT_SCHEMA, ABSENCE_STATE_SCHEMA)
 
 
 _GAP_UNIT_S = {
@@ -724,10 +710,9 @@ def _neardup_fn_factory(state_ttl_s: int | None = None):
         # cannot advance past a custom state op that emits nothing).
         rows = []
         for pdf in pdf_iter:
-            for ts, did in zip(pdf["ts"], pdf["doc_id"]):
-                t_us = int(pd.Timestamp(ts).value // 1000)
+            for t_us, did in zip(_micros(pdf["ts"]), pdf["doc_id"]):
                 if t_us >= wm_us:   # below-watermark arrivals: late
-                    rows.append((t_us, int(did)))
+                    rows.append((int(t_us), int(did)))
         rows.sort()
         out = []
         for t_us, did in rows:
@@ -882,272 +867,4 @@ def near_dup_gate_stream(docs: DataFrame, n_bands: int = 4, n: int = 3,
         .groupBy("doc_id", "ts")
         .agg(F.bool_and("band_first").alias("keep"),
              F.count(F.lit(1)).alias("n_bands"))
-    )
-
-
-KLEENE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("t_first", T.TimestampType(), False),
-        T.StructField("t_last", T.TimestampType(), False),
-        T.StructField("n_mid", T.LongType(), False),
-        T.StructField("first_id", T.LongType(), False),
-    ]
-)
-# pending buffer + an O(1) run-length automaton: the previous finalized
-# event (adjacency/A-candidate) and the current mid-run accumulator.
-# -1 sentinels stand in for "absent" (state columns can't be scalar
-# NULLs across the Arrow boundary without object-dtype churn).
-KLEENE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buf_ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("buf_types", T.ArrayType(T.StringType()), True),
-        T.StructField("buf_ids", T.ArrayType(T.LongType()), True),
-        T.StructField("prev_ts_us", T.LongType(), True),
-        T.StructField("prev_type", T.StringType(), True),
-        T.StructField("prev_id", T.LongType(), True),
-        T.StructField("a_ok", T.LongType(), True),
-        T.StructField("a_ts_us", T.LongType(), True),
-        T.StructField("a_id", T.LongType(), True),
-        T.StructField("n_mid", T.LongType(), True),
-        T.StructField("last_mid_ts_us", T.LongType(), True),
-    ]
-)
-
-
-def _kleene_fn_factory(first, mid, last, max_gap_s: int):
-    from watermark_detector_spark.operators.cep import normalize_steps
-
-    firsts, mids, lasts = (frozenset(s)
-                           for s in normalize_steps([first, mid, last]))
-    gap_us = max_gap_s * _US
-
-    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            (ts_l, ty_l, id_l, prev_ts, prev_ty, prev_id,
-             a_ok, a_ts, a_id, n_mid, last_mid) = state.get
-            buf = [(int(t), str(y), int(i))
-                   for t, y, i in zip(ts_l, ty_l, id_l)]
-            prev_ts, prev_id = int(prev_ts), int(prev_id)
-            a_ok, a_ts, a_id = int(a_ok), int(a_ts), int(a_id)
-            n_mid, last_mid = int(n_mid), int(last_mid)
-        else:
-            buf = []
-            prev_ts, prev_ty, prev_id = -1, "", -1
-            a_ok, a_ts, a_id, n_mid, last_mid = 0, -1, -1, 0, -1
-        if not state.hasTimedOut:
-            chunks = [p for p in pdf_iter if len(p)]
-            if chunks:
-                rows = pd.concat(chunks, ignore_index=True)
-                for ts, ty, eid in zip(rows["ts"], rows["event_type"],
-                                       rows["event_id"]):
-                    t_us = int(pd.Timestamp(ts).value // 1000)
-                    if t_us < wm_us:
-                        continue  # late by watermark: dropped
-                    buf.append((t_us, str(ty), int(eid)))
-        buf.sort(key=lambda r: (r[0], r[2]))
-        out = []
-        pending = []
-        # advance the automaton over the newly FINALIZED prefix — the
-        # exact incremental form of the batch RLE (operators/cep.
-        # kleene_match): a mid event extends the run iff its immediate
-        # predecessor was a gap-respecting mid, else starts a fresh run
-        # whose A-candidate is that predecessor; a non-mid event closes
-        # the run, emitting iff it is a gap-respecting ``last`` and the
-        # run opened with a gap-respecting ``first``.
-        for t_us, ty, eid in buf:
-            if t_us >= wm_us:
-                pending.append((t_us, ty, eid))
-                continue
-            if ty in mids:
-                if n_mid > 0 and t_us <= last_mid + gap_us:
-                    n_mid += 1
-                else:
-                    a_ok = int(prev_ts >= 0 and prev_ty in firsts
-                               and t_us <= prev_ts + gap_us)
-                    a_ts, a_id, n_mid = prev_ts, prev_id, 1
-                last_mid = t_us
-            else:
-                if (n_mid > 0 and a_ok and ty in lasts
-                        and t_us <= last_mid + gap_us):
-                    out.append({"user_id": user,
-                                "t_first": pd.Timestamp(a_ts, unit="us"),
-                                "t_last": pd.Timestamp(t_us, unit="us"),
-                                "n_mid": n_mid,
-                                "first_id": a_id})
-                n_mid = 0
-            prev_ts, prev_ty, prev_id = t_us, ty, eid
-        if pending:
-            state.update((
-                [r[0] for r in pending], [r[1] for r in pending],
-                [r[2] for r in pending], prev_ts, prev_ty, prev_id,
-                a_ok, a_ts, a_id, n_mid, last_mid,
-            ))
-            state.setTimeoutTimestamp(pending[0][0] // 1000 + 1)
-        elif prev_ts >= 0 and wm_us <= prev_ts + gap_us:
-            # no pending work but the last finalized event can still be
-            # the A (or the run can still extend/close): both require a
-            # future event within gap of prev_ts, and future events have
-            # ts >= wm — expire once the watermark passes prev_ts + gap
-            # (same bounded-state contract as sequence_match_stream).
-            state.update(([], [], [], prev_ts, prev_ty, prev_id,
-                          a_ok, a_ts, a_id, n_mid, last_mid))
-            state.setTimeoutTimestamp((prev_ts + gap_us) // 1000 + 1)
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out)
-
-    return _fn
-
-
-def kleene_match_stream(events: DataFrame, first, mid, last,
-                        max_gap_s: int,
-                        watermark: str = "30 minutes") -> DataFrame:
-    """STREAMING ``PATTERN (A B+ C)`` with strict contiguity and
-    greedy-maximal quantification — the event-time twin of
-    operators/cep.kleene_match. Events are buffered above the
-    watermark and fed to an O(1)-state run-length automaton in
-    finalized event-time order, so out-of-order arrival cannot corrupt
-    the run structure; a match emits in the micro-batch where its C
-    event drops below the watermark. Unlike the k-step matcher the
-    automaton never retains finalized events — state is the pending
-    buffer plus eleven scalars (previous event + run accumulator),
-    regardless of how long a B+ run grows, and expires via event-time
-    timer once the watermark passes last_event + max_gap. Emission
-    contract (what the driver oracle replays): exactly the batch
-    ``kleene_match`` over the events strictly below the final
-    watermark."""
-    return (
-        events.select("user_id", "ts", "event_type", "event_id")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _kleene_fn_factory(first, mid, last, max_gap_s),
-            outputStructType=KLEENE_OUTPUT_SCHEMA,
-            stateStructType=KLEENE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-ABSENCE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("a_ts", T.TimestampType(), False),
-        T.StructField("a_id", T.LongType(), False),
-    ]
-)
-ABSENCE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("a_ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("a_ids", T.ArrayType(T.LongType()), True),
-        T.StructField("b_ts_us", T.ArrayType(T.LongType()), True),
-    ]
-)
-
-
-def _absence_fn_factory(first_type: str, second_type: str, within_s: int):
-    within_us = within_s * _US
-
-    def _fn(key: tuple, pdf_iter: Iterator[pd.DataFrame],
-            state: GroupState) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            a_ts_l, a_id_l, b_ts_l = state.get
-            a_buf = [(int(t), int(i)) for t, i in zip(a_ts_l, a_id_l)]
-            b_buf = [int(b) for b in b_ts_l]
-        else:
-            a_buf, b_buf = [], []
-        if not state.hasTimedOut:
-            chunks = [p for p in pdf_iter if len(p)]
-            if chunks:
-                rows = pd.concat(chunks, ignore_index=True)
-                for ts, ty, eid in zip(rows["ts"], rows["event_type"],
-                                       rows["event_id"]):
-                    t_us = int(pd.Timestamp(ts).value // 1000)
-                    if t_us < wm_us:
-                        continue  # late by watermark: dropped — a late
-                        # B therefore cannot retro-suppress (same
-                        # late-data contract as every event-time op)
-                    if ty == first_type:
-                        a_buf.append((t_us, eid))
-                    elif ty == second_type:
-                        b_buf.append(t_us)
-        # suppression: an A with ANY B in (a, a+within] will never
-        # alert. Re-checking against the full retained B set is exact:
-        # B's pruned below the watermark were already applied in their
-        # arrival batch, and no future A can pair with them (a future
-        # A has ts >= wm > pruned b, so b is not after it).
-        a_buf = [(t, i) for t, i in a_buf
-                 if not any(t < b <= t + within_us for b in b_buf)]
-        a_buf.sort()
-        # absence is PROVEN once the watermark passes a + within: no
-        # suppressing B can arrive anymore
-        out = [(t, i) for t, i in a_buf if t + within_us < wm_us]
-        a_keep = [(t, i) for t, i in a_buf if t + within_us >= wm_us]
-        # a B below the watermark can never suppress a future A (above)
-        b_keep = sorted(b for b in b_buf if b >= wm_us)
-        if not a_keep and not b_keep:
-            state.remove()
-        else:
-            state.update((
-                [t for t, _ in a_keep],
-                [i for _, i in a_keep],
-                b_keep,
-            ))
-            # fire when the earliest pending decision finalizes; with
-            # only B's left, when the watermark sweeps past them (state
-            # then collapses — bounded state for inactive keys)
-            if a_keep:
-                fire_us = a_keep[0][0] + within_us
-            else:
-                fire_us = b_keep[-1]
-            state.setTimeoutTimestamp(fire_us // 1000 + 1)
-        if out:
-            yield pd.DataFrame(
-                {"user_id": user,
-                 "a_ts": [pd.Timestamp(t, unit="us") for t, _ in out],
-                 "a_id": [i for _, i in out]})
-
-    return _fn
-
-
-def absence_alert_stream(events: DataFrame, first_type: str,
-                         second_type: str, within_s: int,
-                         watermark: str = "30 minutes") -> DataFrame:
-    """Streaming CEP NOT-pattern (the event-time twin of
-    operators/cep.absence_match; Flink CEP ``notFollowedBy`` with a
-    time bound): per key, ALERT on every ``first_type`` event that is
-    NOT followed by a ``second_type`` event within ``within_s``
-    seconds — the timeout-alert primitive (order never shipped, error
-    never recovered).
-
-    Absence is only decidable once no suppressing event can still
-    arrive, i.e. once the event-time watermark passes ``a + within``;
-    pending A's buffer in state until then, B's buffer while they can
-    still suppress a future out-of-order A (ts >= watermark), and an
-    event-time timeout finalizes silent keys — state is bounded by
-    horizon x per-key rate on both sides. Late events (below the
-    watermark on arrival) are dropped, so a late B does not
-    retro-suppress — identical late-data semantics to the windowed
-    aggregations. Emission contract (what the q103 oracle replays):
-    exactly the A events with no B in ``(a_ts, a_ts + within]`` whose
-    deadline ``a_ts + within`` lies strictly below the final watermark
-    (max event time, ms floor, minus the delay)."""
-    return (
-        events.select("user_id", "ts", "event_type", "event_id")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _absence_fn_factory(first_type, second_type, within_s),
-            outputStructType=ABSENCE_OUTPUT_SCHEMA,
-            stateStructType=ABSENCE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
