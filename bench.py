@@ -280,7 +280,7 @@ def main() -> None:
 
     # --- detector scan microbench: flat-in-n_sigs evidence ---------------
     # (pure-python, driver-side: isolates the per-doc scan cost of the
-    # two strategies; the >=128-sig token scan is what keeps a 5k-entry
+    # two strategies; the >=80-sig token scan is what keeps a 5k-entry
     # signature table from dominating the 100 TB hot path)
     from watermark_detector_spark.fixtures import _domains, gen_doc
     from watermark_detector_spark.functions.core import (

@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 from watermark_detector_spark.functions.domains import registrable_domain
 from watermark_detector_spark.functions.extract import extract_text_udf
 from watermark_detector_spark.plans.flagship import (
-    detected_pages,
+    detection_rows_fused,
     flagship_batch,
-    kept_detections,
+    kept_detections_fused,
 )
 from watermark_detector_spark.sources.pages import read_pages_batch
 
@@ -51,11 +51,13 @@ def test_detections_match_golden(spark, fixture_cfg, fixture_paths):
     """Every detection (including below-threshold ones) matches the
     splice-log golden exactly: sig_id, category, begin, end, score."""
     pages = read_pages_batch(spark, fixture_paths["pages"])
-    det = detected_pages(pages, fixture_cfg.signatures)
-    exploded = det.select("url", F.explode("detections").alias("d")).select(
-        "url", "d.sig_id", "d.category", "d.begin", "d.end", "d.score"
+    got = (
+        detection_rows_fused(pages, fixture_cfg.signatures)
+        .select("url", "sig_id", "category", "begin", "end", "score")
+        .toPandas()
+        .sort_values(["url", "begin", "sig_id"])
+        .reset_index(drop=True)
     )
-    got = exploded.toPandas().sort_values(["url", "begin", "sig_id"]).reset_index(drop=True)
     want = (
         spark.read.parquet(fixture_paths["golden_detections"])
         .select("url", "sig_id", "category", "begin", "end", "score")
@@ -74,7 +76,7 @@ def test_detections_match_golden(spark, fixture_cfg, fixture_paths):
 
 def test_threshold_filter_drops_below(spark, fixture_cfg, fixture_paths):
     pages = read_pages_batch(spark, fixture_paths["pages"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
+    kept = kept_detections_fused(pages, fixture_cfg.signatures)
     n_kept = kept.count()
     golden = spark.read.parquet(fixture_paths["golden_detections"])
     n_golden_kept = golden.where(~F.col("below_threshold")).count()

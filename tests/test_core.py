@@ -186,7 +186,7 @@ def test_token_scan_equals_probe_scan():
     """The two pre-scan strategies (str.find probes vs single-pass
     token-dict scan) must produce identical detections on every fixture
     doc — the equivalence that lets the detector switch to the flat-in-
-    n_sigs scanner for above-threshold (128+) signature tables."""
+    n_sigs scanner for above-threshold (80+) signature tables."""
     from watermark_detector_spark.functions.core import CompiledDetector
 
     det_probe = CompiledDetector(SIGS, token_scan_threshold=10**9)
@@ -204,7 +204,7 @@ def test_token_scan_equals_probe_scan():
 
 def test_token_scan_default_kicks_in_at_large_sig_count():
     """build_detector auto-selects the flat scanner for big tables and
-    stays golden-exact there (300 sigs >= threshold 128)."""
+    stays golden-exact there (300 sigs >= threshold 80)."""
     big = make_signatures(300)
     det = build_detector(big)
     assert det.use_token_scan

@@ -74,41 +74,6 @@ def test_whole_stage_codegen_covers_relational_ops(spark):
     assert "*(" in plan
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
-    """Co-bucketed tables join with ZERO Exchange in the plan — the
-    pay-once partitioning that makes repeated big-big joins viable at
-    100 TB (operators/bucketing.py)."""
-    from pyspark.sql import functions as F
-
-    from watermark_detector_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    root = tmp_path_factory.mktemp("buckets")
-    a = spark.range(0, 20000).select(
-        (F.col("id") % 997).alias("k"), F.col("id").alias("va"))
-    b = spark.range(0, 20000).select(
-        (F.col("id") % 997).alias("k"), (F.col("id") * 2).alias("vb"))
-    write_bucketed(a, "wmd_bkt_a", str(root / "a"), "k", n_buckets=8)
-    write_bucketed(b, "wmd_bkt_b", str(root / "b"), "k", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "wmd_bkt_a", "wmd_bkt_b", "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # and it's not just a pretty plan — the join is correct
-        n = joined.count()
-        want = a.join(b, "k").count()
-        assert n == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS wmd_bkt_a")
-        spark.sql("DROP TABLE IF EXISTS wmd_bkt_b")
-
-
 def test_similarity_dedup_plans_never_cartesian(spark):
     """Scale-path plan audit: the LSH candidate join shuffles on
     (table, bucket); near_dup_pairs computes intersections only via

@@ -6,7 +6,6 @@ golden fixtures rely on implicitly."""
 
 import re
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -76,11 +75,7 @@ def test_chunker_covers_every_token_property(words, chunk_tokens, step):
     """ChunkText(chunk, step): with step <= chunk_tokens every token of
     the document appears in at least one chunk, chunk sizes are within
     bounds, and indices are dense from 0."""
-    from watermark_detector_spark.functions import text as text_mod
-
-    if not text_mod.HAS_UDTF:  # pragma: no cover - pyspark without UDTFs
-        pytest.skip("pyspark build lacks Python UDTF support")
-    ChunkText = text_mod.ChunkText
+    from watermark_detector_spark.functions.text import ChunkText
 
     if step > chunk_tokens:  # gaps allowed by contract; skip coverage check
         step = chunk_tokens

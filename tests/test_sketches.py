@@ -1,13 +1,11 @@
 """Portable HyperLogLog (functions/sketches.py): md5-based registers,
-element-wise-max merge, linear-counting small-range correction."""
+linear-counting small-range correction."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from watermark_detector_spark.functions.sketches import (
     hll_distinct,
-    hll_estimate,
-    hll_merge,
     hll_registers,
 )
 
@@ -22,19 +20,6 @@ def test_estimate_within_sketch_error(spark, n):
     # rsd for m=256 is 1.04/sqrt(256) ~ 6.5%; allow 3 sigma
     est = hll_distinct(_vals(spark, n), ["g"], F.col("v"), p=8).first()
     assert est["est_distinct"] == pytest.approx(n, rel=0.2)
-
-
-def test_registers_merge_by_max(spark):
-    a, b = _vals(spark, 500), _vals(spark, 500, offset=250)  # overlap
-    both = a.unionByName(b)
-    merged = hll_merge(hll_registers(a, ["g"], F.col("v")),
-                       hll_registers(b, ["g"], F.col("v")))
-    direct = hll_registers(both, ["g"], F.col("v"))
-    as_set = lambda df: {(r["bucket"], r["reg"]) for r in df.collect()}
-    assert as_set(merged) == as_set(direct)
-    e1 = hll_estimate(merged, ["g"]).first()["est_distinct"]
-    e2 = hll_distinct(both, ["g"], F.col("v")).first()["est_distinct"]
-    assert e1 == e2  # same registers -> bit-identical estimate
 
 
 def test_small_range_uses_linear_counting(spark):

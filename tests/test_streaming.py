@@ -17,7 +17,7 @@ from watermark_detector_spark.operators.joins import (
     join_signatures_broadcast,
     join_signatures_stream_stream,
 )
-from watermark_detector_spark.plans.flagship import detected_pages, kept_detections
+from watermark_detector_spark.plans.flagship import kept_detections_fused
 from watermark_detector_spark.sources.pages import read_pages_stream
 from watermark_detector_spark.streaming.pipeline import run_flagship_stream
 from watermark_detector_spark.streaming.sink import ExactlyOnceParquetSink
@@ -121,7 +121,7 @@ def test_track_best_stateful(spark, fixture_cfg, fixture_paths, tmp_path_factory
     batch max score per domain (checkpoint-on-improve analog)."""
     root = tmp_path_factory.mktemp("state")
     pages = read_pages_stream(spark, fixture_paths["pages_stream"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
+    kept = kept_detections_fused(pages, fixture_cfg.signatures)
     kept = kept.where(~F.col("url").contains("/flush/"))  # drop sentinel
     q = (
         track_best(kept)
@@ -141,7 +141,7 @@ def test_track_best_stateful(spark, fixture_cfg, fixture_paths, tmp_path_factory
     )
     pages_b = spark.read.parquet(fixture_paths["pages"])
     want = (
-        kept_detections(detected_pages(pages_b, fixture_cfg.signatures))
+        kept_detections_fused(pages_b, fixture_cfg.signatures)
         .groupBy("domain").agg(F.max("score").alias("best_score"))
         .toPandas().sort_values("domain").reset_index(drop=True)
     )
@@ -153,7 +153,7 @@ def test_session_stats_stateful(spark, fixture_cfg, fixture_paths, tmp_path_fact
     """Custom sessionization emits coherent sessions (start<=end, n>0)."""
     root = tmp_path_factory.mktemp("sess")
     pages = read_pages_stream(spark, fixture_paths["pages_stream"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
+    kept = kept_detections_fused(pages, fixture_cfg.signatures)
     q = (
         session_stats(kept, gap="5 minutes")
         .writeStream.outputMode("append")
@@ -172,7 +172,7 @@ def test_session_stats_stateful(spark, fixture_cfg, fixture_paths, tmp_path_fact
 
 def test_stream_static_broadcast_join(spark, fixture_cfg, fixture_paths):
     pages = spark.read.parquet(fixture_paths["pages"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
+    kept = kept_detections_fused(pages, fixture_cfg.signatures)
     sigs = spark.read.parquet(fixture_paths["signatures"])
     joined = join_signatures_broadcast(kept, sigs)
     assert joined.where(F.col("pattern").isNull()).count() == 0
@@ -186,7 +186,7 @@ def test_stream_stream_join_validity(spark, fixture_cfg, fixture_paths,
     window; a page before its signature's valid_from does not match."""
     root = tmp_path_factory.mktemp("ssj")
     pages = read_pages_stream(spark, fixture_paths["pages_stream"])
-    kept = kept_detections(detected_pages(pages, fixture_cfg.signatures))
+    kept = kept_detections_fused(pages, fixture_cfg.signatures)
     kept = kept.where(~F.col("url").contains("/flush/"))  # drop sentinel
     from watermark_detector_spark.schemas import SIGNATURES_SCHEMA
 
@@ -208,7 +208,7 @@ def test_stream_stream_join_validity(spark, fixture_cfg, fixture_paths,
     assert (pd.to_datetime(got["warc_ts"]) >= pd.to_datetime(got["valid_from"])).all()
     # batch oracle: same join condition in plain SQL
     pages_b = spark.read.parquet(fixture_paths["pages"])
-    kept_b = kept_detections(detected_pages(pages_b, fixture_cfg.signatures))
+    kept_b = kept_detections_fused(pages_b, fixture_cfg.signatures)
     sigs_b = spark.read.parquet(fixture_paths["signatures"]).withColumnRenamed("sig_id", "s_sig_id")
     want_n = kept_b.join(
         sigs_b,

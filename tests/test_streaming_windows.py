@@ -1,5 +1,6 @@
-"""Built-in sliding and session windows under a REAL stream (watermark
-+ availableNow), cross-checked against the batch plan on the same rows.
+"""Built-in sliding windows and salted window aggregation under a REAL
+stream (watermark + availableNow), cross-checked against the batch plan
+on the same rows (streaming session windows: driver queries q43/q50).
 
 The streaming run drops late rows and never emits unfinalized windows;
 the batch oracle reproduces both effects by (a) excluding late rows via
@@ -11,8 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from watermark_detector_spark.fixtures import BASE_TS
-from watermark_detector_spark.operators.windows import session, sliding
-from watermark_detector_spark.plans.flagship import kept_detections_fused
+from watermark_detector_spark.plans.flagship import kept_detections_fused, window_agg
 from watermark_detector_spark.sources.pages import read_pages_stream
 
 
@@ -49,7 +49,7 @@ def test_streaming_sliding_window_matches_batch(spark, fixture_cfg,
     )
     got = _stream_to_memory(
         spark,
-        sliding(stream_kept, "5 minutes", "1 minute", watermark="10 minutes"),
+        window_agg(stream_kept, "5 minutes", "1 minute", watermark="10 minutes"),
         "slide_out", tmp_path,
     )
     # batch oracle on non-late rows, restricted to finalized windows
@@ -57,7 +57,7 @@ def test_streaming_sliding_window_matches_batch(spark, fixture_cfg,
         seconds=fixture_cfg.span_s + 3 * fixture_cfg.watermark_delay_s
     )
     final_wm = flush_ts - pd.Timedelta(seconds=fixture_cfg.watermark_delay_s)
-    want = sliding(batch_kept, "5 minutes", "1 minute").toPandas()
+    want = window_agg(batch_kept, "5 minutes", "1 minute").toPandas()
     want = want[pd.to_datetime(want["window_end"]) <= final_wm]
     got = got[~got["domain"].isna()].sort_values(
         ["domain", "window_start"]).reset_index(drop=True)
@@ -118,22 +118,3 @@ def test_salted_streaming_window_agg_matches_unsalted(
     assert np.allclose(got["sum_value"], want["sum_value"], atol=2e-4)
     # the hot key really is hot (the scenario the salt exists for)
     assert (got["k"] == "hot").sum() > 0
-
-
-def test_streaming_builtin_session_window_runs(spark, fixture_cfg,
-                                               fixture_paths, tmp_path):
-    """F.session_window in streaming mode (requires watermark): emits
-    coherent closed sessions."""
-    stream_kept = kept_detections_fused(
-        read_pages_stream(spark, fixture_paths["pages_stream"]),
-        fixture_cfg.signatures,
-    )
-    got = _stream_to_memory(
-        spark,
-        session(stream_kept, "5 minutes", watermark="10 minutes"),
-        "sess_builtin_out", tmp_path,
-    )
-    assert len(got) > 0
-    assert (pd.to_datetime(got["session_start"])
-            < pd.to_datetime(got["session_end"])).all()
-    assert (got["n_detections"] > 0).all()

@@ -1,11 +1,12 @@
 """Pure-Python core semantics: deterministic hashing, signature model,
 HTML templating/extraction, and detection (match → merge → score).
 
-These are the spec-level functions; Spark wrappers live in
-``extract.py`` / ``detect.py`` and the fixture generator in
-``fixtures.py``. Keeping them pure makes the UDFs trivially testable and
-guarantees partitioning-invariance (the reference is only reproducible
-single-threaded because it never seeds ``random`` — generate_dataset.py:44-67;
+These are the spec-level functions; the flagship calls them from its
+one fused Python pass (``plans.flagship.detection_rows_fused``) and the
+fixture generator from ``fixtures.py``. Keeping them pure makes that
+pass trivially testable and guarantees partitioning-invariance (the
+reference is only reproducible single-threaded because it never seeds
+``random`` — generate_dataset.py:44-67;
 here every pseudo-random choice is ``stable_hash(seed, key, field)``).
 
 Detection semantics mirror the reference dataflow (SURVEY.md §2.2/2.4):

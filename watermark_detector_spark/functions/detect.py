@@ -2,7 +2,8 @@
 
 Replaces the reference's CNN detector head (``DefaultPredictor``,
 train_watermarks.py:312,320): text in, ``array<struct<sig_id, category,
-begin, end, score>>`` out. Matching/merging/scoring semantics live in
+begin, end, score>>`` out (the flagship itself calls ``core.detect_text``
+from its fused pass). Matching/merging/scoring semantics live in
 ``core.detect_text`` (threshold→dilate→contour→bbox re-expressed as
 match→merge-spans→min/max, SURVEY.md §2.2/2.4).
 
@@ -16,7 +17,7 @@ query level, not here (train_watermarks.py:311).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import DETECTIONS_COL_TYPE
@@ -54,25 +55,3 @@ def make_detect_udf(signatures: list[Signature]):
         )
 
     return F.pandas_udf(_detect_batch, DETECTIONS_COL_TYPE)
-
-
-def detections_col(signatures: list[Signature], text_col: str = "text") -> Column:
-    return make_detect_udf(signatures)(F.col(text_col))
-
-
-def explode_detections(df: DataFrame, detections_col_name: str = "detections") -> DataFrame:
-    """detections array → one row per detection (keeps page columns)."""
-    d = F.explode(F.col(detections_col_name)).alias("d")
-    return (
-        df.select("*", d)
-        .drop(detections_col_name)
-        .select(
-            "*",
-            F.col("d.sig_id").alias("sig_id"),
-            F.col("d.category").alias("category"),
-            F.col("d.begin").alias("begin"),
-            F.col("d.end").alias("end"),
-            F.col("d.score").alias("score"),
-        )
-        .drop("d")
-    )

@@ -1,11 +1,13 @@
-"""``extract_text`` — HTML binary → text, as an Arrow-batched pandas UDF.
+"""``extract_series`` — HTML binary → text over an Arrow batch: the
+extract step of the flagship's fused pass; ``extract_text_udf`` wraps it
+as a pandas UDF.
 
 The byte-identical-per-url contract (BASELINE.json input_hint) lives
 here: for any url, the extracted text's UTF-8 bytes must equal the
 pinned golden bytes, at any partitioning and batch size. Analog of the
 reference's image decode (generate_dataset.py:184, train_watermarks.py:319).
 
-The UDF body is vectorized pandas (``Series.str`` regex ops, C-level
+The batch body is vectorized pandas (``Series.str`` regex ops, C-level
 loops) — no per-row Python in the hot path.
 """
 
@@ -14,7 +16,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -86,14 +87,3 @@ def extract_series(html: pd.Series) -> pd.Series:
 @F.pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return extract_series(html)
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text") -> "F.DataFrame":
-    """Attach extracted text and DROP the html payload immediately —
-    column pruning discipline: never carry the (large) binary past this
-    point (SURVEY.md §4 'column pruning')."""
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col))).drop(html_col)
-
-
-def extracted_text_col(html_col: str = "html") -> Column:
-    return extract_text_udf(F.col(html_col))

@@ -18,19 +18,6 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes bigint, "
@@ -48,13 +35,6 @@ def fake_decode(payload: bytes, kind: str) -> np.ndarray:
         raise ValueError("null payload")
     h = hashlib.md5(payload).digest()
     return np.frombuffer(h[:8], dtype=np.uint8).astype(np.float32) / 255.0
-
-
-def real_decode_stub(payload: bytes, kind: str) -> np.ndarray:
-    """The production decode hook. Not implementable in this sandbox."""
-    raise NotImplementedError(
-        "media decode requires cv2/PIL/ffmpeg — not present in this container"
-    )
 
 
 FRAME_SCHEMA = (
@@ -100,48 +80,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
 
     return media.select("media_id", "payload", "duration_ms").mapInPandas(
         _proc, schema=FRAME_SCHEMA
-    )
-
-
-RESIZED_SCHEMA = (
-    "media_id string, width int, height int, payload binary, ok boolean, error string"
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: per-image payload transform with target
-    dimensions recorded in the typed metadata. The pixel op is stubbed
-    (no cv2/PIL here): the fake 'resized' payload is a deterministic
-    digest of (payload, w, h) — clearly marked; swap the inner lambda
-    for cv2.resize on a real cluster. Error capture per row, same
-    contract as extract_features (bad rows never kill the task)."""
-
-    def _proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": mid, "width": width, "height": height,
-                       "payload": None, "ok": False, "error": None}
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    # FAKE resize (no codecs): digest stands in for pixels
-                    row["payload"] = hashlib.blake2b(
-                        payload + f":{width}x{height}".encode(), digest_size=32
-                    ).digest()
-                    row["ok"] = True
-                except Exception as e:
-                    row["error"] = f"{type(e).__name__}: {e}"
-                out.append(row)
-            pdf_out = pd.DataFrame(
-                out, columns=["media_id", "width", "height",
-                              "payload", "ok", "error"])
-            pdf_out["width"] = pdf_out["width"].astype("int32")
-            pdf_out["height"] = pdf_out["height"].astype("int32")
-            yield pdf_out
-
-    return media.select("media_id", "payload").mapInPandas(
-        _proc, schema=RESIZED_SCHEMA
     )
 
 

@@ -1,14 +1,15 @@
 """Embedding similarity search: brute-force cosine (baseline oracle),
-exact distributed block-GEMM all-pairs, and TWO approximate scale paths
-— multi-table sign-LSH buckets and an IVF coarse quantizer.
+exact distributed block-GEMM all-pairs, and the approximate scale paths
+— multi-table sign-LSH candidate buckets and an IVF coarse quantizer
+(optionally product-quantized).
 
 Vectors are ``array<float>`` columns; pairwise arithmetic is either
 built-in (``zip_with`` + ``aggregate``, JVM-side) or a per-group BLAS
 GEMM inside an Arrow batch. At 100 TB the brute-force O(N²) join is
-replaced by ``lsh_bucketed_topk`` (random-hyperplane sign buckets;
-recall 1-(1-(1-θ/π)^b)^L, oracle-checked candidate stage) or
-``ivf_topk`` (deterministic spherical k-means cells, FAISS-IVF shape;
-exact at nprobe == n_cells); brute force stays as the in-bucket scorer
+replaced by ``lsh_candidate_pairs`` (random-hyperplane sign buckets;
+recall 1-(1-(1-θ/π)^b)^L, oracle-checked by q44) or ``ivf_topk`` /
+``ivfpq_topk`` (deterministic spherical k-means cells, FAISS-IVF shape;
+exact at nprobe == n_cells); brute force stays as the in-cell scorer
 and the small-scale correctness oracle.
 """
 
@@ -81,7 +82,8 @@ def cosine_pairs(df: DataFrame, threshold: float = 0.45,
     over B(B+1)/2 independent tasks whose working set is bounded by
     2·rows_per_block vectors — no single node ever holds the corpus.
     For approximate-but-linear candidate generation use
-    ``lsh_bucketed_topk`` / ``minhash_lsh_candidates`` instead."""
+    ``lsh_candidate_pairs`` / ``ivf_topk`` / ``minhash_lsh_candidates``
+    instead."""
     import math
 
     import numpy as np
@@ -137,56 +139,6 @@ def cosine_pairs(df: DataFrame, threshold: float = 0.45,
 
     return exploded.groupBy("_lo", "_hi").applyInPandas(
         _kernel, schema="id_a long, id_b long, cosine double"
-    )
-
-
-def cosine_pairs_broadcast(df: DataFrame, threshold: float = 0.45,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
-                           max_rows: int = 500_000) -> DataFrame:
-    """Broadcast variant: collects the (small!) table once, broadcasts
-    the normalized matrix, and each partition GEMMs its rows against it
-    — zero shuffle. ONLY for genuinely bounded dimension tables; guarded
-    by ``max_rows`` (500k x 64 float64 = 256 MB broadcast) so it can
-    never be pointed at a corpus-sized table by accident. Broadcasts
-    are unpersisted when the returned DataFrame is fully consumed is
-    not knowable — callers doing repeated scans should cache the result
-    and call ``.unpersist()`` on the broadcast handles themselves; for
-    one-shot queries the cost is one bounded blob per executor."""
-    import numpy as np
-    import pandas as pd
-
-    n_rows = df.count()
-    if n_rows > max_rows:
-        raise ValueError(
-            f"cosine_pairs_broadcast: {n_rows} rows > max_rows={max_rows}; "
-            "use cosine_pairs (block-pair GEMM) for corpus-sized tables"
-        )
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b_ids, b_mat = sc.broadcast(ids), sc.broadcast(mat)
-
-    def _block(batches):
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q = q / np.linalg.norm(q, axis=1, keepdims=True)
-            qids = pdf[id_col].to_numpy()
-            cos = q @ all_mat.T  # BLAS GEMM
-            mask = (cos >= threshold - 5e-5) & (qids[:, None] < all_ids[None, :])
-            ia, jb = np.nonzero(mask)
-            c = _round_half_up(cos[ia, jb], 4)
-            keep = c >= threshold
-            yield pd.DataFrame({
-                "id_a": qids[ia[keep]].astype("int64"),
-                "id_b": all_ids[jb[keep]].astype("int64"),
-                "cosine": c[keep],
-            })
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _block, schema="id_a long, id_b long, cosine double"
     )
 
 
@@ -274,36 +226,6 @@ def lsh_candidate_pairs(df: DataFrame, dim: int, n_planes: int = 3,
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
-    )
-
-
-def lsh_bucketed_topk(df: DataFrame, dim: int, k: int = 3, n_planes: int = 3,
-                      n_tables: int = 16, id_col: str = "vec_id",
-                      vec_col: str = "embedding", seed: int = 42) -> DataFrame:
-    """Approximate top-k via multi-table sign-LSH: L independent hash
-    tables of ``n_planes`` hyperplanes each; candidates = union over
-    tables of same-bucket pairs, then scored brute-force once.
-
-    Recall for a pair at angle θ is 1-(1-(1-θ/π)^n_planes)^n_tables.
-    Defaults are tuned for ~0.3-cosine nearest neighbors (recall 0.99
-    measured on the embeddings fixture — t:test_lsh_topk_recall); at
-    larger corpus sizes grow n_planes (smaller buckets) and n_tables
-    together to hold recall while keeping per-bucket work bounded."""
-    cand = lsh_candidate_pairs(df, dim, n_planes, n_tables, id_col, vec_col, seed)
-    vecs = with_norm(df, vec_col)
-    q = vecs.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_vq"),
-                    F.col("_norm").alias("_nq"))
-    c = vecs.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vc"),
-                    F.col("_norm").alias("_nc"))
-    scored = cand.join(q, "query_id").join(c, "neighbor_id").select(
-        "query_id", "neighbor_id",
-        (_dot(F.col("_vq"), F.col("_vc")) / (F.col("_nq") * F.col("_nc"))).alias("_cos"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round(F.col("_cos"), 4).alias("cosine"))
     )
 
 

@@ -85,15 +85,6 @@ def hll_registers(df: DataFrame, group_cols: list[str], value: Column,
             .agg(F.max("rho").alias("reg")))
 
 
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge register tables (same grouping/p): element-wise max."""
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    keys = [c for c in out.columns if c != "reg"]
-    return out.groupBy(*keys).agg(F.max("reg").alias("reg"))
-
-
 def hll_estimate(registers: DataFrame, group_cols: list[str],
                  p: int = 8) -> DataFrame:
     """Cardinality estimate per group from a register table:

@@ -21,14 +21,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens_col(text)).cast("bigint")
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: split on word/number/punct boundaries —
-    a regex approximation of subword tokenizers' pre-tokenization."""
-    return F.size(
-        F.split(F.trim(text), r"(?<=\W)|(?=\W)|(?<=\d)(?=\D)|(?<=\D)(?=\d)")
-    ).cast("bigint")
-
-
 def _count_occurrences(padded: Column, needle: str) -> Column:
     """#occurrences of `needle` via length arithmetic — pure codegen,
     no regex engine in the loop."""
@@ -41,13 +33,6 @@ def _count_occurrences(padded: Column, needle: str) -> Column:
 def stopword_hits(text: Column, word: str = "the") -> Column:
     padded = F.concat(F.lit(" "), text, F.lit(" "))
     return _count_occurrences(padded, f" {word} ")
-
-
-def punct_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[.,;:!?'\"()\[\]]", "")
-    return F.round(
-        (F.length(text) - F.length(stripped)) / F.greatest(F.length(text), F.lit(1)), 4
-    )
 
 
 def quality_score(text: Column) -> Column:
@@ -432,35 +417,28 @@ def lm_quality(docs: DataFrame, ref: DataFrame, vocab_size: int = 4096,
     )
 
 
-try:  # Python UDTF (pyspark >= 3.5): table-valued chunker
-    from pyspark.sql.functions import udtf
+@F.udtf(returnType="chunk_idx int, chunk string, n_tokens int")
+class ChunkText:
+    """Fixed-size token chunking with overlap — the LLM-corpus
+    window operator (context-length packing). One doc row expands
+    to ceil(n_tok / step) chunk rows of ``chunk_tokens`` tokens,
+    consecutive chunks overlapping by chunk_tokens - step. Register
+    with ``spark.udtf.register`` and call via LATERAL; fan-out is
+    oracle-checked (driver query q54)."""
 
-    @udtf(returnType="chunk_idx int, chunk string, n_tokens int")
-    class ChunkText:
-        """Fixed-size token chunking with overlap — the LLM-corpus
-        window operator (context-length packing). One doc row expands
-        to ceil(n_tok / step) chunk rows of ``chunk_tokens`` tokens,
-        consecutive chunks overlapping by chunk_tokens - step. Register
-        with ``spark.udtf.register`` and call via LATERAL; fan-out is
-        oracle-checked (driver query q54)."""
-
-        def eval(self, text: str, chunk_tokens: int, step: int):
-            # reachable straight from SQL (LATERAL wmd_chunk_text(t, 32, 0));
-            # step <= 0 would loop the executor task forever — raise instead
-            if chunk_tokens is None or chunk_tokens < 1:
-                raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
-            if step is None or step < 1:
-                raise ValueError(f"step must be >= 1, got {step}")
-            if text is None:
-                return
-            toks = text.split()
-            i, s = 0, 0
-            while s < len(toks):
-                part = toks[s:s + chunk_tokens]
-                yield (i, " ".join(part), len(part))
-                i += 1
-                s += step
-
-    HAS_UDTF = True
-except ImportError:  # pragma: no cover - pyspark < 3.5
-    HAS_UDTF = False
+    def eval(self, text: str, chunk_tokens: int, step: int):
+        # reachable straight from SQL (LATERAL wmd_chunk_text(t, 32, 0));
+        # step <= 0 would loop the executor task forever — raise instead
+        if chunk_tokens is None or chunk_tokens < 1:
+            raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
+        if step is None or step < 1:
+            raise ValueError(f"step must be >= 1, got {step}")
+        if text is None:
+            return
+        toks = text.split()
+        i, s = 0, 0
+        while s < len(toks):
+            part = toks[s:s + chunk_tokens]
+            yield (i, " ".join(part), len(part))
+            i += 1
+            s += step

@@ -676,15 +676,6 @@ def contaminated_ids_bloom(train: DataFrame, holdout: DataFrame, n: int = 3,
     )
 
 
-def decontaminate(train: DataFrame, holdout: DataFrame, n: int = 3,
-                  window: int = 4, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Drop every training doc flagged by ``contaminated_ids`` (anti-join
-    on the doc key) — the apply-side of decontamination."""
-    flagged = contaminated_ids(train, holdout, n, window, id_col, text_col)
-    return train.join(flagged.select(id_col), id_col, "left_anti")
-
-
 def exact_span_dedup(docs: DataFrame, n: int = 3, line_delim: str = "\n",
                      id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:

@@ -1,55 +1,25 @@
-"""Skew handling: salted two-phase aggregation for head domains.
+"""Skew handling: salted two-phase aggregation and salted joins for hot
+keys.
 
 The page distribution over domains is Zipf-skewed (a handful of head
-domains carry a large share of a Common-Crawl-style corpus). A naive
-``groupBy(domain)`` sends every head-domain row to one reducer — the
-straggler that kills scaling efficiency at 1000 executors.
+domains carry a large share of a Common-Crawl-style corpus), and event
+streams have dominant event types. A naive ``groupBy(key)`` sends every
+hot-key row to one reducer (one state-store partition when streaming) —
+the straggler that kills scaling efficiency at 1000 executors.
 
-Two-phase salted aggregation: phase 1 groups by (domain, salt) where
-salt = hash(url) % k — k-way fan-out of each hot key, combined map-side;
-phase 2 re-aggregates the k partials per domain (tiny input). AQE's
-skew-join splitting handles the join case; this handles the agg case.
-Decomposable aggregates only (count/sum/min/max + count-distinct via
-two-level exact or approx sketch merge).
+Two-phase salted aggregation: phase 1 groups by (key, salt) where
+salt = hash(id) % k — k-way fan-out of each hot key, combined map-side;
+phase 2 re-aggregates the k partials per key (tiny input). AQE's
+skew-join splitting handles the join case; ``salted_join`` is the
+manual fallback when it cannot apply. Decomposable aggregates only
+(count/sum/min/max + count-distinct via two-level exact or approx
+sketch merge).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_domain_stats(kept: DataFrame, k: int = 16,
-                        salt_col: str = "url") -> DataFrame:
-    """Per-domain totals via salted two-phase agg — result identical to
-    the direct groupBy (asserted in tests), plan skew-proof."""
-    salted = kept.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(k)))
-    partial = salted.groupBy("domain", "_salt").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("score").alias("_sum_score"),
-        F.max("score").alias("_max_score"),
-        F.sum(F.when(F.col("category") == "watermark", 1).otherwise(0)).alias("_n_wm"),
-    )
-    return (
-        partial.groupBy("domain")
-        .agg(
-            F.sum("_n").alias("n_detections"),
-            (F.sum("_sum_score") / F.sum("_n")).alias("avg_score"),
-            F.max("_max_score").alias("max_score"),
-            F.sum("_n_wm").alias("n_watermark"),
-        )
-    )
-
-
-def direct_domain_stats(kept: DataFrame) -> DataFrame:
-    """The naive single-shuffle equivalent (for equivalence tests and
-    small inputs)."""
-    return kept.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_detections"),
-        F.avg("score").alias("avg_score"),
-        F.max("score").alias("max_score"),
-        F.sum(F.when(F.col("category") == "watermark", 1).otherwise(0)).alias("n_watermark"),
-    )
 
 
 def salted_windowed_stream_agg(events: DataFrame, time_col: str = "ts",
@@ -61,13 +31,12 @@ def salted_windowed_stream_agg(events: DataFrame, time_col: str = "ts",
     """Skew-proof STREAMING windowed aggregation: salt → partial window
     agg → same-window re-agg, under ONE event-time watermark.
 
-    The streaming analog of :func:`salted_domain_stats`: a hot key
-    (head domain / dominant event type) would otherwise concentrate a
-    window's entire state and update traffic on ONE state-store
-    partition — the straggler that stalls every micro-batch commit at
-    1000 executors. Phase 1 keys state by (window, key, salt) so a hot
-    key's rows fan out k ways (k stores update in parallel, each
-    holding 1/k of the hot key's partials); phase 2 re-aggregates the
+    A hot key (head domain / dominant event type) would otherwise
+    concentrate a window's entire state and update traffic on ONE
+    state-store partition — the straggler that stalls every micro-batch
+    commit at 1000 executors. Phase 1 keys state by (window, key, salt)
+    so a hot key's rows fan out k ways (k stores update in parallel,
+    each holding 1/k of the hot key's partials); phase 2 re-aggregates the
     ≤k partial rows per (window, key) — Spark 3.4+ chained stateful
     aggregation, both phases sharing the one watermark, emission still
     "window end <= watermark" because the re-window has the SAME width

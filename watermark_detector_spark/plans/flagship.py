@@ -9,13 +9,15 @@ plan so the SAME code runs in batch and under Structured Streaming
 watermark — SURVEY.md §7 steps 4-5).
 
 Scale notes (100 TB posture):
-- ``html`` is dropped the instant text is extracted (column pruning:
-  the binary payload never crosses a shuffle).
-- the two pandas UDFs are the only Python in the plan; everything else
-  is JVM/codegen.
+- extract → detect → explode run FUSED in one ``mapInPandas`` pass
+  (``detection_rows_fused``): one Arrow transit into Python per page,
+  and the only Python in the plan; everything else is JVM/codegen.
+- ``html`` never leaves that pass (column pruning: the binary payload
+  never crosses a shuffle).
 - the aggregation shuffles on (domain, window) — partial aggregation
-  (map-side combine) happens automatically; skew from head domains is
-  handled by AQE + the salted variant in operators/skew.py.
+  (map-side combine) happens automatically and absorbs head-domain
+  skew; operators/skew.py holds the salted two-phase form for stateful
+  streaming aggregation.
 """
 
 from __future__ import annotations
@@ -24,46 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.core import SCORE_THRESHOLD, Signature, build_detector, detect_text
-from ..functions.detect import make_detect_udf
 from ..functions.domains import registrable_domain
-from ..functions.extract import extract_series, extract_text_udf
-
-
-def detected_pages(pages: DataFrame, signatures: list[Signature],
-                   from_html: bool = True) -> DataFrame:
-    """pages → (url, domain, warc_ts, lang, detections). The detection
-    spine shared by every downstream query."""
-    detect_udf = make_detect_udf(signatures)
-    df = pages
-    if from_html:
-        df = df.withColumn("text", extract_text_udf(F.col("html"))).drop("html")
-    return df.select(
-        "url",
-        registrable_domain(F.col("url")).alias("domain"),
-        "warc_ts",
-        "lang",
-        detect_udf(F.col("text")).alias("detections"),
-    )
-
-
-def kept_detections(detected: DataFrame) -> DataFrame:
-    """Explode the detections array and apply the >=0.5 keep filter
-    (train_watermarks.py:311). Pages with no kept detection vanish here."""
-    return (
-        detected.select(
-            "url", "domain", "warc_ts", "lang",
-            F.explode("detections").alias("d"),
-        )
-        .select(
-            "url", "domain", "warc_ts", "lang",
-            F.col("d.sig_id").alias("sig_id"),
-            F.col("d.category").alias("category"),
-            F.col("d.begin").alias("begin"),
-            F.col("d.end").alias("end"),
-            F.col("d.score").alias("score"),
-        )
-        .where(F.col("score") >= F.lit(SCORE_THRESHOLD))
-    )
+from ..functions.extract import extract_series
 
 
 _DETECTION_ROWS_SCHEMA = (

@@ -46,46 +46,3 @@ DETECTION_STRUCT = T.StructType(
     ]
 )
 DETECTIONS_COL_TYPE = T.ArrayType(DETECTION_STRUCT)
-
-DETECTED_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("detections", DETECTIONS_COL_TYPE, False),
-    ]
-)
-
-# --- golden tables (FIXTURES.md §3-5) ------------------------------------
-GOLDEN_EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("text_bytes", T.BinaryType(), False),
-    ]
-)
-
-GOLDEN_DETECTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sig_id", T.LongType(), False),
-        T.StructField("category", T.StringType(), False),
-        T.StructField("begin", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-        T.StructField("score", T.DoubleType(), False),
-        T.StructField("below_threshold", T.BooleanType(), False),
-    ]
-)
-
-GOLDEN_WINDOWS_SCHEMA = T.StructType(
-    [
-        T.StructField("domain", T.StringType(), False),
-        T.StructField("window_start", T.TimestampType(), False),
-        T.StructField("window_end", T.TimestampType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_detections", T.LongType(), False),
-        T.StructField("avg_score", T.DoubleType(), False),
-        T.StructField("n_watermark", T.LongType(), False),
-        T.StructField("n_text", T.LongType(), False),
-    ]
-)

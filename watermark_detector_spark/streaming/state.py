@@ -645,8 +645,8 @@ def session_stats(kept: DataFrame, gap: str = "5 minutes",
                   watermark: str = "10 minutes") -> DataFrame:
     """Custom sessionization via the state store (EventTimeTimeout) —
     the hand-rolled equivalent of ``F.session_window`` demonstrating
-    applyInPandasWithState with timeouts; ``operators.windows`` exposes
-    the built-in variant."""
+    applyInPandasWithState with timeouts; q43/q50 call the built-in
+    ``F.session_window`` inline."""
     gap_s = parse_gap_seconds(gap)
     return (
         kept.withWatermark("warc_ts", watermark)
