@@ -4,14 +4,12 @@
 ``queries``    — one entry per implemented operator family (SURVEY.md §2
                  + the training-data-pipeline operators: dedup,
                  similarity search, text analysis, multimodal plumbing).
-``oracle_sql`` — DuckDB-runnable ANSI SQL equivalents for 56 of the 57
-                 queries, including the streaming/stateful family (q24-
-                 q26: emission rules replayed as batch SQL) and the
-                 multimodal UDF (q27: md5-derived features recomputed in
-                 SQL). Only q28 (the real detect pandas UDF, whose
-                 regex-merge internals are not SQL-expressible) is
-                 rows-only; its SQL analog q23 is oracle-checked and its
-                 semantics are pinned by construction-golden pytests.
+``oracle_sql`` — DuckDB-runnable ANSI SQL equivalents for every one of
+                 the 127 queries, including the streaming/stateful
+                 family (q24-q26: emission rules replayed as batch SQL),
+                 the multimodal UDF (q27: md5-derived features
+                 recomputed in SQL) and the flagship's fused detector
+                 (q28: scan/merge/score replayed in SQL).
 
 Column-name and type discipline (driver hashes values after sorting
 columns by name): every computed column is aliased identically on both
@@ -32,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from watermark_detector_spark.functions.core import Signature
-from watermark_detector_spark.functions.detect import make_detect_udf
 from watermark_detector_spark.functions.similarity import (
     brute_force_topk,
     cosine_pairs,
@@ -587,7 +584,7 @@ def _q42_distinct_count(spark, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# streaming / stateful / UDF-stub queries (rows-only check; no oracle)
+# streaming / stateful / UDF queries (oracles replay them as batch SQL)
 # ---------------------------------------------------------------------------
 
 
@@ -853,19 +850,24 @@ def _q27_multimodal_features(spark, sf: str) -> DataFrame:
 
 
 def _q28_detect_udf_docs(spark, sf: str) -> DataFrame:
-    """The real pandas-UDF detector over documents (vocabulary
-    signatures) — per-source kept-detection counts. Oracle-checked
-    since round 3: ``_detect_docs_sql`` replays the scan/merge/score
-    semantics exactly in DuckDB; pytest additionally validates the UDF
-    against construction goldens on the pages fixtures."""
+    """The flagship's fused detector pass (``kept_detections_fused``)
+    over documents (vocabulary signatures) — per-source kept-detection
+    counts, with ``source`` read back from the url that
+    ``_documents_as_pages`` builds. ``_detect_docs_sql`` replays the
+    scan/merge/score semantics exactly in DuckDB; pytest additionally
+    checks the fused pass against construction goldens on the pages
+    fixtures."""
+    from watermark_detector_spark.plans.flagship import kept_detections_fused
+
     docs = _t(spark, sf, "documents")
-    detect = make_detect_udf(_ENTRY_SIGS)
-    det = docs.select("source", F.explode(detect(F.col("text"))).alias("d"))
+    kept = kept_detections_fused(_documents_as_pages(docs), _ENTRY_SIGS,
+                                 from_html=False)
     return (
-        det.where(F.col("d.score") >= 0.5)
+        kept.select(F.regexp_extract("url", r"^https://www\.(.*)\.com/doc/", 1)
+                    .alias("source"), "score")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_detections"),
-             F.round(F.avg("d.score"), 4).alias("avg_score"))
+             F.round(F.avg("score"), 4).alias("avg_score"))
     )
 
 
@@ -3061,8 +3063,8 @@ sh AS (SELECT DISTINCT doc_id,
 
 
 def _detect_docs_sql() -> str:
-    """Replay the REAL detect pandas UDF (functions/core.py:
-    probe/token scan → gap-merge → span_score) in pure DuckDB SQL over
+    """Replay the flagship detector (functions/core.py: whole-token
+    anchor scan → gap-merge → span_score) in pure DuckDB SQL over
     the documents table — the q28 oracle that round 1 called impossible.
 
     Exact because (a) the testdata text is single-space tokenized with
@@ -5207,7 +5209,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
             FROM reach GROUP BY node
         """,
-        # q28: the real detect pandas UDF, replayed in SQL (see
+        # q28: the flagship's fused detector, replayed in SQL (see
         # _detect_docs_sql docstring for why this is exact)
         "q28_detect_udf_docs": _detect_docs_sql(),
         # q127: persisted ANN index probed in exact mode over

@@ -34,7 +34,6 @@ def backfill(
     signatures: list[Signature],
     sink_root: str,
     window: str = "1 minute",
-    from_html: bool = True,
 ) -> ExactlyOnceParquetSink:
     """Run the flagship batch plan over every source dir; exactly-once
     per source via the manifest sink. Returns the sink for inspection.
@@ -56,8 +55,7 @@ def backfill(
         if bid in done:
             continue
         pages = read_pages_batch(spark, src)
-        agg = flagship_batch(pages, signatures, window=window,
-                             from_html=from_html).withColumn(
+        agg = flagship_batch(pages, signatures, window=window).withColumn(
             "source_path", F.lit(src)
         )
         sink.write_batch(agg, bid)
@@ -67,7 +65,7 @@ def backfill(
 def main() -> None:  # pragma: no cover - CLI wrapper
     import argparse
 
-    from watermark_detector_spark.functions.detect import signatures_from_df
+    from watermark_detector_spark.functions.core import signatures_from_df
     from watermark_detector_spark.session import get_spark
 
     ap = argparse.ArgumentParser()

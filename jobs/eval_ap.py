@@ -182,7 +182,7 @@ def evaluate_ap(predictions: DataFrame, golden: DataFrame,
 def main() -> None:  # pragma: no cover - CLI wrapper
     import argparse
 
-    from watermark_detector_spark.functions.detect import signatures_from_df
+    from watermark_detector_spark.functions.core import signatures_from_df
     from watermark_detector_spark.plans.flagship import kept_detections_fused
     from watermark_detector_spark.session import get_spark
     from watermark_detector_spark.sources.pages import read_pages_batch

@@ -19,7 +19,7 @@ import argparse
 
 from pyspark.sql import SparkSession
 
-from watermark_detector_spark.functions.detect import signatures_from_df
+from watermark_detector_spark.functions.core import signatures_from_df
 from watermark_detector_spark.session import engine_conf
 from watermark_detector_spark.streaming.pipeline import (
     MetricsListener,

@@ -1,5 +1,6 @@
 """Unit tests for the pure core semantics (no Spark)."""
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -10,18 +11,22 @@ from watermark_detector_spark.functions.core import (
     SCORE_THRESHOLD,
     build_detector,
     detect_text,
-    extract_text_from_html,
     make_signatures,
     render_html,
     span_score,
     stable_hash,
 )
+from watermark_detector_spark.functions.extract import extract_series
 
 CFG = FixtureConfig(n_docs=300)
 DOMAINS = _domains(CFG)
 SIGS = CFG.signatures
 BY_ID = {s.sig_id: s for s in SIGS}
 RX = build_detector(SIGS)
+
+
+def extract(html: bytes | None) -> str | None:
+    return extract_series(pd.Series([html], dtype="object")).iloc[0]
 
 
 def test_stable_hash_deterministic():
@@ -34,16 +39,16 @@ def test_extract_roundtrip_all_docs():
     the rendered html must reproduce the original text exactly."""
     for i in range(CFG.n_docs):
         d = gen_doc(i, CFG, DOMAINS)
-        assert extract_text_from_html(d["html"]) == d["text"], f"doc {i}"
+        assert extract(d["html"]) == d["text"], f"doc {i}"
 
 
 def test_extract_handles_entities_and_fallback():
     html = render_html("https://x.example.com/p/1", 1, 'a & b < c > "d"', "en")
-    assert extract_text_from_html(html) == 'a & b < c > "d"'
+    assert extract(html) == 'a & b < c > "d"'
     # no <main>: body minus boilerplate blocks
     raw = b"<html><body><nav>chrome</nav><p>hello world</p><script>x=1</script></body></html>"
-    assert extract_text_from_html(raw) == "hello world"
-    assert extract_text_from_html(None) is None
+    assert extract(raw) == "hello world"
+    assert extract(None) is None
 
 
 def test_extract_find_based_equals_regex_reference():
@@ -54,15 +59,12 @@ def test_extract_find_based_equals_regex_reference():
     invalid utf-8)."""
     import re
 
-    import pandas as pd
-
     from watermark_detector_spark.functions.core import _ESCAPES
     from watermark_detector_spark.functions.extract import (
         _BODY_RX,
         _DROP_RX,
         _MAIN_RX,
         _TAG_RX,
-        extract_series,
     )
 
     def ref(html: pd.Series) -> pd.Series:
@@ -182,32 +184,10 @@ def test_detect_never_crashes_on_arbitrary_text(text):
         assert 0.0 < s <= 1.0
 
 
-def test_token_scan_equals_probe_scan():
-    """The two pre-scan strategies (str.find probes vs single-pass
-    token-dict scan) must produce identical detections on every fixture
-    doc — the equivalence that lets the detector switch to the flat-in-
-    n_sigs scanner for above-threshold (80+) signature tables."""
-    from watermark_detector_spark.functions.core import CompiledDetector
-
-    det_probe = CompiledDetector(SIGS, token_scan_threshold=10**9)
-    det_token = CompiledDetector(SIGS, token_scan_threshold=0)
-    assert not det_probe.use_token_scan and det_token.use_token_scan
-    n_docs_with_hits = 0
-    for i in range(CFG.n_docs):
-        d = gen_doc(i, CFG, DOMAINS)
-        a = detect_text(d["text"], BY_ID, det_probe)
-        b = detect_text(d["text"], BY_ID, det_token)
-        assert a == b, f"doc {i}"
-        n_docs_with_hits += bool(a)
-    assert n_docs_with_hits > 10  # the comparison actually exercised hits
-
-
-def test_token_scan_default_kicks_in_at_large_sig_count():
-    """build_detector auto-selects the flat scanner for big tables and
-    stays golden-exact there (300 sigs >= threshold 80)."""
+def test_detect_golden_at_large_sig_count():
+    """The one anchor scan stays golden-exact on a 300-signature table."""
     big = make_signatures(300)
     det = build_detector(big)
-    assert det.use_token_scan
     by_id = {s.sig_id: s for s in big}
     text = f"pad {big[7].pattern} mid {big[123].pattern} tail"
     got = detect_text(text, by_id, det)
@@ -216,18 +196,39 @@ def test_token_scan_default_kicks_in_at_large_sig_count():
 
 
 def test_scan_semantics_token_boundary():
-    """Anchors glued to punctuation are NOT matches, identically in both
-    scanners — crossing the threshold can never change detections."""
-    from watermark_detector_spark.functions.core import CompiledDetector
-
+    """A candidate is a WHOLE whitespace-delimited token: anchors glued to
+    punctuation or prefixing a longer token are not matches."""
     sig = SIGS[0]
-    det_probe = CompiledDetector(SIGS, token_scan_threshold=10**9)
-    det_token = CompiledDetector(SIGS, token_scan_threshold=0)
     glued = f"see ({sig.pattern}) end"          # anchor mid-token: no match
     clean = f"see {sig.pattern} end"            # token-aligned: match
-    for det in (det_probe, det_token):
-        assert detect_text(glued, BY_ID, det) == []
-        got = detect_text(clean, BY_ID, det)
-        assert len(got) == 1 and got[0][0] == sig.sig_id
-    assert (detect_text(glued, BY_ID, det_probe)
-            == detect_text(glued, BY_ID, det_token))
+    assert detect_text(glued, BY_ID, RX) == []
+    got = detect_text(clean, BY_ID, RX)
+    assert len(got) == 1 and got[0][0] == sig.sig_id
+
+    from __spark_entry__ import _ENTRY_SIGS
+
+    by_id = {s.sig_id: s for s in _ENTRY_SIGS}
+    frequent = ("batch window spark order key agg rows slow fast\ttable "
+                "window sparkle the keys agg key agg row")
+    cases = [
+        ("keys agg row", []),  # anchor is a strict prefix of the token
+        ("key agg row", [(0, "watermark", 0, 11, 0.9)]),
+        ("see key", []),  # anchor ends the text; the confirm needs a 2nd token
+        ("see key agg", [(0, "watermark", 4, 11, 0.6)]),
+        ("key\tagg row", []),  # the confirm joins tokens with one space
+        ("key\nagg row", []),
+        # overlapping signatures; 'key agg rows' is a full match (only the
+        # anchor must be a whole token); 'slow fast<TAB>table' and 'window
+        # sparkle' are 2-token prefixes; 'keys' is no candidate
+        (frequent, [(3, "text", 0, 18, 0.85), (2, "watermark", 6, 24, 0.7),
+                    (0, "watermark", 25, 36, 0.9), (1, "text", 38, 47, 0.533333),
+                    (2, "watermark", 54, 66, 0.466667),
+                    (0, "watermark", 82, 93, 0.9)]),
+    ]
+    det = build_detector(_ENTRY_SIGS)
+    for text, want in cases:
+        assert detect_text(text, by_id, det) == want, text
+    # the anchor scan itself fires on a whole token before a tab, a
+    # newline or the end of text; only the confirm rejects those
+    for text in ("key\tagg row", "key\nagg row", "see key"):
+        assert [m.start() for m in det.scan_rx.finditer(text)] == [text.index("key")]

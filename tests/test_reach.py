@@ -28,7 +28,6 @@ ALLOWED = {
     "read_pages_iceberg": "the north star's Iceberg input; needs a jar this repo does not ship",
     "salted_join": "the only skew join",
     "cosine_pairs_expr": "pure-expression reference that the block-GEMM cosine test compares against",
-    "extract_text_from_html": "pure-Python reference for the byte-identity extraction test",
     "bm25_score_py": "pure-Python reference for the BM25 test",
     "_MAIN_RX": "regex reference for the str.find <main> extraction test",
     "_BODY_RX": "regex reference for the str.find <body> extraction test",

@@ -1,5 +1,5 @@
 """Pure-Python core semantics: deterministic hashing, signature model,
-HTML templating/extraction, and detection (match → merge → score).
+HTML templating, and detection (match → merge → score).
 
 These are the spec-level functions; the flagship calls them from its
 one fused Python pass (``plans.flagship.detection_rows_fused``) and the
@@ -73,6 +73,20 @@ class Signature:
         return self.pattern.split(" ")
 
 
+def signatures_from_df(sig_df) -> list[Signature]:
+    """Collect the (small) signature dimension DataFrame to plain objects."""
+    return [
+        Signature(
+            sig_id=r["sig_id"],
+            pattern=r["pattern"],
+            category=r["category"],
+            weight=r["weight"],
+            valid_from_offset_s=0,
+        )
+        for r in sig_df.select("sig_id", "pattern", "category", "weight").collect()
+    ]
+
+
 def make_signatures(n_sigs: int = 25, seed: int = 42) -> list[Signature]:
     """Deterministic signature set. Pattern = unique anchor token +
     1-3 vocab tokens + one digit token (3-5 digits)."""
@@ -133,34 +147,20 @@ def _sig_regex(sig: Signature) -> str:
     return rx + tail
 
 
-# Measured crossover (~350-word docs): probe scales linearly in n_sigs
-# (45 us/doc @25 → 148 @100 → 6,640 @5k); token scan is flat
-# (~120-130 us/doc at any count). Re-measured round 3: they cross at
-# ~80-90 signatures (probe slope ~1.4 us/sig on this corpus shape).
-_TOKEN_SCAN_THRESHOLD = 80
-_TOKEN_RE_SCAN = re.compile(r"\S+")
-
-
 class CompiledDetector:
-    """Per-signature anchored matchers behind one of two pre-scan
-    strategies, picked by signature count (the hot path at 100 TB):
+    """Every signature's anchored matcher behind ONE candidate scan.
 
-    - ``probes`` (small sets): for each signature, find occurrences of
-      its first token with ``str.find`` (memchr-speed), then confirm
-      with the signature's anchored regex at that position. ~10x faster
-      than a regex alternation, but cost is O(n_sigs × doc_len).
-    - ``token scan`` (>= ``_TOKEN_SCAN_THRESHOLD`` sigs): the
-      Aho-Corasick-shaped single pass — tokenize the doc ONCE, hash each
-      token into an anchor→signatures dict, confirm hits with the same
-      per-signature regex. Cost is O(doc_tokens) + O(hits), flat in
-      n_sigs — the multi-pattern scan that keeps a >1k-signature table
-      from dominating the pipeline.
-
-    Both confirm with identical regexes, require the anchor to start at
-    a token boundary (start-of-text or preceded by whitespace), and
-    honor the same resume-after-match rule — results are identical on
-    ANY input, so crossing the threshold can never change detections
-    (t:test_token_scan_equals_probe_scan).
+    ``scan_rx`` is a single combined regex over the anchor tokens (each
+    signature's first token), each required to end the doc token:
+    ``(?:a1|a2|...)(?!\\S)``. sre compiles a literal alternation with a
+    first-character charset prefix, so the scan skips non-candidate
+    text at C speed; the trailing lookahead keeps that fast skip (a
+    leading lookbehind would defeat it) and makes every match a whole
+    doc token, so ``anchor_map`` is keyed by the match itself. The
+    token-start half of the boundary is re-checked in Python per
+    candidate (candidates are rare; the skip loop is the hot part), and
+    each candidate is confirmed with its signature's anchored regex.
+    Cost is O(doc_len) + O(hits), flat in the number of signatures.
 
     Token model (spec decision): a token boundary is WHITESPACE, not \\w
     — '(wm003sig tok 123' does not match. This is deliberate and
@@ -172,37 +172,16 @@ class CompiledDetector:
     \\w-boundary variant would only add matches on punctuation-glued
     anchors at the cost of three divergent tokenizations in one engine."""
 
-    __slots__ = ("sigs", "probes", "anchor_map", "use_token_scan", "scan_rx")
+    __slots__ = ("anchor_map", "scan_rx")
 
-    def __init__(self, signatures: list[Signature],
-                 token_scan_threshold: int = _TOKEN_SCAN_THRESHOLD):
-        self.sigs = list(signatures)
-        self.probes = [
-            (sig, sig.tokens[0], re.compile(_sig_regex(sig))) for sig in signatures
-        ]
+    def __init__(self, signatures: list[Signature]):
         self.anchor_map: dict[str, list] = {}
-        for sig, anchor, rx in self.probes:
-            self.anchor_map.setdefault(anchor, []).append((sig, rx))
-        self.use_token_scan = len(signatures) >= token_scan_threshold
-        # Candidate pre-scan for the token path: ONE combined regex over
-        # all anchor literals at a token boundary. sre compiles a literal
-        # alternation with a first-character charset prefix, so the scan
-        # skips through non-candidate text at C speed instead of pushing
-        # every token through a Python-level dict lookup (~5-10x less
-        # Python work per doc; measured 176 -> ~35 us/doc on the bench
-        # corpus). Candidate positions are a SUPERSET of the tokens the
-        # per-token scan would look up (an anchor that is a strict
-        # prefix of the doc token also fires here); the whole-token
-        # anchor_map lookup below restores exact token-equality
-        # semantics, so detections are identical on any input.
-        # NOTE: no token-boundary assertion here — a leading lookbehind
-        # group defeats sre's literal-prefix/charset fast-skip and the
-        # scan degrades to per-position interpretation. The boundary is
-        # re-checked in Python per candidate instead (candidates are
-        # rare; the skip loop is the hot part).
+        for sig in signatures:
+            self.anchor_map.setdefault(sig.tokens[0], []).append(
+                (sig, re.compile(_sig_regex(sig))))
         self.scan_rx = (
-            re.compile(
-                "|".join(sorted(map(re.escape, self.anchor_map))))
+            re.compile(r"(?:%s)(?!\S)"
+                       % "|".join(sorted(map(re.escape, self.anchor_map))))
             if self.anchor_map else None
         )
 
@@ -211,79 +190,43 @@ def build_detector(signatures: list[Signature]) -> CompiledDetector:
     return CompiledDetector(signatures)
 
 
-def _raw_matches_probe(text: str, detector: CompiledDetector) -> list:
-    """str.find pre-probe per signature (small signature sets)."""
-    raw: list[tuple[int, int, int, float]] = []
-    find = text.find
-    for sig, anchor, rx in detector.probes:
-        pos = find(anchor)
-        if pos == -1:
-            continue
-        n_tokens = len(sig.tokens)
-        last_tok = sig.tokens[-1]
-        while pos != -1:
-            # token-start boundary: a mid-token anchor occurrence (e.g.
-            # '(wm003sig') is NOT a match — keeps probe and token-scan
-            # semantics identical on any input, not just fixtures
-            if pos > 0 and not text[pos - 1].isspace():
-                pos = find(anchor, pos + 1)
-                continue
-            m = rx.match(text, pos)
-            if m is None:
-                pos = find(anchor, pos + 1)
-                continue
-            raw.append(_scored(sig, m, n_tokens, last_tok))
-            pos = find(anchor, m.end())
-    return raw
-
-
-def _raw_matches_token_scan(text: str, detector: CompiledDetector) -> list:
-    """Single combined-regex candidate pass + anchor dict (large
-    signature sets). ``scan_rx`` finds anchor occurrences at token
-    boundaries at C speed; the whole doc token at each candidate is
-    then looked up in ``anchor_map`` (exact token equality — identical
-    candidate set to the historical per-token loop, in the same order),
-    and ``last_end`` reproduces the probe scanner's resume-after-match
-    rule (never re-fire a signature inside its own previous match).
-    Equivalence note: an alternation match never spans whitespace
-    (anchors are single tokens), so it can never consume past the next
-    token start — every anchor_map token position is visited."""
+def _raw_matches(text: str, detector: CompiledDetector) -> list:
+    """Whole-token anchor candidates → per-signature anchored confirm.
+    ``last_end`` is the resume-after-match rule: a signature never
+    re-fires inside its own previous match."""
     raw: list[tuple[int, int, int, float]] = []
     scan_rx = detector.scan_rx
     if scan_rx is None:
         return raw
     anchor_map = detector.anchor_map
-    tok_at = _TOKEN_RE_SCAN.match
     last_end: dict[int, int] = {}
     for c_m in scan_rx.finditer(text):
         pos = c_m.start()
-        # token-start boundary (same rule as the probe scanner): a
-        # mid-token anchor occurrence is not a candidate
+        # token-start boundary: a mid-token anchor occurrence (e.g.
+        # '(wm003sig') is not a candidate
         if pos > 0 and not text[pos - 1].isspace():
             continue
-        entries = anchor_map.get(tok_at(text, pos).group())
-        if entries is None:
-            continue
-        for sig, rx in entries:
+        for sig, rx in anchor_map[c_m.group()]:
             if pos < last_end.get(sig.sig_id, 0):
                 continue
             m = rx.match(text, pos)
             if m is None:
                 continue
-            raw.append(_scored(sig, m, len(sig.tokens), sig.tokens[-1]))
+            raw.append(_scored(sig, m))
             last_end[sig.sig_id] = m.end()
     return raw
 
 
-def _scored(sig: Signature, m: re.Match, n_tokens: int, last_tok: str):
+def _scored(sig: Signature, m: re.Match):
+    toks = sig.tokens
     matched = m.group(0)
     n_matched = matched.count(" ") + 1
-    if n_matched == n_tokens:
-        digit_exact = matched.rsplit(" ", 1)[1] == last_tok
+    if n_matched == len(toks):
+        digit_exact = matched.rsplit(" ", 1)[1] == toks[-1]
     else:
         digit_exact = True  # digit token not part of a truncated match
     return (sig.sig_id, m.start(), m.end(),
-            span_score(sig.weight, n_matched, n_tokens, digit_exact))
+            span_score(sig.weight, n_matched, len(toks), digit_exact))
 
 
 def detect_text(
@@ -301,10 +244,7 @@ def detect_text(
     """
     if not text:
         return []
-    if detector.use_token_scan:
-        raw = _raw_matches_token_scan(text, detector)
-    else:
-        raw = _raw_matches_probe(text, detector)
+    raw = _raw_matches(text, detector)
     # merge same-signature spans whose gap <= MERGE_GAP (dilation analog)
     raw.sort(key=lambda r: (r[0], r[1]))
     merged: list[list] = []
@@ -321,7 +261,7 @@ def detect_text(
 
 
 # ---------------------------------------------------------------------------
-# HTML template + extraction (analog of image encode/decode, S3 in SURVEY §2.1)
+# HTML template (analog of image encode, S3 in SURVEY §2.1)
 # ---------------------------------------------------------------------------
 
 _ESCAPES = [("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"), ("'", "&#39;")]
@@ -333,17 +273,10 @@ def escape_html(s: str) -> str:
     return s
 
 
-def unescape_html(s: str) -> str:
-    # reverse order: &amp; last, so '&amp;lt;' round-trips correctly
-    for raw, esc in reversed(_ESCAPES):
-        s = s.replace(esc, raw)
-    return s
-
-
 def render_html(url: str, doc_id: int, text: str, lang: str) -> bytes:
     """Deterministic page template: boilerplate chrome around <main>.
-    What ``extract_text`` must reduce back to ``text`` byte-identically
-    (BASELINE.json input_hint invariant)."""
+    What ``extract.extract_series`` must reduce back to ``text``
+    byte-identically (BASELINE.json input_hint invariant)."""
     nav = '<nav><a href="/">home</a> <a href="/about">about</a></nav>'
     return (
         f'<html lang="{lang}"><head><title>doc {doc_id}</title>'
@@ -353,33 +286,3 @@ def render_html(url: str, doc_id: int, text: str, lang: str) -> bytes:
         f"<body>{nav}<main>{escape_html(text)}</main>"
         f'<footer>&copy; <a href="{url}">source</a></footer></body></html>'
     ).encode("utf-8")
-
-
-_MAIN_RE = re.compile(r"<main[^>]*>(.*?)</main>", re.S)
-_DROP_BLOCKS_RE = re.compile(
-    r"<(script|style|nav|footer|header|aside)[^>]*>.*?</\1>", re.S | re.I
-)
-_TAG_RE = re.compile(r"<[^>]+>")
-_BODY_RE = re.compile(r"<body[^>]*>(.*?)</body>", re.S)
-
-
-def extract_text_from_html(html: bytes | None) -> str | None:
-    """Boilerplate-removing HTML→text extraction (pure function).
-
-    Prefers the <main> element (content zone); falls back to <body> minus
-    script/style/nav/footer/header/aside, then whole document. Entity
-    unescape, outer whitespace strip. This replaces the reference's image
-    decode step (generate_dataset.py:184) as the payload decoder.
-    """
-    if html is None:
-        return None
-    s = html.decode("utf-8", errors="replace")
-    m = _MAIN_RE.search(s)
-    if m:
-        inner = m.group(1)
-    else:
-        b = _BODY_RE.search(s)
-        inner = b.group(1) if b else s
-        inner = _DROP_BLOCKS_RE.sub(" ", inner)
-    inner = _TAG_RE.sub("", inner)
-    return unescape_html(inner).strip()

@@ -77,7 +77,8 @@ def extract_series(html: pd.Series) -> pd.Series:
     has_amp = out.str.contains("&", regex=False) == True  # noqa: E712 — null-safe
     if has_amp.any():
         sub = out[has_amp]
-        for raw, esc in reversed(_ESCAPES):  # &amp; last — see core.unescape_html
+        # reverse order: &amp; last, so '&amp;lt;' unescapes to '&lt;'
+        for raw, esc in reversed(_ESCAPES):
             sub = sub.str.replace(esc, raw, regex=False)
         out = out.copy()
         out[has_amp] = sub

@@ -152,13 +152,12 @@ def flagship_batch(pages: DataFrame, signatures: list[Signature],
 
 
 def flagship_stream(pages_stream: DataFrame, signatures: list[Signature],
-                    window: str = "1 minute", watermark: str = "10 minutes",
-                    from_html: bool = True) -> DataFrame:
+                    window: str = "1 minute", watermark: str = "10 minutes") -> DataFrame:
     """Same plan under readStream + event-time watermark (the shared
     window_agg switches the doc count to the streaming-supported
     approx sketch)."""
     return window_agg(
-        kept_detections_fused(pages_stream, signatures, from_html=from_html),
+        kept_detections_fused(pages_stream, signatures),
         window=window,
         watermark=watermark,
     )

@@ -32,17 +32,3 @@ SIGNATURES_SCHEMA = T.StructType(
         T.StructField("valid_from", T.TimestampType(), False),
     ]
 )
-
-# --- detection output ----------------------------------------------------
-# Mirror of the reference's annotations array-of-structs
-# (train_watermarks.py:54-58,77-85): per-document list of labeled spans.
-DETECTION_STRUCT = T.StructType(
-    [
-        T.StructField("sig_id", T.LongType(), False),
-        T.StructField("category", T.StringType(), False),
-        T.StructField("begin", T.IntegerType(), False),  # bbox-min analog (T:78)
-        T.StructField("end", T.IntegerType(), False),  # bbox-max analog
-        T.StructField("score", T.DoubleType(), False),  # confidence (T:311)
-    ]
-)
-DETECTIONS_COL_TYPE = T.ArrayType(DETECTION_STRUCT)

@@ -867,8 +867,7 @@ class UpsertSink(ExactlyOnceParquetSink):
 
     def read_current(self, spark: SparkSession,
                      as_of_batch: int | None = None,
-                     as_of_timestamp: float | None = None,
-                     keep_lineage: bool = False) -> DataFrame:
+                     as_of_timestamp: float | None = None) -> DataFrame:
         """The table's CURRENT state (or its state as of a past batch /
         commit timestamp): one row per key, last writer wins, tombstoned
         keys absent. While the ledger is exactly one merge range this is
@@ -882,7 +881,7 @@ class UpsertSink(ExactlyOnceParquetSink):
                 and self._fully_merged()):
             df = self._resolved(df)
         df = self._drop_tombstones(df)
-        return df if keep_lineage else df.drop(self.LINEAGE_COL)
+        return df.drop(self.LINEAGE_COL)
 
     # -- maintenance: copy-on-write fold --------------------------------------
     def compact_merge(self, spark: SparkSession,
