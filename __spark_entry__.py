@@ -19,9 +19,12 @@ doubles, timestamps are formatted as 'yyyy-MM-dd HH:mm:ss' strings.
 
 from __future__ import annotations
 
+import atexit
+import json
 import os
 import shutil
 import tempfile
+import time
 import uuid
 from collections.abc import Callable
 from datetime import timezone as _timezone
@@ -589,19 +592,31 @@ def _q42_distinct_count(spark, sf: str) -> DataFrame:
 
 
 _TMP_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp")
+_STAGED: dict = {}
 
-# events.parquet staged as a stream-source dir ONCE per (sf, session) and
-# reused by every streaming query — six independent write+stream staging
-# cycles per correctness run was the harness's dominant fixed cost.
-_EVENTS_STAGE_CACHE: dict[str, tuple[str, object]] = {}
-_WARCISH_STAGE_CACHE: dict[str, str] = {}
+
+def _staged(spark: SparkSession, sf: str, prefix: str,
+            build: Callable[[str], object]):
+    """Stage an input ONCE per (session, sf): ``build(dir)`` runs in one
+    fresh temp dir under _TMP_ROOT (removed at process exit) and its
+    result is memoized. A staging cycle per query was the harness's
+    dominant fixed cost, and several builds MUTATE what they stage
+    (ledger replays, index ingests), so a second build would change
+    the answers. Keyed like _t, plus the stage's dir prefix."""
+    key = (spark.sparkContext.applicationId, sf, prefix)
+    if key not in _STAGED:
+        os.makedirs(_TMP_ROOT, exist_ok=True)
+        d = tempfile.mkdtemp(prefix=prefix, dir=_TMP_ROOT)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        _STAGED[key] = build(d)
+    return _STAGED[key]
 
 
 def _warcish_stage(spark, sf: str) -> str:
-    """Stage the documents table ONCE per (session, sf) as warcish
-    container files (written through the custom data source's own
-    writer) and register the source; q84 reads it back through the
-    custom reader — both halves of the format exercised."""
+    """Stage the documents table as warcish container files (written
+    through the custom data source's own writer) and register the
+    source; q84 reads it back through the custom reader — both halves
+    of the format exercised. Returns the staged dir."""
     from watermark_detector_spark.sources import warcish
 
     # EVERY call, not just the staging one: warcish.register sets
@@ -610,10 +625,10 @@ def _warcish_stage(spark, sf: str) -> str:
     # pushFilters, and a session not built by session.py (e.g. the
     # driver harness's) hard-fails the scan with
     # DATA_SOURCE_PUSHDOWN_DISABLED without the conf. Gating this on
-    # the stage cache would let a later same-session call fail.
+    # the stage memo would let a later same-session call fail.
     warcish.register(spark)
-    key = f"{id(spark)}:{sf}"
-    if key not in _WARCISH_STAGE_CACHE:
+
+    def build(out):
         d = _t(spark, sf, "documents").select(
             F.concat(F.lit("https://"), F.col("source"), F.lit(".com/doc/"),
                      F.col("doc_id").cast("string")).alias("url"),
@@ -623,137 +638,107 @@ def _warcish_stage(spark, sf: str) -> str:
             F.col("lang"),
             F.encode(F.col("text"), "UTF-8").alias("html"),
         )
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        out = tempfile.mkdtemp(prefix="wmd_warcish_", dir=_TMP_ROOT)
         d.repartition(4).write.format("warcish").mode("overwrite").save(out)
-        _WARCISH_STAGE_CACHE[key] = out
-        import atexit
+        return out
 
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return _WARCISH_STAGE_CACHE[key]
+    return _staged(spark, sf, "wmd_warcish_", build)
 
 
-def _events_stream(spark, sf: str):
-    """Replay events.parquet as a file stream (tmp copy: file sources
-    need a directory; ts cast to TIMESTAMP for event-time ops). The
-    staged copy is cached per sf dir; cleaned up at process exit."""
-    key = f"{id(spark)}:{sf}"
-    if key not in _EVENTS_STAGE_CACHE:
-        e = _t(spark, sf, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        d = tempfile.mkdtemp(prefix="wmd_events_stream_", dir=_TMP_ROOT)
-        e.write.mode("overwrite").parquet(os.path.join(d, "data"))
-        _EVENTS_STAGE_CACHE[key] = (d, e.schema)
-        import atexit
+def _file_stream(spark, sf: str, prefix: str, df: DataFrame) -> DataFrame:
+    """Replay ``df`` as a parquet file stream (file sources need a
+    directory), staged once per (session, sf)."""
+    def build(d):
+        path = os.path.join(d, "data")
+        df.write.mode("overwrite").parquet(path)
+        return path, df.schema
 
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    d, schema = _EVENTS_STAGE_CACHE[key]
-    return spark.readStream.schema(schema).parquet(os.path.join(d, "data")), None
+    path, schema = _staged(spark, sf, prefix, build)
+    return spark.readStream.schema(schema).parquet(path)
 
 
-def _run_to_memory(stream_df, name: str, output_mode: str) -> None:
+def _events_stream(spark, sf: str) -> DataFrame:
+    """events.parquet as a file stream, ts cast to TIMESTAMP for
+    event-time ops — shared by every events streaming query."""
+    e = _t(spark, sf, "events")
+    return _file_stream(spark, sf, "wmd_events_stream_",
+                        e.withColumn("ts", F.col("ts").cast("timestamp")))
+
+
+# a flush-gated run (see _stream_table) that never sees its flush batch
+# raises after this long instead of returning partial output
+_FLUSH_TIMEOUT_S = 60.0
+
+
+def _stream_table(stream_df: DataFrame, output_mode: str,
+                  watermark_past: str | None = None) -> DataFrame:
+    """Run ``stream_df`` into a fresh memory-sink table and return it.
+
+    State-store partitions: each shuffle partition of a stateful op is
+    one RocksDB/HDFS store instance PER MICRO-BATCH COMMIT; at the
+    harness's fixture scale 200 default partitions is pure fixed cost
+    (~1s/commit). The run pins 8 and restores afterwards — each query
+    uses a fresh checkpoint so the partition count is free to differ.
+
+    The trigger is availableNow unless ``watermark_past`` is given
+    (custom Python DataSource streams, q85): Spark's availableNow
+    wrapper for those stops after the data batch WITHOUT the no-data
+    batch that advances the watermark, so append-mode windows would
+    never emit on a finite stream (native file sources do get that
+    flush batch). Then the DEFAULT trigger runs until a batch with no
+    input rows reports an eventTime.watermark past ``watermark_past``
+    ('YYYY-MM-DDTHH:MM:SS...' UTC) — the watermark check keeps a
+    zero-row DATA batch from passing as the flush — and a run that
+    never sees one RAISES rather than silently returning partial
+    append-mode output."""
+    spark = stream_df.sparkSession
+    name = "wmd_stream_" + uuid.uuid4().hex[:8]
     os.makedirs(_TMP_ROOT, exist_ok=True)
     ckpt = tempfile.mkdtemp(prefix="wmd_ckpt_", dir=_TMP_ROOT)
-    spark = stream_df.sparkSession
-    # state-store partitions: each shuffle partition of a stateful op is
-    # one RocksDB/HDFS store instance PER MICRO-BATCH COMMIT; at the
-    # harness's fixture scale 200 default partitions is pure fixed cost
-    # (~1s/commit). Pin to 8 for the run, restore after — each query uses
-    # a fresh checkpoint so the partition count is free to differ.
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        w = (stream_df.writeStream.outputMode(output_mode).format("memory")
+             .queryName(name).option("checkpointLocation", ckpt))
+        if watermark_past is None:
+            w.trigger(availableNow=True).start().awaitTermination()
+        else:
+            q = w.start()
+            q.processAllAvailable()
+            deadline = time.time() + _FLUSH_TIMEOUT_S
+
+            def flushed():
+                for pr in q.recentProgress:
+                    d = pr if isinstance(pr, dict) else json.loads(pr.json)
+                    wm = (d.get("eventTime") or {}).get("watermark", "")
+                    # both sides normalized to a 'YYYY-MM-DDTHH:MM:SS'
+                    # prefix — lexicographic compare == chronological
+                    if (d.get("batchId", 0) >= 1
+                            and d.get("numInputRows") == 0
+                            and wm[:19] > watermark_past[:19]):
+                        return True
+                return False
+
+            while not (done := flushed()) and time.time() < deadline:
+                time.sleep(0.3)
+            q.stop()
+            q.awaitTermination()
+            if not done:
+                raise TimeoutError(
+                    f"{name}: no watermark-flush batch within "
+                    f"{_FLUSH_TIMEOUT_S}s (required watermark past "
+                    f"{watermark_past!r}) — append-mode output would be "
+                    "incomplete")
     finally:
         # conf.get(key, None) returns None when the key was never set
         # explicitly (it does NOT surface the SQLConf default) — restore
         # by unsetting in that case, or a vanilla session would stay
         # pinned to 8 partitions for every later batch query
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev is None:
+            spark.conf.unset("spark.sql.shuffle.partitions")
         else:
-            try:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            except Exception:
-                pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _run_to_memory_flush(stream_df, name: str, output_mode: str,
-                         timeout_s: float = 60.0,
-                         watermark_past: str | None = None) -> None:
-    """Like _run_to_memory, but with the DEFAULT micro-batch trigger +
-    an explicit wait for the no-data watermark-flush batch. Needed for
-    custom Python DataSource streams: Spark's availableNow wrapper for
-    them stops after the data batch WITHOUT the no-data batch that
-    advances the watermark, so append-mode windows would never emit on
-    a finite stream (native file sources do get that flush batch).
-
-    `watermark_past` (ISO-ish 'YYYY-MM-DDTHH:MM:SS...' UTC string): when
-    given, a batch only counts as the flush batch if the query's
-    reported eventTime.watermark has ALSO advanced past it (pass the
-    max staged event time minus the watermark delay). Guards against a
-    zero-input-row DATA batch satisfying the numInputRows==0 predicate
-    before the watermark actually moved. Timeout RAISES rather than
-    silently returning partial append-mode output (advice r5)."""
-    import json as _json
-    import time as _time
-
-    os.makedirs(_TMP_ROOT, exist_ok=True)
-    ckpt = tempfile.mkdtemp(prefix="wmd_ckpt_", dir=_TMP_ROOT)
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        deadline = _time.time() + timeout_s
-        done = False
-        while _time.time() < deadline and not done:
-            for pr in q.recentProgress:
-                d = pr if isinstance(pr, dict) else _json.loads(pr.json)
-                if not (d.get("batchId", 0) >= 1
-                        and d.get("numInputRows") == 0):
-                    continue
-                if watermark_past is not None:
-                    wm = (d.get("eventTime") or {}).get("watermark", "")
-                    # both sides normalized to 'YYYY-MM-DDTHH:MM:SS'
-                    # prefix — lexicographic compare == chronological
-                    if not wm or wm[:19] <= watermark_past[:19]:
-                        continue
-                done = True  # the flush batch committed
-            if not done:
-                _time.sleep(0.3)
-        q.stop()
-        q.awaitTermination()
-        if not done:
-            raise TimeoutError(
-                f"{name}: no watermark-flush batch within {timeout_s}s "
-                f"(required watermark past {watermark_past!r}) — "
-                "append-mode output would be incomplete")
-    finally:
-        if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            try:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            except Exception:
-                pass
         shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(name)
 
 
 def _q24_stream_tumbling(spark, sf: str) -> DataFrame:
@@ -764,8 +749,7 @@ def _q24_stream_tumbling(spark, sf: str) -> DataFrame:
     append mode emits exactly the windows whose end <= final watermark
     (max event time - 10 min); the DuckDB oracle replays that rule in
     batch SQL (time_bucket == Spark's epoch-aligned tumbling window)."""
-    src, _ = _events_stream(spark, sf)
-    name = "wmd_q24_" + uuid.uuid4().hex[:8]
+    src = _events_stream(spark, sf)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("win"), "event_type")
@@ -776,8 +760,7 @@ def _q24_stream_tumbling(spark, sf: str) -> DataFrame:
             "event_type", "n_events", "avg_value",
         )
     )
-    _run_to_memory(agg, name, "append")
-    return spark.table(name)
+    return _stream_table(agg, "append")
 
 
 def _q25_stateful_best(spark, sf: str) -> DataFrame:
@@ -785,22 +768,18 @@ def _q25_stateful_best(spark, sf: str) -> DataFrame:
     checkpoint-on-improve analog, train_watermarks.py:161-163)."""
     from watermark_detector_spark.streaming.state import track_best
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     kept = src.select(
         F.col("event_type").alias("domain"),
         F.col("value").alias("score"),
         F.col("ts").alias("warc_ts"),
     )
-    name = "wmd_q25_" + uuid.uuid4().hex[:8]
-    _run_to_memory(track_best(kept), name, "update")
     # max over improvement records == global max per key, REGARDLESS of
     # how availableNow splits micro-batches (the batch containing the
     # global max always improves state and emits) — which is what makes
     # this oracle-able as a plain batch max.
-    return spark.sql(
-        f"SELECT domain, round(max(best_score), 6) AS best_score "
-        f"FROM {name} GROUP BY domain"
-    )
+    return _stream_table(track_best(kept), "update").groupBy("domain").agg(
+        F.round(F.max("best_score"), 6).alias("best_score"))
 
 
 def _q26_dedup_stream(spark, sf: str) -> DataFrame:
@@ -810,15 +789,13 @@ def _q26_dedup_stream(spark, sf: str) -> DataFrame:
     Emits the deduped KEY SET — order-insensitive, so the oracle is a
     plain DISTINCT (which event "won" depends on file arrival order and
     is deliberately not part of the contract)."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     dedup = (
         src.withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = "wmd_q26_" + uuid.uuid4().hex[:8]
-    _run_to_memory(dedup, name, "append")
-    return spark.table(name)
+    return _stream_table(dedup, "append")
 
 
 def _q27_multimodal_features(spark, sf: str) -> DataFrame:
@@ -968,12 +945,10 @@ def _q74_stream_pattern(spark, sf: str) -> DataFrame:
     time truncated to ms, minus 30 min)."""
     from watermark_detector_spark.streaming.state import sequence_match_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     pm = sequence_match_stream(src, ["click", "purchase"], max_gap_s=3600,
                                watermark="30 minutes")
-    name = "wmd_q74_" + uuid.uuid4().hex[:8]
-    _run_to_memory(pm, name, "append")
-    return spark.table(name).select(
+    return _stream_table(pm, "append").select(
         "user_id",
         F.date_format("t_first", _TS_FMT_SPARK).alias("first_ts"),
         F.date_format("t_last", _TS_FMT_SPARK).alias("second_ts"),
@@ -990,12 +965,10 @@ def _q75_stream_funnel(spark, sf: str) -> DataFrame:
     filtered event set)."""
     from watermark_detector_spark.streaming.state import funnel_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     fu = funnel_stream(src, ["view", "click", "purchase"], within_s=86400,
                        watermark="30 minutes")
-    name = "wmd_q75_" + uuid.uuid4().hex[:8]
-    _run_to_memory(fu, name, "update")
-    return spark.table(name).groupBy("user_id").agg(
+    return _stream_table(fu, "update").groupBy("user_id").agg(
         F.max("funnel_level").cast("int").alias("funnel_level"),
         F.date_format(F.min("t_start"), _TS_FMT_SPARK).alias("t_start"),
         F.date_format(F.max("t_complete"), _TS_FMT_SPARK).alias("t_complete"),
@@ -1109,12 +1082,10 @@ def _q81_stream_sequence(spark, sf: str) -> DataFrame:
     window SQL as the batch twin (operators/cep.sequence_match)."""
     from watermark_detector_spark.streaming.state import sequence_match_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     sm = sequence_match_stream(src, ["view", "view", "click"],
                                max_gap_s=86400, watermark="30 minutes")
-    name = "wmd_q81_" + uuid.uuid4().hex[:8]
-    _run_to_memory(sm, name, "append")
-    return spark.table(name).select(
+    return _stream_table(sm, "append").select(
         "user_id",
         F.date_format("t_first", _TS_FMT_SPARK).alias("t_first"),
         F.date_format("t_last", _TS_FMT_SPARK).alias("t_last"),
@@ -1157,12 +1128,10 @@ def _q91_stream_sequence_alternation(spark, sf: str) -> DataFrame:
     matches whose last event time < final watermark)."""
     from watermark_detector_spark.streaming.state import sequence_match_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     sm = sequence_match_stream(src, _ALT_STEPS, max_gap_s=86400,
                                watermark="30 minutes")
-    name = "wmd_q91_" + uuid.uuid4().hex[:8]
-    _run_to_memory(sm, name, "append")
-    return spark.table(name).select(
+    return _stream_table(sm, "append").select(
         "user_id",
         F.date_format("t_first", _TS_FMT_SPARK).alias("t_first"),
         F.date_format("t_last", _TS_FMT_SPARK).alias("t_last"),
@@ -1200,12 +1169,10 @@ def _q94_stream_kleene(spark, sf: str) -> DataFrame:
     (max event time ms-floored, minus 30 min)."""
     from watermark_detector_spark.streaming.state import kleene_match_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     km = kleene_match_stream(src, "click", "view", ["purchase", "error"],
                              max_gap_s=86400, watermark="30 minutes")
-    name = "wmd_q94_" + uuid.uuid4().hex[:8]
-    _run_to_memory(km, name, "append")
-    return spark.table(name).select(
+    return _stream_table(km, "append").select(
         "user_id",
         F.date_format("t_first", _TS_FMT_SPARK).alias("t_first"),
         F.date_format("t_last", _TS_FMT_SPARK).alias("t_last"),
@@ -1245,33 +1212,17 @@ def _q96_span_dedup(spark, sf: str) -> DataFrame:
                             line_delim=" a ")
 
 
-_DOCS_STREAM_CACHE: dict[str, tuple[str, object]] = {}
-
-
-def _documents_stream(spark, sf: str):
-    """Replay the documents table as a file stream with a synthetic
-    event time (2025-01-01 + doc_id seconds — deterministic on both
-    engines; the fixture table has no timestamp column). Staged once
-    per (session, sf), cleaned at exit — same caching contract as
-    _events_stream."""
-    key = f"{id(spark)}:{sf}"
-    if key not in _DOCS_STREAM_CACHE:
-        d = _t(spark, sf, "documents").select(
-            "doc_id",
-            (F.to_timestamp(F.lit("2025-01-01 00:00:00"))
-             + F.make_interval(secs=F.col("doc_id").cast("double"))
-             ).alias("ts"),
-            "text",
-        )
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        out = tempfile.mkdtemp(prefix="wmd_docs_stream_", dir=_TMP_ROOT)
-        d.write.mode("overwrite").parquet(os.path.join(out, "data"))
-        _DOCS_STREAM_CACHE[key] = (out, d.schema)
-        import atexit
-
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-    out, schema = _DOCS_STREAM_CACHE[key]
-    return spark.readStream.schema(schema).parquet(os.path.join(out, "data"))
+def _documents_stream(spark, sf: str) -> DataFrame:
+    """The documents table as a file stream with a synthetic event time
+    (2025-01-01 + doc_id seconds — deterministic on both engines; the
+    fixture table has no timestamp column)."""
+    d = _t(spark, sf, "documents").select(
+        "doc_id",
+        (F.to_timestamp(F.lit("2025-01-01 00:00:00"))
+         + F.make_interval(secs=F.col("doc_id").cast("double"))).alias("ts"),
+        "text",
+    )
+    return _file_stream(spark, sf, "wmd_docs_stream_", d)
 
 
 def _q92_stream_neardup_gate(spark, sf: str) -> DataFrame:
@@ -1294,13 +1245,11 @@ def _q92_stream_neardup_gate(spark, sf: str) -> DataFrame:
     with stateful_check_disabled(spark):
         gate = near_dup_gate_stream(src, n_bands=4, n=3,
                                     watermark="1 minute")
-        name = "wmd_q92_" + uuid.uuid4().hex[:8]
-        _run_to_memory(gate, name, "append")
-    return spark.table(name).select(
-        "doc_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts"),
-        "keep", "n_bands",
-    )
+        return _stream_table(gate, "append").select(
+            "doc_id",
+            F.date_format("ts", _TS_FMT_SPARK).alias("ts"),
+            "keep", "n_bands",
+        )
 
 
 def _q83_url_filter(spark, sf: str) -> DataFrame:
@@ -1367,9 +1316,7 @@ def _q85_warcish_stream(spark, sf: str) -> DataFrame:
     watermark + tumbling window over warc_ts. Same append emission rule
     as q24 (windows with end <= final watermark, max event time - 1
     min), replayed by the oracle from the parquet originals."""
-    _warcish_stage(spark, sf)  # also registers the source
-    src = (spark.readStream.format("warcish")
-           .load(_WARCISH_STAGE_CACHE[f"{id(spark)}:{sf}"]))
+    src = spark.readStream.format("warcish").load(_warcish_stage(spark, sf))
     agg = (
         src.withWatermark("warc_ts", "1 minute")
         .groupBy(F.window("warc_ts", "1 minute").alias("win"))
@@ -1381,7 +1328,6 @@ def _q85_warcish_stream(spark, sf: str) -> DataFrame:
             "n_pages", "total_bytes",
         )
     )
-    name = "wmd_q85_" + uuid.uuid4().hex[:8]
     # flush gate: the final watermark must pass (max warc_ts - the 1min
     # delay - 1s slack) before the run counts as complete — a zero-row
     # DATA batch can no longer masquerade as the flush batch
@@ -1398,9 +1344,7 @@ def _q85_warcish_stream(spark, sf: str) -> DataFrame:
     _sess_tz = spark.conf.get("spark.sql.session.timeZone")
     _wm_past = (max_ts.replace(tzinfo=_Zone(_sess_tz))
                 .astimezone(_timezone.utc).replace(tzinfo=None))
-    _run_to_memory_flush(agg, name, "append",
-                         watermark_past=_wm_past.isoformat())
-    return spark.table(name)
+    return _stream_table(agg, "append", watermark_past=_wm_past.isoformat())
 
 
 def _q88_stream_quality_gate(spark, sf: str) -> DataFrame:
@@ -1417,9 +1361,7 @@ def _q88_stream_quality_gate(spark, sf: str) -> DataFrame:
         token_count,
     )
 
-    _warcish_stage(spark, sf)  # registers the source + stages files
-    src = (spark.readStream.format("warcish")
-           .load(_WARCISH_STAGE_CACHE[f"{id(spark)}:{sf}"]))
+    src = spark.readStream.format("warcish").load(_warcish_stage(spark, sf))
     text = F.decode(F.col("html"), "UTF-8")
     gated = src.select(
         "url", "lang",
@@ -1429,38 +1371,36 @@ def _q88_stream_quality_gate(spark, sf: str) -> DataFrame:
                           min_stopwords=1).alias("keep"),
         pii_count(text, "email").alias("n_email"),
     )
-    name = "wmd_q88_" + uuid.uuid4().hex[:8]
-    _run_to_memory(gated, name, "append")
-    return spark.table(name)
-
-
-_SINK_STAGE_CACHE: dict[str, str] = {}
+    return _stream_table(gated, "append")
 
 
 def _sink_stage(spark, sf: str):
-    """Stage the documents table into an exactly-once sink ONCE per
-    (session, sf) — 5 micro-batches (batch b = doc_id % 5 == b) with
-    batches 0 and 1 REPLAYED to prove the idempotent ledger (the
-    replays must be no-ops or q86/q104's counts double). Shared by the
-    time-travel (q86) and incremental-read (q104) queries."""
+    """The documents table committed to an exactly-once sink as 5
+    micro-batches (batch b = doc_id % 5 == b) with batches 0 and 1
+    REPLAYED to prove the idempotent ledger (the replays must be no-ops
+    or q86/q104's counts double). Shared by the time-travel (q86),
+    incremental-read (q104) and streaming-source (q106) queries."""
     from watermark_detector_spark.streaming.sink import ExactlyOnceParquetSink
 
-    key = f"{id(spark)}:{sf}"
-    if key not in _SINK_STAGE_CACHE:
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="wmd_sink_tt_", dir=_TMP_ROOT)
+    def build(root):
         sink = ExactlyOnceParquetSink(root, output_partitions=2)
         d = _t(spark, sf, "documents")
-        for b in range(5):
+        for b in (0, 1, 2, 3, 4, 0, 1):  # 0, 1 again: no-ops by ledger
             sink.write_batch(d.where(F.col("doc_id") % 5 == b), b)
-        for b in (0, 1):  # replay: exactly-once no-op by ledger
-            sink.write_batch(d.where(F.col("doc_id") % 5 == b), b)
-        _SINK_STAGE_CACHE[key] = root
-        import atexit
+        return sink
 
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return ExactlyOnceParquetSink(_SINK_STAGE_CACHE[key],
-                                  output_partitions=2)
+    return _staged(spark, sf, "wmd_sink_tt_", build)
+
+
+def _lang_summary(df: DataFrame) -> DataFrame:
+    """Per-lang n_docs / sum_chars / min_id / max_id — the aggregate
+    every sink read-back query (q86, q104, q106, q115, q124) returns."""
+    return df.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("sum_chars"),
+        F.min("doc_id").alias("min_id"),
+        F.max("doc_id").alias("max_id"),
+    )
 
 
 def _q86_sink_time_travel(spark, sf: str) -> DataFrame:
@@ -1472,14 +1412,7 @@ def _q86_sink_time_travel(spark, sf: str) -> DataFrame:
     batch 2 and aggregated. The oracle replays the snapshot predicate
     (doc_id % 5 <= 2) against the raw table — commit lineage, replay
     dedup and the snapshot cut all enter the hash."""
-    sink = _sink_stage(spark, sf)
-    snap = sink.read(spark, as_of_batch=2)
-    return snap.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    return _lang_summary(_sink_stage(spark, sf).read(spark, as_of_batch=2))
 
 
 def _q87_stratified_sample(spark, sf: str) -> DataFrame:
@@ -1613,7 +1546,7 @@ def _q69_stream_update_mode(spark, sf: str) -> DataFrame:
     window equals the plain batch aggregation with NO emission filter —
     the semantic difference from append (which withholds windows the
     watermark hasn't finalized) made oracle-visible."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("win"), "event_type")
@@ -1623,13 +1556,9 @@ def _q69_stream_update_mode(spark, sf: str) -> DataFrame:
             "event_type", "n_events",
         )
     )
-    name = "wmd_q69_" + uuid.uuid4().hex[:8]
-    _run_to_memory(agg, name, "update")
     # latest emission per (window, type) is the final count
-    return spark.sql(f"""
-        SELECT window_start, event_type, max(n_events) AS n_events
-        FROM {name} GROUP BY window_start, event_type
-    """)
+    return _stream_table(agg, "update").groupBy(
+        "window_start", "event_type").agg(F.max("n_events").alias("n_events"))
 
 
 def _q58_ivf_topk(spark, sf: str) -> DataFrame:
@@ -1729,8 +1658,7 @@ def _q48_stream_sliding(spark, sf: str) -> DataFrame:
     """Streaming SLIDING window agg (15 min window / 5 min slide) with
     watermark, append mode. Oracle: every event belongs to exactly 3
     slides; emission rule = window end <= final watermark."""
-    src, _ = _events_stream(spark, sf)
-    name = "wmd_q48_" + uuid.uuid4().hex[:8]
+    src = _events_stream(spark, sf)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes", "5 minutes").alias("win"), "event_type")
@@ -1741,8 +1669,7 @@ def _q48_stream_sliding(spark, sf: str) -> DataFrame:
             "event_type", "n_events", "sum_value",
         )
     )
-    _run_to_memory(agg, name, "append")
-    return spark.table(name)
+    return _stream_table(agg, "append")
 
 
 def _q49_stream_stream_join(spark, sf: str) -> DataFrame:
@@ -1753,9 +1680,7 @@ def _q49_stream_stream_join(spark, sf: str) -> DataFrame:
     joined = _err_click_interval_join(spark, sf, "inner").select(
         "err_id", "click_id", F.col("err_user").alias("user_id")
     )
-    name = "wmd_q49_" + uuid.uuid4().hex[:8]
-    _run_to_memory(joined, name, "append")
-    return spark.table(name)
+    return _stream_table(joined, "append")
 
 
 def _q56_stream_static_join(spark, sf: str) -> DataFrame:
@@ -1763,7 +1688,7 @@ def _q56_stream_static_join(spark, sf: str) -> DataFrame:
     (broadcastable) dimension table derived deterministically from the
     event types — per-type weighted sums. Single availableNow batch ⇒
     the batch join is the exact oracle."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     dim = spark.createDataFrame(
         [("click", 1.0), ("view", 0.5), ("purchase", 10.0),
          ("error", -2.0), ("signup", 5.0)],
@@ -1776,9 +1701,7 @@ def _q56_stream_static_join(spark, sf: str) -> DataFrame:
              .alias("weighted_sum"),
              F.count(F.lit(1)).alias("n"))
     )
-    name = "wmd_q56_" + uuid.uuid4().hex[:8]
-    _run_to_memory(joined, name, "complete")
-    return spark.table(name)
+    return _stream_table(joined, "complete")
 
 
 def _q60_stream_anti_join(spark, sf: str) -> DataFrame:
@@ -1788,7 +1711,7 @@ def _q60_stream_anti_join(spark, sf: str) -> DataFrame:
     stream side keeps only events from OTHER users, then aggregates.
     Single availableNow batch ⇒ the batch anti join is the exact
     oracle."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     heavy = (
         _t(spark, sf, "events").groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1802,9 +1725,7 @@ def _q60_stream_anti_join(spark, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 4).alias("sum_value"),
     )
-    name = "wmd_q60_" + uuid.uuid4().hex[:8]
-    _run_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return _stream_table(agg, "complete")
 
 
 def _err_click_interval_join(spark, sf: str, how: str) -> DataFrame:
@@ -1815,7 +1736,7 @@ def _err_click_interval_join(spark, sf: str, how: str) -> DataFrame:
     expiry rules in the q62/q66 oracles depend on exactly these
     constants — this single definition is what keeps the four copies
     (two queries, two oracles) from drifting apart."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     errors = (
         src.where(F.col("event_type") == "error")
         .select(F.col("event_id").alias("err_id"), F.col("user_id").alias("err_user"),
@@ -1867,9 +1788,7 @@ def _q62_stream_stream_left_outer(spark, sf: str) -> DataFrame:
     joined = _err_click_interval_join(spark, sf, "left_outer").select(
         "err_id", "click_id", F.col("err_user").alias("user_id")
     )
-    name = "wmd_q62_" + uuid.uuid4().hex[:8]
-    _run_to_memory(joined, name, "append")
-    return spark.table(name)
+    return _stream_table(joined, "append")
 
 
 def _q66_stream_stream_full_outer(spark, sf: str) -> DataFrame:
@@ -1883,9 +1802,7 @@ def _q66_stream_stream_full_outer(spark, sf: str) -> DataFrame:
     joined = _err_click_interval_join(spark, sf, "full_outer").select(
         "err_id", "click_id"
     )
-    name = "wmd_q66_" + uuid.uuid4().hex[:8]
-    _run_to_memory(joined, name, "append")
-    return spark.table(name)
+    return _stream_table(joined, "append")
 
 
 def _q61_chained_stream_aggs(spark, sf: str) -> DataFrame:
@@ -1895,7 +1812,7 @@ def _q61_chained_stream_aggs(spark, sf: str) -> DataFrame:
     the same event-time watermark. Oracle: replay both levels in batch
     SQL; emission = hour windows whose end <= final watermark (all their
     inner windows are then finalized too)."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     inner = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w5"), "event_type")
@@ -1909,9 +1826,7 @@ def _q61_chained_stream_aggs(spark, sf: str) -> DataFrame:
             "event_type", "max_n5", "n_windows",
         )
     )
-    name = "wmd_q61_" + uuid.uuid4().hex[:8]
-    _run_to_memory(outer, name, "append")
-    return spark.table(name)
+    return _stream_table(outer, "append")
 
 
 def _q57_grouping_sets(spark, sf: str) -> DataFrame:
@@ -1932,7 +1847,7 @@ def _q50_stream_session_window(spark, sf: str) -> DataFrame:
     watermark, append mode — emitted sessions are those whose end
     (last event + gap) <= final watermark; the oracle replays gap
     sessionization + that emission rule in batch SQL."""
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -1944,9 +1859,7 @@ def _q50_stream_session_window(spark, sf: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "wmd_q50_" + uuid.uuid4().hex[:8]
-    _run_to_memory(agg, name, "append")
-    return spark.table(name)
+    return _stream_table(agg, "append")
 
 
 def _q97_range_join(spark, sf: str) -> DataFrame:
@@ -1986,7 +1899,7 @@ def _q98_decontaminate_bloom(spark, sf: str) -> DataFrame:
     corpus fingerprints are gated SCAN-SIDE, so only bloom positives
     reach the exact confirming broadcast join — the corpus side never
     shuffles its fingerprints. No false negatives, so the result is
-    IDENTICAL to q71 (same oracle SQL, replayed verbatim)."""
+    IDENTICAL to q71 (both are oracled by _WINNOW_DECON_SQL)."""
     from watermark_detector_spark.operators.dedup import contaminated_ids_bloom
 
     d = _t(spark, sf, "documents")
@@ -2019,8 +1932,7 @@ def _q101_stream_topk(spark, sf: str) -> DataFrame:
     (window end <= final watermark) + the same row_number cut."""
     from pyspark.sql.window import Window as W
 
-    src, _ = _events_stream(spark, sf)
-    name = "wmd_q101_" + uuid.uuid4().hex[:8]
+    src = _events_stream(spark, sf)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "30 minutes").alias("win"), "event_type")
@@ -2030,11 +1942,10 @@ def _q101_stream_topk(spark, sf: str) -> DataFrame:
             "event_type", "n_events",
         )
     )
-    _run_to_memory(agg, name, "append")
     w = W.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type"))
     return (
-        spark.table(name)
+        _stream_table(agg, "append")
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 2)
     )
@@ -2079,12 +1990,10 @@ def _q103_stream_absence(spark, sf: str) -> DataFrame:
     final watermark (max event time, ms floor, minus 30 min)."""
     from watermark_detector_spark.streaming.state import absence_alert_stream
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     al = absence_alert_stream(src, "click", "purchase", within_s=3600,
                               watermark="30 minutes")
-    name = "wmd_q103_" + uuid.uuid4().hex[:8]
-    _run_to_memory(al, name, "append")
-    return spark.table(name).select(
+    return _stream_table(al, "append").select(
         "user_id",
         F.date_format("a_ts", _TS_FMT_SPARK).alias("a_ts"),
         "a_id",
@@ -2241,7 +2150,7 @@ def _q125_stream_salted_window(spark, sf: str) -> DataFrame:
         salted_windowed_stream_agg,
     )
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     agg = salted_windowed_stream_agg(
         src, time_col="ts", key_col="event_type", value_col="value",
         window="5 minutes", delay="10 minutes", k=16,
@@ -2250,12 +2159,7 @@ def _q125_stream_salted_window(spark, sf: str) -> DataFrame:
         F.date_format(F.col("win.start"), _TS_FMT_SPARK).alias("window_start"),
         "event_type", "n_events", "sum_value",
     )
-    name = "wmd_q125_" + uuid.uuid4().hex[:8]
-    _run_to_memory(agg, name, "append")
-    return spark.table(name)
-
-
-_ANN_STAGE_CACHE: dict[str, str] = {}
+    return _stream_table(agg, "append")
 
 
 def _q127_ann_index(spark, sf: str) -> DataFrame:
@@ -2272,10 +2176,7 @@ def _q127_ann_index(spark, sf: str) -> DataFrame:
     path. Staged once per (session, sf): ingest mutates the index."""
     from watermark_detector_spark.functions.similarity import AnnIndex
 
-    key = f"{id(spark)}:{sf}"
-    if key not in _ANN_STAGE_CACHE:
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="wmd_ann_", dir=_TMP_ROOT)
+    def build(root):
         e = _t(spark, sf, "embeddings")
         idx = AnnIndex(os.path.join(root, "index"), dim=64, n_cells=4,
                        m=8, ksub=16, n_iters=2)
@@ -2284,14 +2185,9 @@ def _q127_ann_index(spark, sf: str) -> DataFrame:
         out = os.path.join(root, "topk")
         idx.topk(e.where(F.col("vec_id") < 10), e, k=3, nprobe=4,
                  rerank=None).write.parquet(out)
-        _ANN_STAGE_CACHE[key] = out
-        import atexit
+        return out
 
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return spark.read.parquet(_ANN_STAGE_CACHE[key])
-
-
-_CDC_STAGE_CACHE: dict[str, str] = {}
+    return spark.read.parquet(_staged(spark, sf, "wmd_ann_", build))
 
 
 def _q124_upsert_cdc_chain(spark, sf: str) -> DataFrame:
@@ -2312,23 +2208,11 @@ def _q124_upsert_cdc_chain(spark, sf: str) -> DataFrame:
     from watermark_detector_spark.sources.sink_stream import mirror_upsert
     from watermark_detector_spark.streaming.sink import UpsertSink
 
-    key = f"{id(spark)}:{sf}"
-    if key not in _CDC_STAGE_CACHE:
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="wmd_cdc_", dir=_TMP_ROOT)
+    def build(root):
         up = UpsertSink(os.path.join(root, "up"), key_cols=["doc_id"],
                         order_col="ver", tombstone_col="_deleted",
                         output_partitions=2)
-        d = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-        base = d.withColumn("ver", F.lit(0)).withColumn(
-            "_deleted", F.lit(False))
-        upd = (d.where(F.col("doc_id") % 3 == 0)
-               .withColumn("n_chars", F.col("n_chars") + 1000)
-               .withColumn("ver", F.lit(1))
-               .withColumn("_deleted", F.lit(False)))
-        dele = (d.where(F.col("doc_id") % 7 == 0)
-                .withColumn("ver", F.lit(2))
-                .withColumn("_deleted", F.lit(True)))
+        base, upd, dele = _upsert_history(_t(spark, sf, "documents"))
         up.write_batch(base, 0)
         up.write_batch(upd, 1)
         up.write_batch(upd.withColumn("n_chars", F.lit(-1)), 1)  # replay
@@ -2337,20 +2221,12 @@ def _q124_upsert_cdc_chain(spark, sf: str) -> DataFrame:
         mirror_upsert(spark, up, dst_root, ckpt)   # catches up 0-1
         up.write_batch(dele, 2)                    # new commit after run 1
         mirror_upsert(spark, up, dst_root, ckpt)   # resumes: batch 2 only
-        _CDC_STAGE_CACHE[key] = root
-        import atexit
+        return UpsertSink(dst_root, key_cols=["doc_id"],
+                          order_col="_src_ord", tombstone_col="_deleted",
+                          output_partitions=2)
 
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    root = _CDC_STAGE_CACHE[key]
-    mirror = UpsertSink(os.path.join(root, "mirror"), key_cols=["doc_id"],
-                        order_col="_src_ord", tombstone_col="_deleted",
-                        output_partitions=2)
-    return mirror.read_current(spark).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    mirror = _staged(spark, sf, "wmd_cdc_", build)
+    return _lang_summary(mirror.read_current(spark))
 
 
 def _q123_ivfpq_topk(spark, sf: str) -> DataFrame:
@@ -2371,9 +2247,6 @@ def _q123_ivfpq_topk(spark, sf: str) -> DataFrame:
                       n_iters=2, rerank=None, n_queries=10)
 
 
-_NDI_STAGE_CACHE: dict[str, str] = {}
-
-
 def _q122_neardup_index(spark, sf: str) -> DataFrame:
     """PERSISTED standing-corpus near-dup index (operators/dedup
     .NearDupIndex): the corpus (doc_id % 5 >= 2) signature table is
@@ -2389,10 +2262,7 @@ def _q122_neardup_index(spark, sf: str) -> DataFrame:
     the index, so re-running the pipeline would probe a grown index."""
     from watermark_detector_spark.operators.dedup import NearDupIndex
 
-    key = f"{id(spark)}:{sf}"
-    if key not in _NDI_STAGE_CACHE:
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="wmd_ndi_", dir=_TMP_ROOT)
+    def build(root):
         idx = NearDupIndex(os.path.join(root, "index"), threshold=0.5,
                            output_partitions=2)
         d = _t(spark, sf, "documents")
@@ -2410,11 +2280,9 @@ def _q122_neardup_index(spark, sf: str) -> DataFrame:
          .unionByName(r2.withColumn("ingest_batch", F.lit(2)))
          .write.parquet(out))
         del r1, r2
-        _NDI_STAGE_CACHE[key] = out
-        import atexit
+        return out
 
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return spark.read.parquet(_NDI_STAGE_CACHE[key])
+    return spark.read.parquet(_staged(spark, sf, "wmd_ndi_", build))
 
 
 def _q113_group_split(spark, sf: str) -> DataFrame:
@@ -2481,14 +2349,7 @@ def _q106_sink_stream(spark, sf: str) -> DataFrame:
     src = spark.readStream.format("wmsink").load(sink.root)
     gated = src.where(F.col("n_chars") >= 200).select(
         "doc_id", "lang", "n_chars")
-    name = "wmd_q106_" + uuid.uuid4().hex[:8]
-    _run_to_memory(gated, name, "append")
-    return spark.table(name).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    return _lang_summary(_stream_table(gated, "append"))
 
 
 def _q104_sink_incremental(spark, sf: str) -> DataFrame:
@@ -2498,58 +2359,48 @@ def _q104_sink_incremental(spark, sf: str) -> DataFrame:
     consumer that last saw batch 1 catching up through batch 3. The
     oracle replays the delta predicate (doc_id % 5 IN (2, 3)); replay
     dedup and the window arithmetic both enter the hash."""
-    delta = _sink_stage(spark, sf).read_changes(
-        spark, since_batch=1, as_of_batch=3)
-    return delta.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    return _lang_summary(_sink_stage(spark, sf).read_changes(
+        spark, since_batch=1, as_of_batch=3))
 
 
-_UPSERT_STAGE_CACHE: dict[str, str] = {}
+def _upsert_history(docs: DataFrame):
+    """The (insert, update, tombstone) batches of the upsert queries
+    (q115, q124) over ``docs``: every doc at ver 0, docs with
+    doc_id%3==0 UPDATED to n_chars+1000 at ver 1, docs with doc_id%7==0
+    DELETED at ver 2."""
+    d = docs.select("doc_id", "lang", "n_chars")
+    base = d.withColumn("ver", F.lit(0)).withColumn("_deleted", F.lit(False))
+    upd = (d.where(F.col("doc_id") % 3 == 0)
+           .withColumn("n_chars", F.col("n_chars") + 1000)
+           .withColumn("ver", F.lit(1))
+           .withColumn("_deleted", F.lit(False)))
+    dele = (d.where(F.col("doc_id") % 7 == 0)
+            .withColumn("ver", F.lit(2))
+            .withColumn("_deleted", F.lit(True)))
+    return base, upd, dele
 
 
 def _upsert_stage(spark, sf: str):
-    """Stage the documents table as an UPSERT ledger ONCE per
-    (session, sf): batch 0 inserts every doc, batch 1 UPDATES docs with
-    doc_id%3==0 (n_chars+1000), batch 2 DELETES docs with doc_id%7==0
-    (tombstones), batch 1 is REPLAYED (must be an exactly-once no-op or
-    the updated rows lose last-writer-wins), then the whole history is
-    merge-compacted (copy-on-write fold) and vacuumed so the read under
-    test is the materialized fast path."""
+    """The documents table as an UPSERT ledger: the _upsert_history
+    batches 0, 1, 2, then batch 1 REPLAYED (must be an exactly-once
+    no-op or the updated rows lose last-writer-wins), then the whole
+    history merge-compacted (copy-on-write fold) and vacuumed so the
+    read under test is the materialized fast path."""
     from watermark_detector_spark.streaming.sink import UpsertSink
 
-    key = f"{id(spark)}:{sf}"
-    if key not in _UPSERT_STAGE_CACHE:
-        os.makedirs(_TMP_ROOT, exist_ok=True)
-        root = tempfile.mkdtemp(prefix="wmd_sink_up_", dir=_TMP_ROOT)
+    def build(root):
         sink = UpsertSink(root, key_cols=["doc_id"], order_col="ver",
                           tombstone_col="_deleted", output_partitions=2)
-        d = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-        base = d.withColumn("ver", F.lit(0)).withColumn(
-            "_deleted", F.lit(False))
-        upd = (d.where(F.col("doc_id") % 3 == 0)
-               .withColumn("n_chars", F.col("n_chars") + 1000)
-               .withColumn("ver", F.lit(1))
-               .withColumn("_deleted", F.lit(False)))
-        dele = (d.where(F.col("doc_id") % 7 == 0)
-                .withColumn("ver", F.lit(2))
-                .withColumn("_deleted", F.lit(True)))
+        base, upd, dele = _upsert_history(_t(spark, sf, "documents"))
         sink.write_batch(base, 0)
         sink.write_batch(upd, 1)
         sink.write_batch(dele, 2)
         sink.write_batch(upd.withColumn("n_chars", F.lit(-1)), 1)  # replay
         sink.compact_merge(spark, vacuum=False)
         sink.vacuum(retention_s=0)
-        _UPSERT_STAGE_CACHE[key] = root
-        import atexit
+        return sink
 
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return UpsertSink(_UPSERT_STAGE_CACHE[key], key_cols=["doc_id"],
-                      order_col="ver", tombstone_col="_deleted",
-                      output_partitions=2)
+    return _staged(spark, sf, "wmd_sink_up_", build)
 
 
 def _q115_upsert_merge(spark, sf: str) -> DataFrame:
@@ -2562,13 +2413,7 @@ def _q115_upsert_merge(spark, sf: str) -> DataFrame:
     the final state row-for-row: last-writer-wins per doc_id with the
     delete filter. Ledger idempotence, LWW resolution, tombstone
     semantics and the merge fold all enter the hash."""
-    cur = _upsert_stage(spark, sf).read_current(spark)
-    return cur.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id"),
-    )
+    return _lang_summary(_upsert_stage(spark, sf).read_current(spark))
 
 
 _PR_MOD, _PR_ITERS, _PR_DAMP = 16, 5, 0.85
@@ -2690,7 +2535,7 @@ def _q118_stream_hll(spark, sf: str) -> DataFrame:
         hll_estimate_col,
     )
 
-    src, _ = _events_stream(spark, sf)
+    src = _events_stream(spark, sf)
     bucket, rho = hll_bucket_rho(F.col("user_id"), p=8)
     regs = (
         src.withWatermark("ts", "10 minutes")
@@ -2712,9 +2557,7 @@ def _q118_stream_hll(spark, sf: str) -> DataFrame:
                 "est_users"),
         )
     )
-    name = "wmd_q118_" + uuid.uuid4().hex[:8]
-    _run_to_memory(est, name, "append")
-    return spark.table(name)
+    return _stream_table(est, "append")
 
 
 def _q118_sql() -> str:
@@ -2839,9 +2682,7 @@ def _q121_stream_bloom_decon(spark, sf: str) -> DataFrame:
     gated = (bloom_probe_join(src, bits, F.col("text"))
              .where(~F.col("in_bloom"))
              .select("doc_id"))
-    name = "wmd_q121_" + uuid.uuid4().hex[:8]
-    _run_to_memory(gated, name, "append")
-    return spark.table(name)
+    return _stream_table(gated, "append")
 
 
 def _q121_sql() -> str:
@@ -3192,24 +3033,33 @@ def _simhash_sql(n_bits: int = 16) -> str:
     """
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
-        "q97_range_join": """
-            WITH iv AS (
-              SELECT event_id AS iv_id, ts AS s,
-                     ts + INTERVAL 4 HOUR AS e
-              FROM events
-              WHERE event_type = 'signup' AND user_id = 7),
-            p AS (SELECT * FROM events WHERE event_type = 'error')
-            SELECT iv_id, CAST(count(*) AS BIGINT) AS n_errors,
-                   round(sum(p.value), 4) AS sum_value
-            FROM p JOIN iv ON p.ts >= iv.s AND p.ts < iv.e
-            GROUP BY iv_id
-        """,
-        # q98 = q71's exact result reached through the Bloom pre-gate
-        # (no false negatives + exact confirm join) — oracle replayed
-        # verbatim from q71.
-        "q98_decontaminate_bloom": """
+# brute-force cosine top-3 for the first 10 vectors: the oracle of q21
+# and of every ANN query run in its exact mode (q58, q123, q127)
+_BRUTE_TOPK_SQL = """
+            WITH n AS (
+              SELECT vec_id, embedding,
+                     sqrt(list_sum(list_transform(embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+              FROM embeddings),
+            scored AS (
+              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                     list_sum(list_transform(range(1, len(q.embedding) + 1),
+                       i -> CAST(q.embedding[i] AS DOUBLE)
+                          * CAST(c.embedding[i] AS DOUBLE))) / (q.nrm * c.nrm) AS cos
+              FROM n q JOIN n c ON q.vec_id != c.vec_id
+              WHERE q.vec_id < 10)
+            SELECT query_id, neighbor_id,
+                   CAST(row_number() OVER (PARTITION BY query_id
+                        ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
+                   round(cos, 4) AS cosine
+            FROM scored
+            QUALIFY rank <= 3
+        """
+
+# q71's decontamination: q55's winnow CTE on both sides of the holdout
+# split + an IN semi-join (q98 reaches the same set through its Bloom
+# pre-gate)
+_WINNOW_DECON_SQL = """
             WITH toks AS (
               SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
               FROM documents),
@@ -3233,7 +3083,122 @@ def oracle_sql() -> dict[str, str]:
             FROM fps
             WHERE doc_id % 7 != 3 AND fp IN (SELECT fp FROM hold)
             GROUP BY doc_id
+        """
+
+# the _upsert_history final state, last-writer-wins with the delete
+# filter: q115 reads it merged, q124 through its CDC mirror
+_UPSERT_LWW_SQL = """
+            SELECT lang,
+                   count(*) AS n_docs,
+                   CAST(sum(CASE WHEN doc_id % 3 = 0
+                                 THEN n_chars + 1000
+                                 ELSE n_chars END) AS BIGINT) AS sum_chars,
+                   min(doc_id) AS min_id,
+                   max(doc_id) AS max_id
+            FROM documents
+            WHERE doc_id % 7 <> 0
+            GROUP BY lang
+        """
+
+
+def _lang_summary_sql(where: str) -> str:
+    """_lang_summary over the documents rows matching ``where`` (the
+    sink queries' snapshot / delta / gate predicate)."""
+    return f"""
+            SELECT lang,
+                   count(*) AS n_docs,
+                   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+                   min(doc_id) AS min_id,
+                   max(doc_id) AS max_id
+            FROM documents
+            WHERE {where}
+            GROUP BY lang
+        """
+
+
+def _tumbling5_sql(fn: str) -> str:
+    """5-minute tumbling count + round(``fn``(value), 4) per event type,
+    emitted by q24's append rule (window end <= max event time - 10 min)."""
+    return f"""
+            WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
+            agg AS (
+              SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS ws, event_type,
+                     CAST(count(*) AS BIGINT) AS n_events,
+                     round({fn}(value), 4) AS {fn}_value
+              FROM events GROUP BY 1, 2)
+            SELECT strftime(ws, '{_TS_FMT_DUCK}') AS window_start,
+                   event_type, n_events, {fn}_value
+            FROM agg, wm WHERE ws + INTERVAL 5 MINUTE <= wm.w
+        """
+
+
+# the three-step CEP patterns as predicates over an event and its two
+# lead()s (ty1, ty2): q81/q82's PATTERN(view view click) and q90/q91's
+# PATTERN((view|click) (view|click) (purchase|signup))
+_VVC_PREDS_SQL = "event_type = 'view' AND ty1 = 'view' AND ty2 = 'click'"
+_ALT_PREDS_SQL = ("event_type IN ('view', 'click') AND ty1 IN ('view', 'click')"
+                  " AND ty2 IN ('purchase', 'signup')")
+_SEQ3_LEADS_SQL = """
+            l AS (
+              SELECT user_id, ts, event_type, event_id,
+                     lead(event_type, 1) OVER w AS ty1,
+                     lead(ts, 1) OVER w AS ts1,
+                     lead(event_type, 2) OVER w AS ty2,
+                     lead(ts, 2) OVER w AS ts2
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))"""
+
+
+def _seq3_sql(type_preds: str) -> str:
+    """Batch strict-contiguity 3-step match, 24 h max gap per step."""
+    return f"""
+            WITH {_SEQ3_LEADS_SQL}
+            SELECT user_id, ts AS t_first, ts2 AS t_last,
+                   event_id AS first_id
+            FROM l
+            WHERE {type_preds}
+              AND ts1 <= ts + INTERVAL 86400 SECOND
+              AND ts2 <= ts1 + INTERVAL 86400 SECOND
+        """
+
+
+def _seq3_stream_sql(type_preds: str) -> str:
+    """_seq3_sql's streaming emission rule: matches whose last event
+    time < final watermark (max event time ms-floored, minus 30 min)."""
+    return f"""
+            WITH wm AS (
+              SELECT (epoch_us(max(ts)) // 1000 - 1800000) * 1000 AS wm_us
+              FROM events),
+            {_SEQ3_LEADS_SQL}
+            SELECT user_id,
+                   strftime(ts, '{_TS_FMT_DUCK}') AS t_first,
+                   strftime(ts2, '{_TS_FMT_DUCK}') AS t_last,
+                   event_id AS first_id
+            FROM l, wm
+            WHERE {type_preds}
+              AND ts1 <= ts + INTERVAL 86400 SECOND
+              AND ts2 <= ts1 + INTERVAL 86400 SECOND
+              AND epoch_us(ts2) < wm.wm_us
+        """
+
+
+def oracle_sql() -> dict[str, str]:
+    return {
+        "q97_range_join": """
+            WITH iv AS (
+              SELECT event_id AS iv_id, ts AS s,
+                     ts + INTERVAL 4 HOUR AS e
+              FROM events
+              WHERE event_type = 'signup' AND user_id = 7),
+            p AS (SELECT * FROM events WHERE event_type = 'error')
+            SELECT iv_id, CAST(count(*) AS BIGINT) AS n_errors,
+                   round(sum(p.value), 4) AS sum_value
+            FROM p JOIN iv ON p.ts >= iv.s AND p.ts < iv.e
+            GROUP BY iv_id
         """,
+        # q98 = q71's exact result reached through the Bloom pre-gate
+        # (no false negatives + exact confirm join) — q71's oracle
+        "q98_decontaminate_bloom": _WINNOW_DECON_SQL,
         "q99_lm_quality": r"""
             WITH toks AS (
               SELECT doc_id,
@@ -3356,48 +3321,17 @@ def oracle_sql() -> dict[str, str]:
                    min(doc_id) AS keeper_id
             FROM canon GROUP BY canonical_url
         """,
-        "q115_upsert_merge": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   CAST(sum(CASE WHEN doc_id % 3 = 0
-                                 THEN n_chars + 1000
-                                 ELSE n_chars END) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id,
-                   max(doc_id) AS max_id
-            FROM documents
-            WHERE doc_id % 7 <> 0
-            GROUP BY lang
-        """,
+        "q115_upsert_merge": _UPSERT_LWW_SQL,
         # q124: the mirror's resolved state == the upstream's resolved
         # state == q115's LWW replay (same history, minus the merge)
-        "q124_upsert_cdc_chain": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   CAST(sum(CASE WHEN doc_id % 3 = 0
-                                 THEN n_chars + 1000
-                                 ELSE n_chars END) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id,
-                   max(doc_id) AS max_id
-            FROM documents
-            WHERE doc_id % 7 <> 0
-            GROUP BY lang
-        """,
+        "q124_upsert_cdc_chain": _UPSERT_LWW_SQL,
         "q116_pagerank": _pagerank_sql(),
         "q117_hll_distinct": _q117_sql(),
         "q118_stream_hll": _q118_sql(),
         "q119_cms_frequencies": _q119_sql(),
         "q120_bloom_membership": _q120_sql(),
         "q121_stream_bloom_decon": _q121_sql(),
-        "q104_sink_incremental": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id,
-                   max(doc_id) AS max_id
-            FROM documents
-            WHERE doc_id % 5 IN (2, 3)
-            GROUP BY lang
-        """,
+        "q104_sink_incremental": _lang_summary_sql("doc_id % 5 IN (2, 3)"),
         "q100_pack_sequences": r"""
             WITH RECURSIVE ord AS (
               SELECT doc_id, doc_id % 8 AS shard,
@@ -3600,26 +3534,7 @@ def oracle_sql() -> dict[str, str]:
                            * CAST(b.embedding[i] AS DOUBLE)))
                         / (a.nrm * b.nrm), 4) >= 0.45
         """,
-        "q21_ann_topk": """
-            WITH n AS (
-              SELECT vec_id, embedding,
-                     sqrt(list_sum(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-              FROM embeddings),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     list_sum(list_transform(range(1, len(q.embedding) + 1),
-                       i -> CAST(q.embedding[i] AS DOUBLE)
-                          * CAST(c.embedding[i] AS DOUBLE))) / (q.nrm * c.nrm) AS cos
-              FROM n q JOIN n c ON q.vec_id != c.vec_id
-              WHERE q.vec_id < 10)
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
-                   round(cos, 4) AS cosine
-            FROM scored
-            QUALIFY rank <= 3
-        """,
+        "q21_ann_topk": _BRUTE_TOPK_SQL,
         "q22_lsh_candidates": f"""
             WITH {_SHINGLES_CTE},
             b AS (SELECT doc_id, shingle, unnest(range(0, 4)) AS band FROM sh),
@@ -4167,26 +4082,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(n_chars) AS BIGINT) AS total_chars
             FROM sh GROUP BY 1
         """,
-        "q106_sink_stream": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id,
-                   max(doc_id) AS max_id
-            FROM documents
-            WHERE n_chars >= 200
-            GROUP BY lang
-        """,
-        "q86_sink_time_travel": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-                   min(doc_id) AS min_id,
-                   max(doc_id) AS max_id
-            FROM documents
-            WHERE doc_id % 5 <= 2
-            GROUP BY lang
-        """,
+        "q106_sink_stream": _lang_summary_sql("n_chars >= 200"),
+        "q86_sink_time_travel": _lang_summary_sql("doc_id % 5 <= 2"),
         "q85_warcish_stream": f"""
             WITH pages AS (
               SELECT TIMESTAMP '2025-01-01 00:00:00'
@@ -4260,44 +4157,8 @@ def oracle_sql() -> dict[str, str]:
                     AND NOT contains(lower(url), 'xxx')) AS keep
             FROM f
         """,
-        "q82_sequence_match": """
-            WITH l AS (
-              SELECT user_id, ts, event_type, event_id,
-                     lead(event_type, 1) OVER w AS ty1,
-                     lead(ts, 1) OVER w AS ts1,
-                     lead(event_type, 2) OVER w AS ty2,
-                     lead(ts, 2) OVER w AS ts2
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id, ts AS t_first, ts2 AS t_last,
-                   event_id AS first_id
-            FROM l
-            WHERE event_type = 'view' AND ty1 = 'view' AND ty2 = 'click'
-              AND ts1 <= ts + INTERVAL 86400 SECOND
-              AND ts2 <= ts1 + INTERVAL 86400 SECOND
-        """,
-        "q81_stream_sequence": f"""
-            WITH wm AS (
-              SELECT (epoch_us(max(ts)) // 1000 - 1800000) * 1000 AS wm_us
-              FROM events),
-            l AS (
-              SELECT user_id, ts, event_type, event_id,
-                     lead(event_type, 1) OVER w AS ty1,
-                     lead(ts, 1) OVER w AS ts1,
-                     lead(event_type, 2) OVER w AS ty2,
-                     lead(ts, 2) OVER w AS ts2
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id,
-                   strftime(ts, '{_TS_FMT_DUCK}') AS t_first,
-                   strftime(ts2, '{_TS_FMT_DUCK}') AS t_last,
-                   event_id AS first_id
-            FROM l, wm
-            WHERE event_type = 'view' AND ty1 = 'view' AND ty2 = 'click'
-              AND ts1 <= ts + INTERVAL 86400 SECOND
-              AND ts2 <= ts1 + INTERVAL 86400 SECOND
-              AND epoch_us(ts2) < wm.wm_us
-        """,
+        "q82_sequence_match": _seq3_sql(_VVC_PREDS_SQL),
+        "q81_stream_sequence": _seq3_stream_sql(_VVC_PREDS_SQL),
         "q92_stream_neardup_gate": f"""
             WITH d AS (
               SELECT doc_id,
@@ -4341,48 +4202,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE epoch_us(ts) <= wm.wm_us
             GROUP BY doc_id, ts
         """,
-        "q90_sequence_alternation": """
-            WITH l AS (
-              SELECT user_id, ts, event_type, event_id,
-                     lead(event_type, 1) OVER w AS ty1,
-                     lead(ts, 1) OVER w AS ts1,
-                     lead(event_type, 2) OVER w AS ty2,
-                     lead(ts, 2) OVER w AS ts2
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id, ts AS t_first, ts2 AS t_last,
-                   event_id AS first_id
-            FROM l
-            WHERE event_type IN ('view', 'click')
-              AND ty1 IN ('view', 'click')
-              AND ty2 IN ('purchase', 'signup')
-              AND ts1 <= ts + INTERVAL 86400 SECOND
-              AND ts2 <= ts1 + INTERVAL 86400 SECOND
-        """,
-        "q91_stream_sequence_alternation": f"""
-            WITH wm AS (
-              SELECT (epoch_us(max(ts)) // 1000 - 1800000) * 1000 AS wm_us
-              FROM events),
-            l AS (
-              SELECT user_id, ts, event_type, event_id,
-                     lead(event_type, 1) OVER w AS ty1,
-                     lead(ts, 1) OVER w AS ts1,
-                     lead(event_type, 2) OVER w AS ty2,
-                     lead(ts, 2) OVER w AS ts2
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id,
-                   strftime(ts, '{_TS_FMT_DUCK}') AS t_first,
-                   strftime(ts2, '{_TS_FMT_DUCK}') AS t_last,
-                   event_id AS first_id
-            FROM l, wm
-            WHERE event_type IN ('view', 'click')
-              AND ty1 IN ('view', 'click')
-              AND ty2 IN ('purchase', 'signup')
-              AND ts1 <= ts + INTERVAL 86400 SECOND
-              AND ts2 <= ts1 + INTERVAL 86400 SECOND
-              AND epoch_us(ts2) < wm.wm_us
-        """,
+        "q90_sequence_alternation": _seq3_sql(_ALT_PREDS_SQL),
+        "q91_stream_sequence_alternation": _seq3_stream_sql(_ALT_PREDS_SQL),
         # Kleene RLE replay: a view-run breaks where the previous row is
         # absent / not a view / gap-violating; the break row's lag_* is
         # the A candidate, the run-closing row's lead_* the C candidate.
@@ -4838,31 +4659,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN s3 ON scalar.doc_id = s3.doc_id
             LEFT JOIN s5 ON scalar.doc_id = s5.doc_id
         """,
-        "q71_decontaminate": """
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents),
-            sh AS (
-              SELECT doc_id, unnest(range(1, len(t) - 1)) AS pos1,
-                     len(t) - 2 AS n_sh, t
-              FROM toks WHERE len(t) >= 3),
-            h AS (
-              SELECT doc_id, pos1, n_sh,
-                     md5(t[pos1] || ' ' || t[pos1 + 1] || ' ' || t[pos1 + 2]) AS h
-              FROM sh),
-            wmin AS (
-              SELECT doc_id, pos1, n_sh,
-                     min(h) OVER (PARTITION BY doc_id ORDER BY pos1
-                                  ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-              FROM h),
-            fps AS (SELECT DISTINCT doc_id, fp
-                    FROM wmin WHERE pos1 <= greatest(1, n_sh - 3)),
-            hold AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 7 = 3)
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared_fps
-            FROM fps
-            WHERE doc_id % 7 != 3 AND fp IN (SELECT fp FROM hold)
-            GROUP BY doc_id
-        """,
+        "q71_decontaminate": _WINNOW_DECON_SQL,
         "q53_mad_udaf": """
             WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS m
                          FROM events GROUP BY 1)
@@ -4936,17 +4733,7 @@ def oracle_sql() -> dict[str, str]:
         # q24: append-mode emission rule = windows whose end <= final
         # watermark (max event time - delay); single availableNow batch
         # ⇒ no late drops. time_bucket == Spark's epoch-aligned window.
-        "q24_stream_tumbling": f"""
-            WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
-            agg AS (
-              SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS ws, event_type,
-                     CAST(count(*) AS BIGINT) AS n_events,
-                     round(avg(value), 4) AS avg_value
-              FROM events GROUP BY 1, 2)
-            SELECT strftime(ws, '{_TS_FMT_DUCK}') AS window_start,
-                   event_type, n_events, avg_value
-            FROM agg, wm WHERE ws + INTERVAL 5 MINUTE <= wm.w
-        """,
+        "q24_stream_tumbling": _tumbling5_sql("avg"),
         # q25: max over emitted improvement records == global max per key
         "q25_stateful_best": """
             SELECT event_type AS domain, round(max(value), 6) AS best_score
@@ -4959,17 +4746,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # q125: the salted two-phase streaming agg must equal the plain
         # unsalted tumbling agg — same emission rule as q24
-        "q125_stream_salted_window": f"""
-            WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
-            agg AS (
-              SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS ws, event_type,
-                     CAST(count(*) AS BIGINT) AS n_events,
-                     round(sum(value), 4) AS sum_value
-              FROM events GROUP BY 1, 2)
-            SELECT strftime(ws, '{_TS_FMT_DUCK}') AS window_start,
-                   event_type, n_events, sum_value
-            FROM agg, wm WHERE ws + INTERVAL 5 MINUTE <= wm.w
-        """,
+        "q125_stream_salted_window": _tumbling5_sql("sum"),
         # q48: sliding windows — each event lands in 3 slides; same
         # append-emission rule as q24
         "q48_stream_sliding": f"""
@@ -5213,71 +4990,13 @@ def oracle_sql() -> dict[str, str]:
         # _detect_docs_sql docstring for why this is exact)
         "q28_detect_udf_docs": _detect_docs_sql(),
         # q127: persisted ANN index probed in exact mode over
-        # corpus ∪ ingested batch ⇒ brute-force top-k oracle (q21/q58/
-        # q123's SQL)
-        "q127_ann_index": """
-            WITH n AS (
-              SELECT vec_id, embedding,
-                     sqrt(list_sum(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-              FROM embeddings),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     list_sum(list_transform(range(1, len(q.embedding) + 1),
-                       i -> CAST(q.embedding[i] AS DOUBLE)
-                          * CAST(c.embedding[i] AS DOUBLE))) / (q.nrm * c.nrm) AS cos
-              FROM n q JOIN n c ON q.vec_id != c.vec_id
-              WHERE q.vec_id < 10)
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
-                   round(cos, 4) AS cosine
-            FROM scored
-            QUALIFY rank <= 3
-        """,
+        # corpus ∪ ingested batch ⇒ brute-force top-k oracle
+        "q127_ann_index": _BRUTE_TOPK_SQL,
         # q123: IVF-PQ at nprobe == n_cells with rerank=None (every ADC
         # candidate re-scored exactly against raw vectors) is exact ⇒
-        # brute-force top-k is the oracle (same SQL as q21/q58)
-        "q123_ivfpq_topk": """
-            WITH n AS (
-              SELECT vec_id, embedding,
-                     sqrt(list_sum(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-              FROM embeddings),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     list_sum(list_transform(range(1, len(q.embedding) + 1),
-                       i -> CAST(q.embedding[i] AS DOUBLE)
-                          * CAST(c.embedding[i] AS DOUBLE))) / (q.nrm * c.nrm) AS cos
-              FROM n q JOIN n c ON q.vec_id != c.vec_id
-              WHERE q.vec_id < 10)
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
-                   round(cos, 4) AS cosine
-            FROM scored
-            QUALIFY rank <= 3
-        """,
+        # brute-force top-k is the oracle
+        "q123_ivfpq_topk": _BRUTE_TOPK_SQL,
         # q58: IVF at nprobe == n_cells is exact ANN ⇒ brute-force
-        # top-k is the oracle (same SQL as q21 by construction)
-        "q58_ivf_topk": """
-            WITH n AS (
-              SELECT vec_id, embedding,
-                     sqrt(list_sum(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-              FROM embeddings),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     list_sum(list_transform(range(1, len(q.embedding) + 1),
-                       i -> CAST(q.embedding[i] AS DOUBLE)
-                          * CAST(c.embedding[i] AS DOUBLE))) / (q.nrm * c.nrm) AS cos
-              FROM n q JOIN n c ON q.vec_id != c.vec_id
-              WHERE q.vec_id < 10)
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank,
-                   round(cos, 4) AS cosine
-            FROM scored
-            QUALIFY rank <= 3
-        """,
+        # top-k is the oracle
+        "q58_ivf_topk": _BRUTE_TOPK_SQL,
     }

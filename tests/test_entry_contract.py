@@ -2,6 +2,7 @@
 ``queries()`` entry at sf0.01 and compare against ``oracle_sql()`` via
 DuckDB — row count, column names, and order-insensitive values."""
 
+import glob
 import math
 import os
 import sys
@@ -10,6 +11,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
@@ -74,3 +76,58 @@ def test_every_query_has_an_oracle():
     assert set(QUERIES) == set(ORACLES), (
         set(QUERIES) ^ set(ORACLES)
     )
+
+
+@pytest.mark.parametrize("case", ["set", "unset", "raised"])
+def test_stream_table_restores_shuffle_partitions(spark, case):
+    """The stream runner pins spark.sql.shuffle.partitions for its run
+    and then restores it: the explicit value, or unset again when it was
+    unset (a plain session's state), also when the stream raises."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key, None)
+    try:
+        if case == "unset":
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, "13")
+        want = spark.conf.get(key, None)
+        assert (want is None) == (case == "unset")
+        src = entrymod._events_stream(spark, SF_DIR)
+        if case == "raised":
+            failing = src.select(F.raise_error(F.lit("wmd-boom")))
+            with pytest.raises(Exception, match="wmd-boom"):
+                entrymod._stream_table(failing, "append")
+        else:
+            out = entrymod._stream_table(src.select("event_id"), "append")
+            assert out.count() > 0
+        assert spark.conf.get(key, None) == want
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_sink_stage_once_per_sf(spark):
+    """q86/q104/q106 share one staged exactly-once sink per (session,
+    sf): two rounds of all three at two scale factors leave exactly one
+    wmd_sink_tt_* dir per sf, and every answer matches the oracle over
+    that sf's own documents table."""
+    names = ["q86_sink_time_travel", "q104_sink_incremental",
+             "q106_sink_stream"]
+    sfs = ["/root/testdata/sf0.001", SF_DIR]
+    pattern = os.path.join(entrymod._TMP_ROOT, "wmd_sink_tt_*")
+    before = set(glob.glob(pattern))
+    for sf in sfs:
+        con = duckdb.connect()
+        con.sql("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{os.path.join(sf, 'documents.parquet')}')")
+        for _ in range(2):
+            for name in names:
+                _assert_equal(QUERIES[name](spark, sf).toPandas(),
+                              con.sql(ORACLES[name]).df(), f"{name}@{sf}")
+    roots = {entrymod._sink_stage(spark, sf).root for sf in sfs}
+    after = set(glob.glob(pattern))
+    assert len(roots) == len(sfs)
+    assert roots <= after
+    assert after - before <= roots, after - before - roots

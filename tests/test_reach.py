@@ -1,11 +1,17 @@
 """Reach guard: every module-level name in the package has a reader.
 
 Parses (never imports) each module under ``watermark_detector_spark/``
-and checks that every module-level def, class or constant is loaded by
-name somewhere in the package, ``__spark_entry__.py``, ``jobs/``,
-``bench.py``, ``bench_extra.py`` or ``perfbench/`` — outside its own
-definition. Tests do not count as readers: code that only its own test
-reaches is dead weight. Runs without Spark.
+and checks that every module-level def, class or constant, and every
+method of a package class, is loaded by name somewhere in the package,
+``__spark_entry__.py``, ``jobs/``, ``bench.py``, ``bench_extra.py`` or
+``perfbench/`` — outside its own definition. Tests do not count as
+readers: code that only its own test reaches is dead weight. Runs
+without Spark.
+
+Methods of classes that Spark calls back into are exempt: subclasses of
+the DataSource reader/writer types and ``StreamingQueryListener``, and
+``@udtf`` handlers. Spark reaches those methods by protocol, not by a
+name this check can see.
 
 A load is a ``Name`` read, an attribute access, a name bound by an
 import that is then read under that binding, or a string constant that
@@ -39,6 +45,13 @@ ALLOWED = {
 }
 
 
+# Spark callback base types and the UDTF decorator (see the docstring).
+CALLBACK_BASES = {"DataSource", "DataSourceReader", "DataSourceStreamReader",
+                  "DataSourceWriter", "DataSourceStreamWriter", "InputPartition",
+                  "WriterCommitMessage", "StreamingQueryListener"}
+CALLBACK_DECORATORS = {"udtf"}
+
+
 def _files(paths):
     for p in paths:
         if p.is_dir():
@@ -64,6 +77,24 @@ def _defined(stmts):
                 yield from _defined(h.body)
 
 
+def _methods(stmts):
+    """Names of the non-dunder methods of the module-level classes among
+    ``stmts`` that Spark does not call back into."""
+    def name(n):
+        n = n.func if isinstance(n, ast.Call) else n
+        return n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+
+    for st in stmts:
+        if (not isinstance(st, ast.ClassDef)
+                or {name(b) for b in st.bases} & CALLBACK_BASES
+                or {name(d) for d in st.decorator_list} & CALLBACK_DECORATORS):
+            continue
+        for m in st.body:
+            if (isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not (m.name.startswith("__") and m.name.endswith("__"))):
+                yield m.name
+
+
 def _loads(node: ast.AST, aliases: dict[str, str]):
     """Names that ``node`` reads."""
     for n in ast.walk(node):
@@ -80,7 +111,8 @@ def _loads(node: ast.AST, aliases: dict[str, str]):
 def _definitions_and_loads():
     defs = {}  # name -> files defining it
     for f in _files([PACKAGE]):
-        for name in _defined(ast.parse(f.read_text(), str(f)).body):
+        body = ast.parse(f.read_text(), str(f)).body
+        for name in [*_defined(body), *_methods(body)]:
             if not (name.startswith("__") and name.endswith("__")):
                 defs.setdefault(name, set()).add(str(f.relative_to(ROOT)))
     reached = set()
@@ -91,8 +123,16 @@ def _definitions_and_loads():
                    for a in n.names if a.asname}
         for st in tree.body:
             # a definition's own body (recursion, a constant built from
-            # itself) does not reach it
-            reached |= set(_loads(st, aliases)) - set(_defined([st]))
+            # itself) does not reach it; nor does a method's own body
+            if isinstance(st, ast.ClassDef):
+                for m in st.body:
+                    own = {m.name} if isinstance(
+                        m, (ast.FunctionDef, ast.AsyncFunctionDef)) else set()
+                    reached |= set(_loads(m, aliases)) - own - {st.name}
+                reached |= {a for b in st.bases + st.decorator_list
+                            for a in _loads(b, aliases)}
+            else:
+                reached |= set(_loads(st, aliases)) - set(_defined([st]))
     return defs, reached
 
 
@@ -101,6 +141,6 @@ def test_every_package_name_has_a_reader():
     unreached = {n: sorted(fs) for n, fs in defs.items()
                  if n not in reached and n not in ALLOWED}
     assert not unreached, (
-        "module-level names with no reader outside tests (delete them, or add "
-        f"them to ALLOWED with a reason): {unreached}")
+        "module-level names and methods with no reader outside tests (delete "
+        f"them, or add them to ALLOWED with a reason): {unreached}")
     assert set(ALLOWED) <= set(defs), f"stale ALLOWED entries: {set(ALLOWED) - set(defs)}"

@@ -210,7 +210,7 @@ class WarcishStreamReader(DataSourceStreamReader):
             # (partitions() computes an empty range); data-exactness is
             # unaffected, but consumers inferring "watermark flush"
             # from numInputRows==0 alone must also check the reported
-            # watermark (as _run_to_memory_flush's gate does).
+            # watermark (as __spark_entry__._stream_table's flush gate does).
             return {"last": last}
         if last == self._prev_last and self._prev_offset is not None:
             # no new files: re-return the previous offset VERBATIM —

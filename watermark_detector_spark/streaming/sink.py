@@ -228,11 +228,6 @@ class ExactlyOnceParquetSink:
                 singles.append(int(stem))
         return sorted(ranges, key=lambda r: (r["lo"], r["hi"])), singles
 
-    def _raw_ranges(self) -> list[dict]:
-        """ALL published range manifests, including ones shadowed by a
-        wider merge range — vacuum needs the full list to sweep them."""
-        return self._list_manifests()[0]
-
     def _manifest_full(self) -> tuple[list[dict], list[int], list[dict]]:
         """(live ranges, uncovered per-batch ids, shadowed ranges). A
         batch id inside any published range is SHADOWED: its per-batch
@@ -524,10 +519,7 @@ class ExactlyOnceParquetSink:
         raises rather than silently widening or narrowing the window —
         exactly Iceberg's expired-snapshot contract for incremental
         scans."""
-        ranges, singles = self._manifest_state()
-        committed = set(singles)
-        for r in ranges:
-            committed.update(range(r["lo"], r["hi"] + 1))
+        committed = self.committed_batches()
         if not committed:
             raise ValueError(f"no committed batches under {self.root}")
         hi = max(committed) if as_of_batch is None else as_of_batch
@@ -898,10 +890,7 @@ class UpsertSink(ExactlyOnceParquetSink):
         Returns the published range entry, or None when the table is
         already fully merged (no-op)."""
         fs = self.fs
-        ranges, singles = self._manifest_state()
-        committed = set(singles)
-        for r in ranges:
-            committed.update(range(r["lo"], r["hi"] + 1))
+        committed = set(self.committed_batches())
         if not committed:
             raise ValueError(f"nothing to merge under {self.root}")
         if self._fully_merged():
