@@ -674,9 +674,10 @@ def _stream_table(stream_df: DataFrame, output_mode: str,
     """Run ``stream_df`` into a fresh memory-sink table and return it.
 
     State-store partitions: each shuffle partition of a stateful op is
-    one RocksDB/HDFS store instance PER MICRO-BATCH COMMIT; at the
-    harness's fixture scale 200 default partitions is pure fixed cost
-    (~1s/commit). The run pins 8 and restores afterwards — each query
+    one state store instance that loads and commits PER MICRO-BATCH
+    (a RocksDB changelog commit takes ~70-100 ms on a 4-core host), so
+    at the harness's fixture scale the partition count is pure fixed
+    cost per batch. The run pins 8 and restores afterwards — each query
     uses a fresh checkpoint so the partition count is free to differ.
 
     The trigger is availableNow unless ``watermark_past`` is given

@@ -258,6 +258,55 @@ def test_sink_hadoop_fs_uri_root(spark, tmp_path_factory):
     assert got.count() == 110
 
 
+def test_sink_counts_rows_from_the_write(spark, tmp_path_factory):
+    """``n_rows`` comes from the write job itself: an empty batch
+    commits 0 rows, a failed write raises and commits nothing, and a
+    range-partitioned (z-order) compaction and a merge compaction count
+    each row once."""
+    from watermark_detector_spark.streaming.sink import UpsertSink
+
+    root = str(tmp_path_factory.mktemp("sink_count"))
+    sink = ExactlyOnceParquetSink(root, output_partitions=2,
+                                  vacuum_retention_s=0)
+    df = spark.range(40).selectExpr("id AS v", "id % 7 AS w")
+    sink.write_batch(df.where("v < 0"), 0)
+    boom = df.withColumn(
+        "v", F.when(F.col("v") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("v")))
+    with pytest.raises(Exception, match="boom"):
+        sink.write_batch(boom, 1)
+    assert sink.committed_batches() == [0]
+    sink.write_batch(df, 1)
+    sink.write_batch(df.where("v < 5"), 2)
+    assert [m["n_rows"] for m in sink.manifest()] == [0, 40, 5]
+    entries = sink.compact(spark, zorder_cols=["v", "w"])
+    assert [e["n_rows"] for e in entries] == [45]
+    assert sink.read(spark).count() == 45
+
+    up = UpsertSink(str(tmp_path_factory.mktemp("upsert_count")),
+                    key_cols="k", output_partitions=2)
+    up.write_batch(spark.range(10).selectExpr("id % 3 AS k", "id AS x"), 0)
+    up.write_batch(spark.range(10).selectExpr("id % 4 AS k", "id AS x"), 1)
+    assert up.compact_merge(spark)["n_rows"] == 4
+
+
+def test_engine_conf_pins_rocksdb_changelog_checkpointing(spark):
+    """Stateful queries run on RocksDB with changelog checkpoints: a
+    commit uploads the batch's changes, not a zipped full snapshot."""
+    from watermark_detector_spark.session import engine_conf
+
+    pins = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled": "true",
+    }
+    for key, value in pins.items():
+        assert engine_conf()[key] == value
+        assert spark.conf.get(key) == value
+
+
 def test_sink_crash_between_data_and_manifest(spark, tmp_path_factory):
     """Fault injection on the exactly-once protocol's crash window: data
     files land, the process dies BEFORE the manifest publishes. The

@@ -27,3 +27,9 @@ stages (``mapInPandas``, pandas UDFs, grouped-pandas state functions).
 """
 
 __version__ = "0.1.0"
+
+# Engine UDFs import this package when a Python worker unpickles them,
+# so each worker's first engine task installs the guard for the rest.
+from watermark_detector_spark._pyworker import guard_zip_invalidation
+
+guard_zip_invalidation()

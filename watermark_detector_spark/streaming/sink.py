@@ -46,7 +46,20 @@ import os
 import time
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+
+def _write_parquet(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the rows
+    written, counted by the write job itself, so no footer is opened
+    afterwards. The count is read only once the write has returned: a
+    failed write raises first, instead of leaving ``Observation.get``
+    waiting on metrics that never arrive."""
+    obs = Observation()
+    (df.observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").parquet(path))
+    return obs.get["n"]
 
 
 class _HadoopFS:
@@ -55,9 +68,9 @@ class _HadoopFS:
 
     def __init__(self, spark: SparkSession, root: str):
         self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
         self._Path = self._jvm.org.apache.hadoop.fs.Path
-        self._fs = self._Path(root).getFileSystem(self._conf)
+        self._fs = self._Path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration())
 
     def mkdirs(self, p: str) -> None:
         self._fs.mkdirs(self._Path(p))
@@ -101,18 +114,6 @@ class _HadoopFS:
         """Modification time (epoch seconds) — retention-window clock."""
         return self._fs.getFileStatus(self._Path(p)).getModificationTime() / 1000.0
 
-    def parquet_rows(self, p: str) -> int:
-        """Row count from the parquet footer via the Hadoop input file —
-        no extra Spark job per batch, works on any FS scheme."""
-        hif = self._jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            self._Path(p), self._conf
-        )
-        reader = self._jvm.org.apache.parquet.hadoop.ParquetFileReader.open(hif)
-        try:
-            return int(reader.getRecordCount())
-        finally:
-            reader.close()
-
 
 class _LocalFS:
     """os-based fallback for manifest READS when no SparkSession is
@@ -150,11 +151,6 @@ class _LocalFS:
 
     def mtime(self, p: str) -> float:
         return os.path.getmtime(p)
-
-    def parquet_rows(self, p: str) -> int:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(p).metadata.num_rows
 
 
 class ExactlyOnceParquetSink:
@@ -326,9 +322,8 @@ class ExactlyOnceParquetSink:
         path = os.path.join(self.data_dir, f"batch_id={batch_id}")
         if self.output_partitions:
             df = df.coalesce(self.output_partitions)
-        df.write.mode("overwrite").parquet(path)
+        n_rows = _write_parquet(df, path)
         files = sorted(f for f in fs.listdir(path) if f.endswith(".parquet"))
-        n_rows = sum(fs.parquet_rows(os.path.join(path, f)) for f in files)
         entry = {
             "batch_id": batch_id,
             "n_rows": n_rows,
@@ -620,7 +615,6 @@ class ExactlyOnceParquetSink:
                 # layout that makes a 100 TB table scannable by key
                 df = (df.repartitionByRange(n_out, *sort_cols)
                       .sortWithinPartitions(*sort_cols))
-                df.write.mode("overwrite").parquet(out)
             elif zorder_cols:
                 # Z-ORDER rewrite (Delta OPTIMIZE ZORDER BY analog):
                 # Morton-curve clustering keeps per-file min/max tight
@@ -629,12 +623,11 @@ class ExactlyOnceParquetSink:
                 # layout.py for the curve construction
                 from watermark_detector_spark.operators.layout import (
                     zorder_repartition)
-                zorder_repartition(df, zorder_cols, n_out) \
-                    .write.mode("overwrite").parquet(out)
+                df = zorder_repartition(df, zorder_cols, n_out)
             else:
-                df.coalesce(n_out).write.mode("overwrite").parquet(out)
+                df = df.coalesce(n_out)
+            n_rows = _write_parquet(df, out)
             files = sorted(f for f in fs.listdir(out) if f.endswith(".parquet"))
-            n_rows = sum(fs.parquet_rows(os.path.join(out, f)) for f in files)
             # carry the folded batches' ORIGINAL commit times into the
             # range manifest: timestamp time-travel must keep resolving
             # ts -> batch after vacuum sweeps the per-batch manifests
@@ -817,8 +810,6 @@ class UpsertSink(ExactlyOnceParquetSink):
 
     # -- write side ---------------------------------------------------------
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         if self.LINEAGE_COL in df.columns:
             raise ValueError(
                 f"{self.LINEAGE_COL} is the sink's lineage column — "
@@ -831,8 +822,6 @@ class UpsertSink(ExactlyOnceParquetSink):
 
     # -- merge-on-read resolution --------------------------------------------
     def _resolved(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         order = [F.col(self.LINEAGE_COL)]
         if self.order_col:
             order.append(F.col(self.order_col))
@@ -844,8 +833,6 @@ class UpsertSink(ExactlyOnceParquetSink):
         )
 
     def _drop_tombstones(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         if self.tombstone_col and self.tombstone_col in df.columns:
             # NULL tombstone flag (e.g. pre-evolution batches) = live row
             df = df.where(
@@ -905,9 +892,8 @@ class UpsertSink(ExactlyOnceParquetSink):
         cur = self._drop_tombstones(self._resolved(self.read(spark)))
         out = os.path.join(self.data_dir, f"merge_{lo}-{hi}")
         n_out = output_partitions or self.output_partitions or 8
-        cur.coalesce(n_out).write.mode("overwrite").parquet(out)
+        n_rows = _write_parquet(cur.coalesce(n_out), out)
         files = sorted(f for f in fs.listdir(out) if f.endswith(".parquet"))
-        n_rows = sum(fs.parquet_rows(os.path.join(out, f)) for f in files)
         times = self._batch_commit_times()
         entry = {
             "lo": lo, "hi": hi, "batch_ids": list(range(lo, hi + 1)),
