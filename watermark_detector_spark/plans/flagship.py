@@ -55,33 +55,29 @@ def detection_rows_fused(pages: DataFrame, signatures: list[Signature],
 
         for pdf in batches:
             texts = extract_series(pdf["html"]) if from_html else pdf["text"]
-            out = {k: [] for k in ("url", "warc_ts", "lang", "sig_id",
-                                   "category", "begin", "end", "score")}
-            for url, ts, lang, text in zip(pdf["url"], pdf["warc_ts"],
-                                           pdf["lang"], texts):
+            rows = []  # page position of each detection
+            out = {k: [] for k in ("sig_id", "category", "begin", "end", "score")}
+            for i, text in enumerate(texts):
                 for sid, cat, b, e, s in detect_text(text, by_id, detector):
-                    out["url"].append(url)
-                    out["warc_ts"].append(ts)
-                    out["lang"].append(lang)
+                    rows.append(i)
                     out["sig_id"].append(sid)
                     out["category"].append(cat)
                     out["begin"].append(b)
                     out["end"].append(e)
                     out["score"].append(s)
+            page = pdf[["url", "warc_ts", "lang"]].take(rows).reset_index(drop=True)
             # explicit dtypes: a batch with ZERO detections must still
             # carry Arrow-castable columns (an untyped empty frame
-            # defaults warc_ts to float64 and kills the task — an
-            # all-negative partition is routine at corpus scale)
-            yield pd.DataFrame({
-                "url": pd.Series(out["url"], dtype="object"),
-                "warc_ts": pd.Series(out["warc_ts"], dtype="datetime64[us]"),
-                "lang": pd.Series(out["lang"], dtype="object"),
-                "sig_id": pd.Series(out["sig_id"], dtype="int64"),
-                "category": pd.Series(out["category"], dtype="object"),
-                "begin": pd.Series(out["begin"], dtype="int32"),
-                "end": pd.Series(out["end"], dtype="int32"),
-                "score": pd.Series(out["score"], dtype="float64"),
-            })
+            # defaults to float64 and kills the task — an all-negative
+            # partition is routine at corpus scale)
+            yield page.assign(
+                warc_ts=page["warc_ts"].astype("datetime64[us]"),
+                sig_id=pd.Series(out["sig_id"], dtype="int64"),
+                category=pd.Series(out["category"], dtype="object"),
+                begin=pd.Series(out["begin"], dtype="int32"),
+                end=pd.Series(out["end"], dtype="int32"),
+                score=pd.Series(out["score"], dtype="float64"),
+            )
 
     cols = ["url", "warc_ts", "lang"] + (["html"] if from_html else ["text"])
     return (

@@ -4,13 +4,25 @@ The profile encodes the scale posture (SURVEY.md §4): AQE on (runtime
 re-planning + skew-join splitting + partition coalescing), Arrow enabled
 for every pandas-UDF boundary, shuffle partitions sized to the local
 core count (on a real cluster this would be ~2-3x total executor cores),
-and UTC timestamps so event-time semantics are timezone-stable.
+and UTC timestamps so event-time semantics are timezone-stable. Where
+the JDK's ``javac`` is present, ``file://`` goes through a local
+filesystem that does not start a process per checkpoint, log or sink
+file (``_local_fs_conf``).
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Local-mode defaults sized from the host this process may run on; on a
@@ -31,9 +43,79 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(48, kib // (2 * 1024 * 1024)))}g"
 
 
+_FS_SOURCE = os.path.join(os.path.dirname(__file__), "_jvm", "NoForkLocalFs.java")
+_FS_CLASS = "watermark_detector_spark.NoForkLocalFs"
+
+
+@functools.lru_cache(maxsize=None)
+def _local_fs_classes() -> str | None:
+    """Directory holding ``_jvm/NoForkLocalFs.java`` compiled against the
+    Hadoop client jar of the Spark install PySpark launches, or None
+    (no source, no jar or no ``javac``). Compiled once per (source hash,
+    jar name) into a cache dir outside the source tree, written as a
+    temp dir and then renamed into place."""
+    try:
+        with open(_FS_SOURCE, "rb") as fh:
+            digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+    except OSError:  # e.g. imported from a --py-files zip
+        return None
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if not jars:
+        return None
+    root = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+                        "watermark_detector_spark")
+    jar = os.path.splitext(os.path.basename(jars[-1]))[0]
+    out = os.path.join(root, f"localfs-{digest}-{jar}")
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    try:
+        os.makedirs(root, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=root, prefix=".tmp-")
+    except OSError:
+        return None
+    try:
+        subprocess.run([javac, "--release", "17", "-cp", jars[-1], "-d", tmp, _FS_SOURCE],
+                       check=True, capture_output=True, timeout=120)
+        os.rename(tmp, out)
+    except (OSError, subprocess.SubprocessError):
+        # javac failed, or a concurrent compile won the rename
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Route ``file://`` through ``NoForkLocalFs`` when its classes will be
+    on the JVM's classpath: this process is about to launch the JVM (the
+    conf puts the class dir on it), or the running JVM already loads the
+    class. Otherwise (no ``javac``; a JVM launched elsewhere, e.g. by
+    spark-submit) Hadoop's stock local filesystem stays: same files,
+    slower commits. Local-cluster executors are JVMs on this host and
+    get the same class dir."""
+    jvm = SparkContext._jvm
+    if jvm is None and "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}  # launched by spark-submit, with its own classpath
+    if jvm is not None:
+        try:
+            jvm.java.lang.Class.forName(_FS_CLASS)
+        except Py4JError:
+            return {}
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.executor.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": _FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_FS_CLASS}$Fs",
+    }
+
+
 def engine_conf(cpus: int = DEFAULT_CPUS) -> dict[str, str]:
     """The engine's config profile as a plain dict (testable, inspectable)."""
-    return {
+    return _local_fs_conf() | {
         # --- planner / runtime re-planning ---
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
