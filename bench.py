@@ -1,24 +1,25 @@
 #!/usr/bin/env python
-"""Benchmark harness. Prints ONE JSON line:
-  {"metric": "...", "value": <headline sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": ..., ...extras}
+"""Benchmark record of the engine. Prints ONE JSON line:
+  {"metric": "flagship_batch_sec", "value": <median flagship pass, s>,
+   "unit": "sec", "queries": {...per-query sec...}, "sf": ..., ...}
 
-Headline: the flagship detection pipeline (extract → detect →
-filter(>=0.5) → per-domain windowed agg) over a deterministic
-CC-realistic bench corpus (~2.7 kB docs, 100 signatures, 500
-Zipf-skewed domains), batch AND streaming-with-exactly-once-sink, plus
-heavyweight testdata queries at $SPARK_GRAFT_SF_DIR.
+- Flagship: ``perfbench/run.py --workload flagship-batch|flagship-stream
+  --seed 1`` in child processes. Their end-to-end metrics give
+  ``flagship_batch`` (median pass, s), ``docs_per_sec_batch``,
+  ``flagship_stream_e2e`` (median arrival-to-commit latency per file, s)
+  and ``docs_per_sec_stream``. A failed output check exits non-zero.
+- Leaves: each of ``BENCH_QUERIES`` at ``$SPARK_GRAFT_SF_DIR``, median
+  of 3 runs into the noop sink, on a plain ``get_spark()``.
+- Soak: ``SOAK_BATCHES`` one-file micro-batches of the flagship stream
+  (``jobs/soak.run_phase``): per-commit p50/p95 and state rows.
+- Load gate: before anything starts, wait (bounded) for a quiet host and
+  stamp the record ``accepted`` or ``degraded``.
 
-Methodology: one warmup pass spins up the python worker pool and JIT
-before timing (BASELINE.json asks for SUSTAINED docs/sec); batch is the
-min of two timed runs. spark.sql.shuffle.partitions is pinned to 32 at
-every parallelism level so scaling runs differ ONLY in core count.
-
-Env:
-  SPARK_GRAFT_SF_DIR       (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS         (default: CPUs this process may run on) — local[N]
-  WMD_BENCH_DOCS           (default 200000) — bench corpus size
-  WMD_BENCH_SKIP_TESTDATA  (default unset) — flagship only (scaling runs)
+Usage:
+  python bench.py                  # the record
+  python bench.py plans <suffix>   # explain("formatted") of each leaf
+                                   # -> plans/r08/<query>_<suffix>.txt
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 """
 
 from __future__ import annotations
@@ -26,67 +27,82 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
-from watermark_detector_spark.session import DEFAULT_CPUS as CPUS
+from watermark_detector_spark.session import DEFAULT_CPUS as CPUS, get_spark
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# WMD_EXECUTORS: if set, use local-cluster[N,8,8192] (separate executor
-# JVMs + py-files shipping — the faithful N-executor cluster stand-in)
-N_EXECUTORS = int(os.environ.get("WMD_EXECUTORS", "0"))
-EXEC_CORES = int(os.environ.get("WMD_EXEC_CORES", "8"))
-N_DOCS = int(os.environ.get("WMD_BENCH_DOCS", "200000"))
-N_SIGS = int(os.environ.get("WMD_BENCH_SIGS", "100"))
-MIN_WORDS = int(os.environ.get("WMD_BENCH_MIN_WORDS", "200"))
-MAX_WORDS = int(os.environ.get("WMD_BENCH_MAX_WORDS", "500"))
-MFPT = int(os.environ.get("WMD_BENCH_MFPT", "16"))
-BENCH_ROOT = os.environ.get("WMD_BENCH_ROOT", "/root/repo/.bench")
-SKIP_TESTDATA = bool(os.environ.get("WMD_BENCH_SKIP_TESTDATA"))
-SKIP_STREAM = bool(os.environ.get("WMD_BENCH_SKIP_STREAM"))
-SKIP_SOAK = bool(os.environ.get("WMD_BENCH_SKIP_SOAK"))
-SOAK_BATCHES = int(os.environ.get("WMD_BENCH_SOAK_BATCHES", "96"))
+PLANS_DIR = os.path.join(ROOT, "plans", "r08")
+
+# the driver's per-query perf record
+BENCH_QUERIES = [
+    "q02_groupby_agg", "q03_join_agg", "q09_time_window_agg",
+    "q17_jaccard_pairs", "q18_minhash_sigs", "q19_simhash",
+    "q20_cosine_pairs", "q21_ann_topk", "q44_lsh_ann_candidates",
+    "q45_near_dup_pairs", "q59_dedup_clusters", "q70_quality_rules",
+    "q72_funnel", "q78_gopher_gates", "q80_pii_scrub",
+    "q82_sequence_match", "q97_range_join", "q99_lm_quality",
+    "q100_pack_sequences", "q116_pagerank", "q117_hll_distinct",
+]
+REPEATS = 3
+# pages in perfbench's flagship-batch corpus (perfbench/README.md)
+N_DOCS = 40_000
+SOAK_BATCHES = 96
+
+# Pre-flight load gate: bench.py runs on every host core, so the only
+# external-load signal is whole-host busy time sampled BEFORE any Spark
+# starts (nothing of ours runs yet, so host busy is other tenants).
+# Wait for a quiet window, bounded; past the budget the run proceeds
+# stamped load_gate="degraded".
+LOAD_BUSY_MAX = 0.15
+LOAD_WAIT_S = 300
 
 
-_LOADAVG_START = (0.0, 0.0, 0.0)
-_LOAD_GATE: dict = {}
-
-# Pre-flight load gate (round-6, ports scaling_bench's rule to the
-# flagship bench): bench.py runs UNPINNED on every host core, so the
-# off-pin /proc/stat signal scaling_bench gates on does not exist here.
-# The next-best objective rule: sample whole-host busy fraction BEFORE
-# starting Spark (nothing of ours is running yet, so host busy == other
-# tenants by construction) and WAIT for a quiet window, bounded. If the
-# host never quiets down within the budget the run proceeds but is
-# stamped load_gate="degraded" — the reader (and the judge) then knows
-# the numbers carry external load, the exact ambiguity BENCH_r05 had.
-LOAD_BUSY_MAX = float(os.environ.get("WMD_BENCH_LOAD_MAX", "0.15"))
-LOAD_WAIT_S = float(os.environ.get("WMD_BENCH_LOAD_WAIT_S", "300"))
-
-
-def _host_busy_fraction(sample_s: float = 1.0) -> float:
-    """Whole-host CPU busy fraction over a short /proc/stat window."""
-    def snap():
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()  # aggregate 'cpu' line
-        vals = [int(v) for v in parts[1:]]
-        idle = vals[3] + vals[4]           # idle + iowait
-        return sum(vals) - idle, sum(vals)
-    b0, t0 = snap()
-    time.sleep(sample_s)
-    b1, t1 = snap()
-    return (b1 - b0) / (t1 - t0) if t1 > t0 else float("nan")
+def cpu_jiffies() -> dict[str, tuple[int, int]]:
+    """(busy, total) jiffies of every ``cpu*`` line of /proc/stat:
+    ``"cpu"`` is the whole host, ``"cpu0"``, ``"cpu1"``, ... each CPU."""
+    out = {}
+    with open("/proc/stat") as fh:
+        for ln in fh:
+            if not ln.startswith("cpu"):
+                break
+            name, *vals = ln.split()
+            vals = [int(v) for v in vals]
+            idle = vals[3] + vals[4]  # idle + iowait
+            out[name] = (sum(vals) - idle, sum(vals))
+    return out
 
 
-def _preflight_load_gate() -> dict:
+def busy_fraction(before: dict, after: dict, cpus) -> float:
+    """Busy share of the named ``cpu*`` lines between two
+    ``cpu_jiffies()`` samples; NaN when none of them is in both."""
+    names = [c for c in cpus if c in before and c in after]
+    busy = sum(after[c][0] - before[c][0] for c in names)
+    total = sum(after[c][1] - before[c][1] for c in names)
+    return busy / total if total > 0 else float("nan")
+
+
+def _host_busy() -> float:
+    before = cpu_jiffies()
+    time.sleep(1.0)
+    return busy_fraction(before, cpu_jiffies(), ["cpu"])
+
+
+def preflight_load_gate() -> dict:
     """Wait (bounded) for a quiet host; record the decision."""
     deadline = time.time() + LOAD_WAIT_S
     attempts = 0
-    busy = _host_busy_fraction()
+    busy = _host_busy()
     while busy > LOAD_BUSY_MAX and time.time() < deadline:
         attempts += 1
         time.sleep(min(15.0, max(1.0, deadline - time.time())))
-        busy = _host_busy_fraction()
+        busy = _host_busy()
     return {
         "preflight_busy": round(busy, 4),
         "preflight_waits": attempts,
@@ -94,357 +110,111 @@ def _preflight_load_gate() -> dict:
     }
 
 
-def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    # load context for the record: the shared host's external load
-    # swings ±50% between epochs. Interpretation key: the
-    # detect_us_per_doc_*_token fields below are a SINGLE-thread canary
-    # — when they sit at their usual ~120-150 µs/doc while the
-    # multi-core throughputs drop uniformly, the epoch was
-    # noisy-neighbor-polluted, not a code regression.
-    global _LOADAVG_START, _LOAD_GATE
-    _LOAD_GATE = _preflight_load_gate()
-    _LOADAVG_START = os.getloadavg()
-    from pyspark.sql import functions as F
-
-    from watermark_detector_spark.fixtures import FixtureConfig, generate_pages_spark
-    from watermark_detector_spark.plans.flagship import (
-        flagship_batch,
-        kept_detections_fused,
+def perfbench(workload: str) -> dict[str, float]:
+    """End-to-end metric values of one perfbench run; exits non-zero
+    when the run fails or its output check does."""
+    res = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "perfbench", "run.py"),
+         "--workload", workload, "--seed", "1"],
+        capture_output=True, text=True, cwd=ROOT, timeout=1800,
     )
-    from watermark_detector_spark.session import get_spark
-    from watermark_detector_spark.sources.pages import read_pages_batch
-    from watermark_detector_spark.streaming.pipeline import (
-        MetricsListener,
-        run_flagship_stream,
-    )
-
-    conf = {
-        # scan granularity must exceed core count for the CPU-bound
-        # UDF stage (automatic at 100 TB; forced at bench scale)
-        "spark.sql.files.maxPartitionBytes": "8m",
-        # pinned across parallelism levels: scaling runs differ only
-        # in parallelism, never in plan shape
-        "spark.sql.shuffle.partitions": "32",
-    }
-    if N_EXECUTORS:
-        from jobs.build_pyfiles import build
-        from watermark_detector_spark.session import get_spark_cluster
-
-        cores = N_EXECUTORS * EXEC_CORES
-        spark = get_spark_cluster(
-            N_EXECUTORS, EXEC_CORES, app_name=f"wmd-bench-e{N_EXECUTORS}",
-            extra_conf=conf, py_files=build(),
-        )
-    else:
-        cores = CPUS
-        spark = get_spark(app_name=f"wmd-bench-{CPUS}", cpus=CPUS, extra_conf=conf)
-    timings: dict[str, float] = {}
-    extras: dict[str, float] = {}
-
-    # --- bench corpus (generated once, reused across runs) ---------------
-    cfg = FixtureConfig(
-        n_docs=N_DOCS, n_domains=500, span_s=7200,
-        n_sigs=N_SIGS, min_words=MIN_WORDS, max_words=MAX_WORDS,
-    )
-    pages_path = os.path.join(BENCH_ROOT, f"pages_{N_DOCS}_s{N_SIGS}_w{MIN_WORDS}-{MAX_WORDS}")
-    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
-        t0 = time.time()
-        generate_pages_spark(spark, cfg, pages_path, n_partitions=64)
-        extras["gen_sec"] = round(time.time() - t0, 2)
-
-    pages = read_pages_batch(spark, pages_path)
-
-    # --- warmup: python worker pool, JIT, codegen, OS page cache ---------
-    # (full pass: the timed run then measures sustained compute, not
-    # first-touch disk I/O — identical treatment at every core count)
-    kept_detections_fused(pages, cfg.signatures).count()
-
-    # --- headline 1: flagship batch (sustained docs/sec) -----------------
-    # min of 3: the sandbox host has ±50% timing noise spikes; sustained
-    # throughput is the noise-free floor
-    n_runs = 3
-    runs = []
-    for _ in range(n_runs):
-        t0 = time.time()
-        flagship_batch(pages, cfg.signatures).write.mode("overwrite").parquet(
-            os.path.join(BENCH_ROOT, f"out_flagship_batch_{cores}")
-        )
-        runs.append(time.time() - t0)
-    timings["flagship_batch"] = round(min(runs), 3)
-    extras["docs_per_sec_batch"] = round(N_DOCS / timings["flagship_batch"], 1)
-
-    # --- headline 2: flagship streaming w/ exactly-once sink -------------
-    if SKIP_STREAM:
-        _finish(spark, timings, extras, cores)
-        return
-    stream_dir = os.path.join(BENCH_ROOT, f"pages_stream64_{N_DOCS}_s{N_SIGS}_w{MIN_WORDS}-{MAX_WORDS}")
-    if not os.path.exists(stream_dir):
-        (
-            pages.withColumn("_b", F.pmod(F.xxhash64("url"), F.lit(64)))
-            .repartition(64, "_b")
-            .write.partitionBy("_b")
-            .mode("overwrite")
-            .parquet(stream_dir + "_tmp")
-        )
-        os.makedirs(stream_dir, exist_ok=True)
-        tsrc = stream_dir + "_tmp"
-        i = 0
-        for sub in sorted(os.listdir(tsrc)):
-            if not sub.startswith("_b="):
-                continue
-            for f in sorted(os.listdir(os.path.join(tsrc, sub))):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(stream_dir, f"batch_{i:04d}.parquet")
-                    shutil.copy2(os.path.join(tsrc, sub, f), dst)
-                    os.utime(dst, (1700000000 + i, 1700000000 + i))
-                    i += 1
-        shutil.rmtree(tsrc, ignore_errors=True)
-
-    sink_root = os.path.join(BENCH_ROOT, f"sink_{cores}")
-    ckpt = os.path.join(BENCH_ROOT, f"ckpt_{cores}")
-    # streaming state partitions: pinned to 8 at EVERY parallelism level
-    # (identical plan across scaling runs). The windowed-agg state is
-    # tiny (domains x open windows); 32 state-store instances cost ~1s
-    # of open/commit/close per micro-batch cycle — pure fixed overhead.
-    # The CPU-heavy extract+detect stage parallelism comes from the scan
-    # partitioning (maxPartitionBytes), not from shuffle partitions.
-    batch_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # streaming warmup: first streaming query in a JVM pays one-time
-    # state-store/codegen/python-pool init — sustained throughput is the
-    # contract (BASELINE.json), so warm once, then time
-    shutil.rmtree(sink_root + "_warm", ignore_errors=True)
-    shutil.rmtree(ckpt + "_warm", ignore_errors=True)
-    run_flagship_stream(
-        spark, stream_dir, cfg.signatures, sink_root + "_warm", ckpt + "_warm",
-        max_files_per_trigger=MFPT,
-    )
-    stream_runs = []
-    sustained = []
-    for _ in range(3):  # min of 3: same noise treatment as batch (the
-        # round-3 driver epoch showed a single loaded-host run can sit
-        # ~30% below the quiet-host floor; three samples pin the floor)
-        shutil.rmtree(sink_root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        ml = MetricsListener()
-        spark.streams.addListener(ml)
-        t0 = time.time()
-        run_flagship_stream(
-            spark, stream_dir, cfg.signatures, sink_root, ckpt,
-            max_files_per_trigger=MFPT,
-        )
-        stream_runs.append(time.time() - t0)
-        time.sleep(1)  # let the last progress event land
-        spark.streams.removeListener(ml)
-        # SUSTAINED throughput (BASELINE.json metric): rows / addBatch time
-        # of data-carrying micro-batches — excludes one-time query start
-        # and the empty watermark-flush batch
-        rows = sum(p["numInputRows"] for p in ml.progress)
-        add_ms = sum(p["durationMs"].get("addBatch", 0)
-                     for p in ml.progress if p["numInputRows"])
-        if rows and add_ms:
-            sustained.append(rows / (add_ms / 1000.0))
-    timings["flagship_stream_e2e"] = round(min(stream_runs), 3)
-    extras["docs_per_sec_stream"] = round(N_DOCS / timings["flagship_stream_e2e"], 1)
-    if sustained:
-        extras["docs_per_sec_stream_sustained"] = round(max(sustained), 1)
-    # --- soak: bounded-state + per-commit latency evidence ---------------
-    # time-ordered stream, ONE file per commit (the long-running-stream
-    # shape): state rows must plateau at the watermark horizon, and the
-    # p50/p95 commit latency is the sustained-latency figure. The full
-    # few-hundred-batch artifact is jobs/soak.py; this is the per-round
-    # sample the driver records.
-    if not SKIP_SOAK:
-        from jobs.soak import run_phase, stage_time_ordered_stream
-        from watermark_detector_spark.plans.flagship import flagship_stream
-        from watermark_detector_spark.sources.pages import read_pages_stream
-
-        soak_cfg = FixtureConfig(
-            n_docs=SOAK_BATCHES * 150, n_domains=200,
-            span_s=SOAK_BATCHES * 60, n_sigs=N_SIGS,
-        )
-        sdir = stage_time_ordered_stream(spark, soak_cfg, SOAK_BATCHES, BENCH_ROOT)
-        sckpt = os.path.join(BENCH_ROOT, f"soak_bench_ckpt_{cores}")
-        shutil.rmtree(sckpt, ignore_errors=True)
-        res = run_phase(
-            spark, "flagship",
-            lambda: flagship_stream(
-                read_pages_stream(spark, sdir, max_files_per_trigger=1),
-                soak_cfg.signatures,
-            ),
-            sckpt, "append",
-        )
-        extras.update({f"soak_{k}": v for k, v in res.items()})
-    spark.conf.set("spark.sql.shuffle.partitions", batch_sp)
-
-    # --- detector scan microbench: flat-in-n_sigs evidence ---------------
-    # (pure-python, driver-side: isolates the per-doc scan cost; the
-    # single whole-token anchor scan is what keeps a 5k-entry signature
-    # table from dominating the 100 TB hot path. The "_token" key suffix
-    # is kept so records stay comparable across versions.)
-    from watermark_detector_spark.fixtures import _domains, gen_doc
-    from watermark_detector_spark.functions.core import (
-        build_detector,
-        detect_text,
-        make_signatures,
-    )
-
-    micro_cfg = FixtureConfig(n_docs=100, min_words=200, max_words=500)
-    micro_texts = [gen_doc(i, micro_cfg, _domains(micro_cfg))["text"]
-                   for i in range(100)]
-    for n_sigs in (400, 5000):
-        sigs_m = make_signatures(n_sigs)
-        by_id = {s.sig_id: s for s in sigs_m}
-        det = build_detector(sigs_m)
-        t0 = time.time()
-        for txt in micro_texts:
-            detect_text(txt, by_id, det)
-        extras[f"detect_us_per_doc_{n_sigs}sigs_token"] = round(
-            (time.time() - t0) / len(micro_texts) * 1e6, 1
-        )
-
-    _finish(spark, timings, extras, cores)
+    lines = [ln for ln in res.stdout.splitlines() if ln.startswith("{")]
+    out = json.loads(lines[-1]) if lines else {}
+    if res.returncode or not out.get("correct"):
+        sys.stderr.write(res.stdout[-3000:] + res.stderr[-3000:])
+        sys.exit(f"bench: perfbench {workload} failed (exit {res.returncode}, "
+                 f"correct={out.get('correct')})")
+    return {k: m["value"] for k, m in out["metrics"].items()}
 
 
-def _finish(spark, timings, extras, cores):
-    # --- testdata heavyweights at SF_DIR ---------------------------------
-    if not SKIP_TESTDATA:
-        import __spark_entry__ as entrymod
-
-        q = entrymod.queries()
-        for name in ["q02_groupby_agg", "q03_join_agg", "q09_time_window_agg",
-                     "q17_jaccard_pairs", "q18_minhash_sigs", "q19_simhash",
-                     "q20_cosine_pairs", "q21_ann_topk",
-                     # the PRODUCTION similarity/dedup paths (LSH-bucketed,
-                     # never all-pairs) — these are the 100 TB operating
-                     # points, so their wall-clock belongs in the record
-                     "q44_lsh_ann_candidates", "q45_near_dup_pairs",
-                     "q59_dedup_clusters",
-                     # round-4 additions: corpus quality gates + CEP
-                     "q70_quality_rules", "q72_funnel",
-                     # round-5 additions: doc-level gates, PII scrub,
-                     # k-step CEP (all scan-bound except q82's window)
-                     "q78_gopher_gates", "q80_pii_scrub",
-                     "q82_sequence_match",
-                     # round-6 additions: bucketed range join, LM
-                     # quality scoring, sequence packing (one shuffle +
-                     # per-shard pandas scan)
-                     "q97_range_join", "q99_lm_quality",
-                     "q100_pack_sequences",
-                     # final-session additions: iterative graph ranking
-                     # and the portable HLL sketch (two-phase register
-                     # agg — the 100 TB alternative to exact DISTINCT)
-                     "q116_pagerank", "q117_hll_distinct"]:
-            t0 = time.time()
-            q[name](spark, SF_DIR).count()
-            timings[name] = round(time.time() - t0, 3)
-
-    print(
-        json.dumps(
-            {
-                "metric": "flagship_batch_sec",
-                "value": timings["flagship_batch"],
-                "unit": "sec",
-                "queries": timings,
-                "sf": SF_DIR.rstrip("/").split("sf")[-1],
-                "cpus": cores, "executors": N_EXECUTORS or None,
-                "n_docs": N_DOCS,
-                "loadavg_start": [round(x, 2) for x in _LOADAVG_START],
-                "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-                **_LOAD_GATE,
-                **extras,
-                **_noise_normalized(timings, extras, cores),
-            }
-        )
-    )
-    spark.stop()
-    _prune_run_dirs()
-
-
-def _noise_normalized(timings: dict, extras: dict, cores: int) -> dict:
-    """Host-drift normalization: the single-thread token-scan canary
-    (detect_us_per_doc_*sigs_token) tracks HOST speed, not code speed —
-    under external load it inflates roughly with every multi-core
-    query (the diagnostic used informally since round 5). Dividing this
-    run's per-query seconds by the canary ratio vs the PREVIOUS round's
-    bench makes cross-round comparisons separate real regressions from
-    ambient load automatically. Emits:
-      detect_ratio_vs_prev   this run's canary / previous round's
-      queries_normalized     per-query sec ÷ ratio (compare these to
-                             the previous round's RAW seconds)
-      top_regressions        worst 5 normalized-vs-prev deltas > +10%
-      prev_bench             which file the baseline came from
-    Baseline: $WMD_BENCH_PREV if set, else the newest BENCH_r*.json in
-    the repo root. Silent no-op (fields null) when none exists."""
-    import glob
-
-    prev_path = os.environ.get("WMD_BENCH_PREV")
-    if not prev_path:
-        cands = sorted(glob.glob(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_r*.json")))
-        prev_path = cands[-1] if cands else None
-    out = {"detect_ratio_vs_prev": None, "queries_normalized": None,
-           "top_regressions": None, "prev_bench": prev_path}
-    if not prev_path or not os.path.exists(prev_path):
-        return out
-    try:
-        with open(prev_path) as f:
-            prev = json.load(f)
-        if "queries" not in prev and "tail" in prev:
-            # the round driver wraps bench's JSON line inside a "tail"
-            # capture — extract the embedded record (it is the final
-            # line of the captured output)
-            tail = prev["tail"]
-            start = tail.rfind('{"metric"')
-            if start < 0:
-                return out
-            prev = json.loads(tail[start:].splitlines()[0])
-    except Exception:
-        return out
-    canaries = ["detect_us_per_doc_400sigs_token",
-                "detect_us_per_doc_5000sigs_token"]
-    cur = [extras.get(c) for c in canaries]
-    old = [prev.get(c) for c in canaries]
-    if not all(cur) or not all(old):
-        return out
-    ratio = (sum(cur) / len(cur)) / (sum(old) / len(old))
-    out["detect_ratio_vs_prev"] = round(ratio, 4)
-    norm = {k: round(v / ratio, 3) for k, v in timings.items()}
-    out["queries_normalized"] = norm
-    cur_sf = SF_DIR.rstrip("/").split("sf")[-1]
-    if str(prev.get("sf")) != cur_sf or prev.get("cpus") != cores:
-        # different scale factor or core budget (e.g. a 4-core scaling
-        # epoch vs the 32-core round bench) — normalized times are
-        # still emitted, but per-query deltas would be meaningless
-        return out
-    prev_q = prev.get("queries") or {}
-    regs = []
-    for k, v in norm.items():
-        pv = prev_q.get(k)
-        if pv and pv > 0:
-            pct = (v / pv - 1.0) * 100
-            if pct > 10.0:
-                regs.append({"query": k, "prev_sec": pv,
-                             "now_sec_normalized": v,
-                             "pct": round(pct, 1)})
-    regs.sort(key=lambda r: -r["pct"])
-    out["top_regressions"] = regs[:5]
+def time_leaves(spark, q) -> dict[str, float]:
+    """Median of ``REPEATS`` noop-sink runs of each leaf, in seconds."""
+    out = {}
+    for name in BENCH_QUERIES:
+        samples = []
+        for _ in range(REPEATS):
+            t0 = time.perf_counter()
+            q[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            samples.append(time.perf_counter() - t0)
+        out[name] = round(statistics.median(samples), 3)
     return out
 
 
-def _prune_run_dirs() -> None:
-    """Delete this run's sink/checkpoint/output dirs so repeated rounds
-    don't exhaust the sandbox disk (the .bench dir hit 24 GiB by round
-    3). The reusable staged corpora (pages_*/pages_stream64_*/soak_*
-    stage dirs) are kept — regenerating them is the expensive part."""
-    if not os.path.isdir(BENCH_ROOT):
-        return
-    for d in os.listdir(BENCH_ROOT):
-        if d.startswith(("out_", "sink_", "ckpt_", "soak_bench_ckpt_")):
-            shutil.rmtree(os.path.join(BENCH_ROOT, d), ignore_errors=True)
+def soak_sample(spark, root: str) -> dict:
+    from jobs.soak import run_phase, stage_time_ordered_stream
+    from watermark_detector_spark.fixtures import FixtureConfig
+    from watermark_detector_spark.plans.flagship import flagship_stream
+    from watermark_detector_spark.sources.pages import read_pages_stream
+
+    cfg = FixtureConfig(n_docs=SOAK_BATCHES * 150, n_domains=200,
+                        span_s=SOAK_BATCHES * 60, n_sigs=100)
+    sdir = stage_time_ordered_stream(spark, cfg, SOAK_BATCHES, root)
+    res = run_phase(
+        spark, "flagship",
+        lambda: flagship_stream(
+            read_pages_stream(spark, sdir, max_files_per_trigger=1), cfg.signatures),
+        os.path.join(root, "soak_ckpt"), "append",
+    )
+    return {f"soak_{k}": v for k, v in res.items()}
+
+
+def main() -> None:
+    gate = preflight_load_gate()
+    loadavg_start = os.getloadavg()
+    batch = perfbench("flagship-batch")
+    stream = perfbench("flagship-stream")
+    timings = {"flagship_batch": round(batch["lat_p50_ms"] / 1000, 3),
+               "flagship_stream_e2e": round(stream["lat_p50_ms"] / 1000, 3)}
+
+    import __spark_entry__ as entrymod
+
+    spark = get_spark(app_name="wmd-bench")
+    root = tempfile.mkdtemp(prefix="wmd-bench-")
+    try:
+        timings |= time_leaves(spark, entrymod.queries())
+        soak = soak_sample(spark, root)
+    finally:
+        spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
+    print(json.dumps({
+        "metric": "flagship_batch_sec",
+        "value": timings["flagship_batch"],
+        "unit": "sec",
+        "queries": timings,
+        "sf": SF_DIR.rstrip("/").split("sf")[-1],
+        "cpus": CPUS,
+        "n_docs": N_DOCS,
+        "loadavg_start": [round(x, 2) for x in loadavg_start],
+        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+        **gate,
+        "docs_per_sec_batch": round(batch["rows_per_s"], 1),
+        "docs_per_sec_stream": round(stream["rows_per_s"], 1),
+        **soak,
+    }))
+
+
+def dump_plans(suffix: str) -> None:
+    import __spark_entry__ as entrymod
+
+    spark = get_spark(app_name="wmd-bench-plans")
+    os.makedirs(PLANS_DIR, exist_ok=True)
+    q = entrymod.queries()
+    for name in BENCH_QUERIES:
+        df = q[name](spark, SF_DIR)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        with open(os.path.join(PLANS_DIR, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(plan)
+        print(f"wrote {name}_{suffix}.txt ({plan.count('Exchange')} Exchange)")
+    spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["plans"]:
+        # no default: plans/r08's before/after files were dumped under
+        # other confs, and a dump under engine_conf must not replace them
+        if len(sys.argv) != 3:
+            sys.exit("usage: python bench.py plans <suffix>")
+        dump_plans(sys.argv[2])
+    else:
+        main()

@@ -68,17 +68,20 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.loc[keys.sort_values(order).index].reset_index(drop=True)
 
 
-def _values_match(got: pd.DataFrame, want: pd.DataFrame) -> bool:
+def first_mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """The first column (by name) whose canonicalized values differ, or
+    None when every column matches. Both frames must carry the same
+    columns and row count."""
     g, w = _canon(got), _canon(want)
     for c in g.columns:
         if pd.api.types.is_float_dtype(g[c]):
-            if not np.allclose(g[c].fillna(math.nan), w[c].fillna(math.nan),
-                               atol=1e-9, equal_nan=True):
-                return False
-        elif not (g[c].fillna("∅").astype(str)
-                  == w[c].fillna("∅").astype(str)).all():
-            return False
-    return True
+            same = np.allclose(g[c].fillna(math.nan), w[c].fillna(math.nan),
+                               atol=1e-9, equal_nan=True)
+        else:
+            same = (g[c].fillna("∅").astype(str) == w[c].fillna("∅").astype(str)).all()
+        if not same:
+            return c
+    return None
 
 
 def run(sf_dir: str, out_path: str, cpus: int,
@@ -112,7 +115,7 @@ def run(sf_dir: str, out_path: str, cpus: int,
             entry["rows_match"] = len(got) == len(want)
             entry["schema_match"] = sorted(got.columns) == sorted(want.columns)
             entry["hash_match"] = (entry["rows_match"] and entry["schema_match"]
-                                   and _values_match(got, want))
+                                   and first_mismatch(got, want) is None)
         except Exception as e:  # record, keep sweeping
             entry["err"] = f"{type(e).__name__}: {e}"[:500]
         results[name] = entry

@@ -1,317 +1,252 @@
 #!/usr/bin/env python
 """Scaling-efficiency evidence (BASELINE.json north rule: >=0.8 from N
-to 4N executors). No real cluster exists in the sandbox, so the same
-job runs under Spark's local-cluster manager — separate executor JVMs,
-engine shipped via py-files — at 1 executor x 4 cores (N) and
-4 executors x 4 cores (4N), identical input and configs otherwise, and
-  eff = (throughput_4N / throughput_N) / 4.
+to 4N executors). With no real cluster, the same job runs under Spark's
+local-cluster manager — one JVM per executor (own heap and GC, unlike
+local[k], which under-reports scaling by ~35%), the engine shipped via
+py-files — at N=1 and 4N=4 executors, identical input and configs
+otherwise, and eff = (throughput_4N / throughput_N) / 4.
 
-Two methodology guards make the single-host stand-in honest:
-- local-cluster, not local[k]: a plain local[8]-vs-local[32] comparison
-  shares ONE JVM heap/GC across all cores and under-reports scaling by
-  ~35%; separate executor JVMs isolate heaps the way a real cluster does.
-- taskset core pinning per level (executors x 4 cores + 2 driver cores):
-  without it the small level's JVM scan/Arrow/GC threads free-ride on
-  the host's idle cores — capacity a real N-core node does not have —
-  inflating the baseline; and the 32-core level saturates the host's
-  shared memory bandwidth, capacity a real 4-node cluster DOES have
-  (4x the sockets). 4-core executors keep both levels inside the
-  sandbox host's bandwidth so the comparison measures the ENGINE's
-  scaling, not the host ceiling.
+Each level runs in its own child process (``run_level``), taskset-pinned
+to its executor cores + 2 driver cores, at most the host: unpinned, the
+small level's scan/Arrow/GC threads would free-ride on idle host cores.
+Each executor gets (nproc - 2) // 4 cores, at least 1, so the 4N level
+fits the host (4 x 1 on 4 CPUs, 4 x 4 + 2 on 18). The child times
+flagship batch and streaming over a ``generate_pages_spark`` corpus,
+stops the cluster and removes its executors' work dir.
 
-Writes BENCH/BASELINE.md. Run: python jobs/scaling_bench.py
+Writes BENCH/BASELINE.md and BENCH/scaling_epochs.json.
+Run: python jobs/scaling_bench.py
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
+import time
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# Levels are EXECUTOR counts (local-cluster[N,4] — separate executor
-# JVMs, py-files shipping): N=1 vs 4N=4 executors of 4 cores each.
-# 4 first: it generates the corpus, and any OS page-cache carryover then
-# benefits the SMALLER level — biasing measured efficiency DOWN
-# (conservative).
-LEVELS = [4, 1]
-EXEC_CORES = 4
-DRIVER_CORES = 2
+sys.path.insert(0, REPO)
 
+from bench import busy_fraction, cpu_jiffies  # noqa: E402
+
+# sized in the parent only: a pinned child's affinity is its pin
+HOST_CPUS = sorted(os.sched_getaffinity(0))
+DRIVER_CORES = 2
+EXEC_CORES = max(1, (len(HOST_CPUS) - DRIVER_CORES) // 4)
+# Executor counts. 4 first: it generates the corpus, and any OS
+# page-cache carryover then benefits the SMALLER level — biasing
+# measured efficiency DOWN (conservative).
+LEVELS = [4, 1]
+STAGE_ROOT = os.path.join(REPO, ".bench", "scaling")
 
 # Corpus sized so COMPUTE dominates the ~1-2 s of fixed per-query
-# streaming machinery even at the 4-executor level (the r1 e2e-efficiency
-# gap). Sigs raised 400→2000 and docs 200-500→600-1200 words: the
-# round-2 token-scan detector is flat in signature count (a realistic
-# production signature inventory costs the same per doc), and heavier
-# CC-realistic pages carry more extract/detect work per row.
-SCALING_DOCS = os.environ.get("WMD_SCALING_DOCS", "600000")
-SCALING_SIGS = os.environ.get("WMD_SCALING_SIGS", "2000")
+# streaming machinery even at the 4-executor level: a production-size
+# signature inventory (the detector's scan is flat in signature count)
+# and 600-1200-word pages.
+SCALING_DOCS = int(os.environ.get("WMD_SCALING_DOCS", "600000"))
+SCALING_SIGS = int(os.environ.get("WMD_SCALING_SIGS", "2000"))
+STREAM_FILES = 64
+# identical plan shape at every level: scan splits well past the core
+# count, and the same number of shuffle (state-store) partitions
+PINS = {"spark.sql.files.maxPartitionBytes": "8m",
+        "spark.sql.shuffle.partitions": "8"}
 
-# Load gating (round-5): rounds 2-4 showed external host load silently
-# polluting single epochs (±30% swings on WHICH phase gets hit). Every
-# epoch is now measured, gated, and either accepted or rejected by two
-# objective signals recorded alongside the numbers:
-#  - off-pin CPU busy fraction: each level is taskset-pinned to cores
-#    [0, n_cpus); anything burning the REMAINING cores during the run is
-#    by construction not us. Sampled from /proc/stat around each level.
-#  - 1-min loadavg before each level (secondary, recorded not gated:
-#    after a level our own just-exited JVMs still inflate it).
-# The report takes the MEDIAN over >= EPOCHS accepted epochs.
+# Load gate: an epoch is rejected when the host CPUs OUTSIDE a level's
+# pin (external load, by construction) were busier than the bound during
+# it. A pin over every host CPU leaves that level's reading blind (NaN);
+# the epoch is gated on its other levels, and counts unchecked only when
+# every level is blind. The report takes the MEDIAN of accepted epochs.
 EPOCHS = int(os.environ.get("WMD_SCALING_EPOCHS", "5"))
-MAX_ATTEMPTS = int(os.environ.get("WMD_SCALING_MAX_ATTEMPTS",
-                                  str(EPOCHS + 3)))
-OFFPIN_BUSY_REJECT = float(os.environ.get("WMD_SCALING_OFFPIN_MAX", "0.10"))
-N_HOST_CPUS = os.cpu_count() or 32
+MAX_ATTEMPTS = EPOCHS + 3
+OFFPIN_BUSY_REJECT = 0.10
+
+METRICS = [
+    ("docs_per_sec_batch", "flagship batch"),
+    ("docs_per_sec_stream", "flagship streaming e2e (incl. query start/teardown)"),
+    ("docs_per_sec_stream_sustained",
+     "flagship streaming SUSTAINED (data micro-batches; the BASELINE.json metric)"),
+]
 
 
-def _proc_stat() -> dict[int, tuple[int, int]]:
-    """Per-cpu (busy_jiffies, total_jiffies) from /proc/stat."""
-    out = {}
-    with open("/proc/stat") as fh:
-        for ln in fh:
-            if ln.startswith("cpu") and ln[3].isdigit():
-                parts = ln.split()
-                cpu = int(parts[0][3:])
-                vals = [int(v) for v in parts[1:]]
-                idle = vals[3] + vals[4]          # idle + iowait
-                out[cpu] = (sum(vals) - idle, sum(vals))
-    return out
+def _seconds(fn) -> float:
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
 
 
-def offpin_busy_fraction(before: dict, after: dict, n_pinned: int) -> float:
-    """Mean busy fraction over the NON-pinned cores between two
-    /proc/stat samples — external load, by construction. Returns NaN
-    (gate unavailable, NOT a clean 0.0) when the pin covers every host
-    core — on such a host the gate cannot observe external load and
-    silently accepting would defeat its purpose; main() surfaces the
-    NaN in the report instead."""
-    fracs = []
-    for cpu in before:
-        if cpu < n_pinned or cpu not in after:
-            continue
-        db = after[cpu][0] - before[cpu][0]
-        dt = after[cpu][1] - before[cpu][1]
-        if dt > 0:
-            fracs.append(db / dt)
-    return sum(fracs) / len(fracs) if fracs else float("nan")
+def run_level(n_executors: int, cores: int) -> None:
+    """One level, in its pinned child process: print one JSON line of
+    flagship batch (min of 3 after a warm-up pass) and streaming (min of
+    3 after a warm-up run) docs/s on ``n_executors`` x ``cores``."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from jobs.build_pyfiles import build
+    from jobs.soak import stage_time_ordered_stream
+    from watermark_detector_spark.fixtures import FixtureConfig
+    from watermark_detector_spark.plans.flagship import flagship_batch, kept_detections_fused
+    from watermark_detector_spark.session import get_spark_cluster
+    from watermark_detector_spark.sources.pages import read_pages_batch
+    from watermark_detector_spark.streaming.pipeline import MetricsListener, run_flagship_stream
+
+    spark = get_spark_cluster(n_executors, cores, py_files=build(),
+                              app_name=f"wmd-scaling-e{n_executors}", extra_conf=PINS)
+    app_id = spark.sparkContext.applicationId
+    cfg = FixtureConfig(n_docs=SCALING_DOCS, n_domains=500, span_s=7200,
+                        n_sigs=SCALING_SIGS, min_words=600, max_words=1200)
+    os.makedirs(STAGE_ROOT, exist_ok=True)
+    run = tempfile.mkdtemp(prefix="run-", dir=STAGE_ROOT)
+    try:
+        # the stream's files are the batch corpus too (Spark skips _STAGED)
+        stream_dir = stage_time_ordered_stream(spark, cfg, STREAM_FILES, STAGE_ROOT)
+        pages = read_pages_batch(spark, stream_dir)
+        kept_detections_fused(pages, cfg.signatures).count()  # warm-up pass
+        batch_s = min(_seconds(lambda: flagship_batch(pages, cfg.signatures).write.mode(
+            "overwrite").parquet(os.path.join(run, "out"))) for _ in range(3))
+        e2e_s, sustained = [], []
+        for i in range(4):
+            ml = MetricsListener()
+            spark.streams.addListener(ml)
+            e2e_s.append(_seconds(lambda: run_flagship_stream(
+                spark, stream_dir, cfg.signatures, os.path.join(run, f"sink{i}"),
+                os.path.join(run, f"ckpt{i}"), max_files_per_trigger=STREAM_FILES)))
+            time.sleep(1)  # let the last progress event land
+            spark.streams.removeListener(ml)
+            data = [p for p in ml.progress if p["numInputRows"]]
+            add_s = sum(p["durationMs"].get("addBatch", 0) for p in data) / 1000
+            sustained.append(sum(p["numInputRows"] for p in data) / add_s if add_s else 0.0)
+    finally:
+        spark.stop()
+        shutil.rmtree(run, ignore_errors=True)
+        shutil.rmtree(os.path.join(_find_spark_home(), "work", app_id), ignore_errors=True)
+    print(json.dumps({
+        "executors": n_executors, "cores_per_executor": cores, "n_docs": SCALING_DOCS,
+        "docs_per_sec_batch": round(SCALING_DOCS / batch_s, 1),
+        # the first streaming run is the warm-up
+        "docs_per_sec_stream": round(SCALING_DOCS / min(e2e_s[1:]), 1),
+        "docs_per_sec_stream_sustained": round(max(sustained[1:]), 1),
+    }))
 
 
-def run_bench(n_executors: int) -> dict:
-    env = dict(
-        os.environ,
-        WMD_EXECUTORS=str(n_executors),
-        # compute-representative workload: scaling efficiency must be
-        # measured on compute, not on micro-batch fixed overhead — a real
-        # watermark signature table has thousands of entries, and a real
-        # trigger carries far more than 4 micro-batches' fixed cost
-        WMD_BENCH_DOCS=SCALING_DOCS,
-        WMD_BENCH_SIGS=SCALING_SIGS,
-        WMD_BENCH_MIN_WORDS="600",
-        WMD_BENCH_MAX_WORDS="1200",
-        WMD_EXEC_CORES=str(EXEC_CORES),
-        WMD_BENCH_MFPT="64",
-        WMD_BENCH_SKIP_TESTDATA="1",
-        # scaling measures throughput; the soak (latency/state audit) is
-        # a separate artifact and would only add fixed time per level
-        WMD_BENCH_SKIP_SOAK="1",
-        # bench.py's own pre-flight wait-for-quiet gate must not delay
-        # individual levels here — THIS harness gates whole epochs with
-        # the stronger off-pin /proc/stat rule instead (the inner
-        # preflight_busy sample is still recorded per level)
-        WMD_BENCH_LOAD_WAIT_S="0",
-    )
-    # pin the level to exactly its core budget (see module docstring)
-    n_cpus = n_executors * EXEC_CORES + DRIVER_CORES
+def measure_level(n_executors: int) -> dict:
+    """Run one level in a child pinned to its core budget; add the
+    loadavg before it and the off-pin busy fraction during it."""
+    n_pin = min(len(HOST_CPUS), n_executors * EXEC_CORES + DRIVER_CORES)
     load_before = os.getloadavg()[0]
-    stat_before = _proc_stat()
+    stat_before = cpu_jiffies()
     out = subprocess.run(
-        ["taskset", "-c", f"0-{n_cpus - 1}",
-         sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True, text=True, env=env, cwd=REPO, timeout=3600,
+        ["taskset", "-c", ",".join(map(str, HOST_CPUS[:n_pin])), sys.executable, "-c",
+         f"from jobs.scaling_bench import run_level; run_level({n_executors}, {EXEC_CORES})"],
+        capture_output=True, text=True, cwd=REPO, timeout=3600,
     )
-    stat_after = _proc_stat()
-    line = [ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")][-1]
-    res = json.loads(line)
+    stat_after = cpu_jiffies()
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode or not lines:
+        raise RuntimeError(f"level {n_executors} failed (exit {out.returncode}):\n"
+                           + out.stderr[-3000:])
+    res = json.loads(lines[-1])
+    assert res["cores_per_executor"] == EXEC_CORES, res
+    res["pinned_cpus"] = n_pin
     res["loadavg_before"] = round(load_before, 2)
-    res["offpin_busy"] = round(
-        offpin_busy_fraction(stat_before, stat_after, n_cpus), 4)
+    res["offpin_busy"] = round(busy_fraction(
+        stat_before, stat_after, [f"cpu{c}" for c in HOST_CPUS[n_pin:]]), 4)
     return res
 
 
+def _row(e: dict, lo: int, hi: int) -> str:
+    r, eff = e["results"], e["effs"]
+    return (f"| {e['attempt']} | {'accepted' if e['accepted'] else 'REJECTED'} "
+            f"| {e['worst_offpin']:.3f} [{', '.join(map(str, e['gated_levels'])) or 'none'}] "
+            f"| {r[lo]['loadavg_before']:.1f} / {r[hi]['loadavg_before']:.1f} "
+            + "".join(f"| {eff.get(k, float('nan')):.2f} " for k, _ in METRICS)
+            + f"| {r[lo]['docs_per_sec_batch']:,.0f} -> {r[hi]['docs_per_sec_batch']:,.0f} "
+            f"| {r[lo]['docs_per_sec_stream_sustained']:,.0f} -> "
+            f"{r[hi]['docs_per_sec_stream_sustained']:,.0f} |")
+
+
 def main() -> None:
-    metrics = [
-        ("docs_per_sec_batch", "flagship batch"),
-        ("docs_per_sec_stream",
-         "flagship streaming e2e (incl. query start/teardown)"),
-        ("docs_per_sec_stream_sustained",
-         "flagship streaming SUSTAINED (data micro-batches; the "
-         "BASELINE.json metric)"),
-    ]
     lo, hi = min(LEVELS), max(LEVELS)
-    accepted: list[dict] = []
-    rejected: list[dict] = []
-    attempt = 0
-    while len(accepted) < EPOCHS and attempt < MAX_ATTEMPTS:
-        attempt += 1
+    epochs: list[dict] = []
+    while sum(e["accepted"] for e in epochs) < EPOCHS and len(epochs) < MAX_ATTEMPTS:
+        attempt = len(epochs) + 1
         results = {}
         for n in LEVELS:
-            results[n] = run_bench(n)
+            results[n] = measure_level(n)
             print(f"epoch {attempt} local-cluster[{n},{EXEC_CORES}]: "
                   f"{json.dumps(results[n])}", flush=True)
-        offpins = [results[n]["offpin_busy"] for n in LEVELS]
-        worst_offpin = (float("nan") if any(o != o for o in offpins)
-                        else max(offpins))
-        epoch = {"attempt": attempt, "results": results,
-                 "worst_offpin": worst_offpin,
-                 "effs": {}}
-        for key, _label in metrics:
-            if key in results[lo] and key in results[hi]:
-                epoch["effs"][key] = (
-                    (results[hi][key] / results[lo][key]) / (hi / lo))
-        # NaN (pin covers all host cores -> gate blind) counts as
-        # accepted-but-flagged: the per-epoch table shows the NaN
-        ok = not (worst_offpin > OFFPIN_BUSY_REJECT)
-        (accepted if ok else rejected).append(epoch)
-        print(f"epoch {attempt}: offpin_busy={worst_offpin:.3f} "
+        gated = [n for n in LEVELS if results[n]["offpin_busy"] == results[n]["offpin_busy"]]
+        worst = max((results[n]["offpin_busy"] for n in gated), default=float("nan"))
+        ok = not (worst > OFFPIN_BUSY_REJECT)  # NaN: every level blind, accepted
+        effs = {k: results[hi][k] / results[lo][k] / (hi / lo)
+                for k, _ in METRICS if results[lo][k]}
+        epochs.append({"attempt": attempt, "accepted": ok, "results": results,
+                       "gated_levels": gated, "worst_offpin": worst, "effs": effs})
+        print(f"epoch {attempt}: offpin_busy={worst:.3f} over levels {gated} "
               f"(gate {OFFPIN_BUSY_REJECT}) -> "
               f"{'ACCEPT' if ok else 'REJECT'} | effs="
-              f"{ {k: round(v, 2) for k, v in epoch['effs'].items()} }",
-              flush=True)
-    gate_passed = bool(accepted)
-    if not accepted:
-        # host never quiet: still report the data, but LABELED as
-        # rejected — never relabel gate-failing epochs as accepted
-        print("NO accepted epochs — host never quiet; reporting over "
-              "REJECTED epochs, labeled as such")
-        accepted = rejected
-
-    med = {}
-    rng = {}
-    for key, _label in metrics:
-        vals = sorted(e["effs"][key] for e in accepted if key in e["effs"])
+              f"{ {k: round(v, 2) for k, v in effs.items()} }", flush=True)
+    accepted = [e for e in epochs if e["accepted"]]
+    # host never quiet: report over the rejected epochs, labeled as such
+    reported = accepted or epochs
+    med, rng = {}, {}
+    for key, _ in METRICS:
+        vals = sorted(e["effs"][key] for e in reported if key in e["effs"])
         if vals:
-            med[key] = statistics.median(vals)
-            rng[key] = (vals[0], vals[-1])
+            med[key], rng[key] = statistics.median(vals), (vals[0], vals[-1])
 
-    ref = accepted[len(accepted) // 2]["results"]  # a middling epoch
+    label = "load-gated epochs" if accepted else "epochs (ALL gate-REJECTED — load-polluted)"
     md = [
         "# BENCH — measured throughput & scaling efficiency",
         "",
         f"Generated {datetime.now(timezone.utc).strftime('%Y-%m-%d %H:%MZ')} by "
-        "`jobs/scaling_bench.py` (round-5 LOAD-GATED protocol: every epoch "
-        "records the busy fraction of the host cores OUTSIDE its taskset "
-        "pin — external load by construction — and epochs with off-pin "
-        f"busy > {OFFPIN_BUSY_REJECT:.0%} are auto-rejected; the headline "
-        + (f"is the MEDIAN over {len(accepted)} accepted epochs, "
-           f"{len(rejected) - len(accepted) if not gate_passed else len(rejected)} rejected"
-           if gate_passed else
-           f"is over {len(accepted)} epochs that ALL FAILED the load "
-           "gate — the host was never quiet; treat every number below "
-           "as load-polluted")
-        + "). Cluster stand-in: Spark local-cluster "
-        "mode — each executor is a SEPARATE JVM (own heap, GC, python "
-        "worker pool) with the engine shipped via py-files, exactly as "
-        "spark-submit would. N=1 executor x 4 cores vs 4N=4 executors x 4 "
-        "cores, identical input and configs otherwise; each level is "
-        "taskset-pinned to exactly its core budget (+2 driver cores) so "
-        "the small level cannot free-ride on idle host cores and the "
-        "large level stays inside the single host's memory bandwidth — "
-        "the sandbox stand-in for N vs 4N executors of a real cluster "
-        "(per the task brief).",
+        "`jobs/scaling_bench.py`: Spark local-cluster mode, each executor a separate "
+        f"JVM with the engine shipped via py-files; N={lo} vs 4N={hi} executors x "
+        f"{EXEC_CORES} cores on a {len(HOST_CPUS)}-CPU host, each level taskset-pinned "
+        f"to its executor cores + {DRIVER_CORES} driver cores (at most the host). "
+        f"Epochs whose off-pin busy exceeds {OFFPIN_BUSY_REJECT:.0%} are rejected; a "
+        "level pinned over every CPU reads none and is not gated. "
+        f"{len(accepted)} accepted, {len(epochs) - len(accepted)} rejected.",
         "",
-        f"Corpus: {ref[hi]['n_docs']:,} deterministic pages (600-1200 words, "
-        "~7 kB html payloads, 500 Zipf-skewed domains); pipeline = "
-        f"extract(html->text) -> detect({SCALING_SIGS} signatures) -> "
-        "filter(score>=0.5) -> per-domain 1-min tumbling window agg -> "
-        "exactly-once sink (streaming). Warmup pass before timing; batch "
-        "= min of 3 runs, streaming min of 3 after one untimed warm run.",
+        f"Corpus: {SCALING_DOCS:,} deterministic pages (600-1200 words, 500 Zipf-skewed "
+        f"domains) in {STREAM_FILES} event-time-ordered files; pipeline = extract -> "
+        f"detect({SCALING_SIGS} signatures) -> filter(score>=0.5) -> per-domain 1-min "
+        "tumbling window agg (-> exactly-once sink when streaming). Batch = min of 3 "
+        "runs after a warm-up pass; streaming = min of 3 after one untimed warm run.",
         "",
-        f"## Scaling efficiency — median [min-max] over {len(accepted)} "
-        + ("load-gated epochs" if gate_passed
-           else "epochs (ALL gate-REJECTED — load-polluted)"),
+        f"## Scaling efficiency — median [min-max] over {len(reported)} {label}",
         "",
         "| pipeline | eff median [range] | target |",
         "|---|---|---|",
-    ]
-    for key, label in metrics:
-        if key in med:
-            bold = "**" if key == "docs_per_sec_stream_sustained" else ""
-            md.append(
-                f"| {bold}{label}{bold} | {bold}{med[key]:.2f} "
-                f"[{rng[key][0]:.2f} - {rng[key][1]:.2f}]{bold} "
-                f"| {bold}>=0.8{bold} |")
-    md += [
+        *(f"| {lbl} | {med[k]:.2f} [{rng[k][0]:.2f} - {rng[k][1]:.2f}] | >=0.8 |"
+          for k, lbl in METRICS if k in med),
         "",
-        "## Per-epoch detail ("
-        + ("accepted" if gate_passed else "all gate-rejected") + ")",
+        "## Per-epoch detail",
         "",
-        "| epoch | off-pin busy (gate {:.0%}) | loadavg before N / 4N | "
-        "batch eff | e2e eff | sustained eff | docs/s batch N->4N | "
-        "docs/s sustained N->4N |".format(OFFPIN_BUSY_REJECT),
-        "|---|---|---|---|---|---|---|---|",
-    ]
-
-    def _row(e):
-        r = e["results"]
-        return (
-            f"| {e['attempt']} | {e['worst_offpin']:.3f} "
-            f"| {r[lo].get('loadavg_before', float('nan')):.1f} / "
-            f"{r[hi].get('loadavg_before', float('nan')):.1f} "
-            f"| {e['effs'].get('docs_per_sec_batch', float('nan')):.2f} "
-            f"| {e['effs'].get('docs_per_sec_stream', float('nan')):.2f} "
-            f"| {e['effs'].get('docs_per_sec_stream_sustained', float('nan')):.2f} "
-            f"| {r[lo]['docs_per_sec_batch']:,.0f} -> "
-            f"{r[hi]['docs_per_sec_batch']:,.0f} "
-            f"| {r[lo].get('docs_per_sec_stream_sustained', float('nan')):,.0f} -> "
-            f"{r[hi].get('docs_per_sec_stream_sustained', float('nan')):,.0f} |")
-
-    for e in accepted:
-        md.append(_row(e))
-    if rejected and gate_passed:
-        md += [
-            "",
-            "## Rejected epochs (off-pin busy over gate — external load)",
-            "",
-            "| epoch | off-pin busy (gate {:.0%}) | loadavg before N / 4N | "
-            "batch eff | e2e eff | sustained eff | docs/s batch N->4N | "
-            "docs/s sustained N->4N |".format(OFFPIN_BUSY_REJECT),
-            "|---|---|---|---|---|---|---|---|",
-        ]
-        for e in rejected:
-            md.append(_row(e))
-    md += [
+        f"| epoch | gate | off-pin busy (gate {OFFPIN_BUSY_REJECT:.0%}) [gated levels] "
+        "| loadavg before N / 4N | batch eff | e2e eff | sustained eff "
+        "| docs/s batch N->4N | docs/s sustained N->4N |",
+        "|---|---|---|---|---|---|---|---|---|",
+        *(_row(e, lo, hi) for e in epochs),
         "",
-        "History (same N-vs-4N protocol; r5 onward load-gated): "
-        "sustained eff r2 0.88, r3 0.89, r4 median 0.86 [0.80-1.06], "
-        "r5 0.88 [0.80-0.91], r7 0.87 [0.71-0.93]; batch r2 0.85, "
-        "r3 0.94, r4 median 0.73 [0.65-0.99] (two of three r4 epochs "
-        "were later shown load-polluted — the gate now rejects those "
-        "automatically instead of leaving it to post-hoc analysis), "
-        "r5 0.89 [0.79-0.93], r7 0.84 [0.69-0.90].",
-        "",
-        "Raw JSON (accepted epochs; 1-executor line then 4-executor "
-        "line each):",
+        "Raw JSON (1-executor line then 4-executor line per epoch):",
         "```json",
+        *(json.dumps(e["results"][n]) for e in reported for n in (lo, hi)),
+        "```",
+        "",
     ]
-    for e in accepted:
-        md.append(json.dumps(e["results"][lo]))
-        md.append(json.dumps(e["results"][hi]))
-    md += ["```", ""]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as fh:
         fh.write("\n".join(md))
     with open(os.path.join(REPO, "BENCH", "scaling_epochs.json"), "w") as fh:
-        json.dump({"accepted": accepted if gate_passed else [],
-                   "rejected": rejected,
-                   "gate_passed": gate_passed,
-                   "gate_offpin": OFFPIN_BUSY_REJECT,
+        json.dump({"accepted": accepted, "rejected": [e for e in epochs if not e["accepted"]],
+                   "gate_passed": bool(accepted), "gate_offpin": OFFPIN_BUSY_REJECT,
                    "median_eff": med}, fh, indent=1, default=str)
-    label = "accepted" if gate_passed else "gate-REJECTED (load-polluted)"
-    print(f"median efficiencies over {len(accepted)} {label} epochs: "
+    print(f"median efficiencies over {len(reported)} {label}: "
           f"{ {k: round(v, 3) for k, v in med.items()} }")
 
 

@@ -31,9 +31,10 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-BENCH_ROOT = os.environ.get("WMD_BENCH_ROOT", "/root/repo/.bench")
+BENCH_ROOT = os.environ.get("WMD_BENCH_ROOT", os.path.join(REPO, ".bench"))
 
 
 def stage_time_ordered_stream(spark, cfg, n_files: int, root: str) -> str:

@@ -149,7 +149,7 @@ def test_backfill_multi_source_exactly_once(spark, fixture_cfg, fixture_paths,
     identity is path-derived, not positional)."""
     import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.backfill import backfill
     from watermark_detector_spark.fixtures import FixtureConfig, generate
 

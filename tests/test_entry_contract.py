@@ -3,23 +3,23 @@
 DuckDB — row count, column names, and order-insensitive values."""
 
 import glob
-import math
 import os
 import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod
+import bench  # noqa: E402
 
-# the SAME canonicalization the full-suite artifact CLI applies — one
+# the SAME comparator the full-suite artifact CLI applies — one
 # implementation, so the test gate and CORRECTNESS_FULL.json can never
 # silently diverge on tolerance/typing rules
-from jobs.correctness import TABLES, _canon  # noqa: E402
+from jobs.correctness import TABLES, _canon, first_mismatch  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -43,16 +43,13 @@ def _assert_equal(got: pd.DataFrame, want: pd.DataFrame, name: str):
         f"{name}: columns {sorted(got.columns)} != {sorted(want.columns)}"
     )
     assert len(got) == len(want), f"{name}: rows {len(got)} != {len(want)}"
+    c = first_mismatch(got, want)
+    assert c is None, f"{name}.{c}: first diff\n{_first_diff(got, want, c)}"
+
+
+def _first_diff(got: pd.DataFrame, want: pd.DataFrame, c: str) -> pd.DataFrame:
     g, w = _canon(got), _canon(want)
-    for c in g.columns:
-        if pd.api.types.is_float_dtype(g[c]):
-            assert np.allclose(g[c].fillna(math.nan), w[c].fillna(math.nan),
-                               atol=1e-9, equal_nan=True), f"{name}.{c}"
-        else:
-            assert (g[c].fillna("∅").astype(str) == w[c].fillna("∅").astype(str)).all(), (
-                f"{name}.{c}: first diff\n"
-                + str(pd.concat([g[c], w[c]], axis=1)[g[c].astype(str) != w[c].astype(str)].head())
-            )
+    return pd.concat([g[c], w[c]], axis=1)[g[c].astype(str) != w[c].astype(str)].head()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -66,6 +63,20 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert "domain" in df.columns
+
+
+def test_entry_and_jobs_come_from_this_checkout():
+    """A copy of the repository tests its own driver contract and jobs,
+    not those of another checkout earlier on ``sys.path``."""
+    import jobs.correctness
+
+    for mod in (entrymod, jobs.correctness, bench):
+        assert os.path.realpath(mod.__file__).startswith(os.path.realpath(ROOT) + os.sep), (
+            mod.__name__, mod.__file__, ROOT)
+
+
+def test_bench_leaves_are_driver_queries():
+    assert set(bench.BENCH_QUERIES) <= set(QUERIES), set(bench.BENCH_QUERIES) - set(QUERIES)
 
 
 def test_every_query_has_an_oracle():

@@ -179,8 +179,9 @@ def test_eval_ap_perfect_on_goldens(spark, fixture_cfg, fixture_paths):
     """Detector predictions vs construction goldens: precision=recall=1
     per category (the detector IS exact on fixtures — the eval job is
     validated by recovering that)."""
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.eval_ap import evaluate
 
     pages = read_pages_batch(spark, fixture_paths["pages"])

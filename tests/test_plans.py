@@ -1,11 +1,12 @@
 """Physical-plan quality assertions — the properties that matter at
 100 TB, checked on the actual executed plans (SURVEY.md §4)."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.01"

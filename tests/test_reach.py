@@ -3,10 +3,9 @@
 Parses (never imports) each module under ``watermark_detector_spark/``
 and checks that every module-level def, class or constant, and every
 method of a package class, is loaded by name somewhere in the package,
-``__spark_entry__.py``, ``jobs/``, ``bench.py``, ``bench_extra.py`` or
-``perfbench/`` — outside its own definition. Tests do not count as
-readers: code that only its own test reaches is dead weight. Runs
-without Spark.
+``__spark_entry__.py``, ``jobs/``, ``bench.py`` or ``perfbench/`` —
+outside its own definition. Tests do not count as readers: code that
+only its own test reaches is dead weight. Runs without Spark.
 
 Methods of classes that Spark calls back into are exempt: subclasses of
 the DataSource reader/writer types and ``StreamingQueryListener``, and
@@ -27,7 +26,7 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "watermark_detector_spark"
 READERS = [PACKAGE, ROOT / "__spark_entry__.py", ROOT / "jobs", ROOT / "bench.py",
-           ROOT / "bench_extra.py", ROOT / "perfbench"]
+           ROOT / "perfbench"]
 
 # The only names allowed without a reader, each with its reason.
 ALLOWED = {

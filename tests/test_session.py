@@ -176,10 +176,6 @@ def test_engine_daemon_only_where_workers_import_the_package(monkeypatch, tmp_pa
     monkeypatch.setenv("PYTHONPATH", str(tmp_path))
     assert session._python_daemon_conf() == _DAEMON
     assert engine_conf().items() >= _DAEMON.items()
-    # local-cluster executors start in their own work dirs
-    assert session._python_daemon_conf(workers_in_jvm_cwd=False) == {}
-    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), root]))
-    assert session._python_daemon_conf(workers_in_jvm_cwd=False) == _DAEMON
     monkeypatch.chdir(tmp_path)
     monkeypatch.setenv("PYTHONPATH", str(tmp_path))
     assert session._python_daemon_conf() == {}

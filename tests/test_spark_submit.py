@@ -3,17 +3,34 @@ against a multi-executor cluster (local-cluster stand-in — separate
 executor JVMs, the engine shipped as a zip, nothing imported from the
 repo working tree on the executors)."""
 
+import glob
 import json
 import os
 import shutil
 import subprocess
 import sys
 
+import pytest
+from pyspark.find_spark_home import _find_spark_home
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+# local-cluster workers keep each application's executor dirs here
+WORK_DIRS = os.path.join(_find_spark_home(), "work", "app-*")
 
 
-def test_spark_submit_py_files_end_to_end(tmp_path_factory, fixture_cfg):
+@pytest.fixture
+def own_work_dirs_removed():
+    """Remove the executor work dirs that appear during the test, and
+    only those."""
+    before = set(glob.glob(WORK_DIRS))
+    yield
+    for d in set(glob.glob(WORK_DIRS)) - before:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_spark_submit_py_files_end_to_end(tmp_path_factory, fixture_cfg,
+                                          own_work_dirs_removed):
     root = tmp_path_factory.mktemp("submit")
     # fixtures generated in-process (cheap); job runs in a fresh JVM tree
     from watermark_detector_spark.fixtures import FixtureConfig, generate

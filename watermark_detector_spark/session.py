@@ -101,14 +101,13 @@ _DAEMON_KEY = "spark.python.daemon.module"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
 
 
-def _python_daemon_conf(workers_in_jvm_cwd: bool = True) -> dict[str, str]:
+def _python_daemon_conf() -> dict[str, str]:
     """Fork Python workers from the engine daemon (``_pydaemon``, which
     starts warm: see ``_pyworker``) when the daemon can import it: the
     package root is the JVM's cwd, which ``python -m`` puts first on the
-    daemon's path (unless ``workers_in_jvm_cwd`` is False), or a
-    ``PYTHONPATH`` entry. Not under spark-submit, whose JVM and workers
-    start elsewhere. Otherwise pyspark's stock daemon runs: same
-    outputs, slower worker start-up."""
+    daemon's path, or a ``PYTHONPATH`` entry. Not under spark-submit,
+    whose JVM and workers start elsewhere. Otherwise pyspark's stock
+    daemon runs: same outputs, slower worker start-up."""
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         return {}
     jvm = SparkContext._jvm
@@ -117,7 +116,7 @@ def _python_daemon_conf(workers_in_jvm_cwd: bool = True) -> dict[str, str]:
     else:
         system = jvm.java.lang.System
         cwd, pythonpath = system.getProperty("user.dir"), system.getenv("PYTHONPATH")
-    paths = (pythonpath or "").split(os.pathsep) + ([cwd] if workers_in_jvm_cwd else [])
+    paths = (pythonpath or "").split(os.pathsep) + [cwd]
     if _PACKAGE_ROOT not in {os.path.realpath(p) for p in paths if p}:
         return {}
     return {_DAEMON_KEY: "watermark_detector_spark._pydaemon"}
@@ -168,41 +167,34 @@ def engine_conf(cpus: int = DEFAULT_CPUS) -> dict[str, str]:
 
 def get_spark_cluster(
     n_executors: int,
-    cores_per_executor: int = 8,
-    executor_mem: str = "6g",
+    cores_per_executor: int,
+    py_files: str,
     app_name: str = "watermark_detector_spark",
     extra_conf: dict[str, str] | None = None,
-    py_files: str | None = None,
 ) -> SparkSession:
     """Multi-executor session via Spark's local-cluster manager: each
     executor is a SEPARATE JVM with its own python worker pool — the
     faithful sandbox stand-in for an N-executor cluster (scaling runs
     compare n_executors=N vs 4N at fixed executor size). The engine
-    package ships to executors via py-files, same as spark-submit."""
-    builder = (
-        SparkSession.builder.master(
-            f"local-cluster[{n_executors},{cores_per_executor},8192]"
-        )
-        .appName(app_name)
-        .config("spark.executor.memory", executor_mem)
-    )
-    conf = engine_conf(cores_per_executor)
+    package ships to executors as the ``py_files`` zip, same as
+    spark-submit. The executor heap does not depend on ``n_executors``:
+    half of RAM over as many such executors as the host's CPUs hold, at
+    most 6g of the worker's 8 GB."""
+    fits = max(1, (os.cpu_count() or 1) // cores_per_executor)
+    heap_gib = max(1, min(6, int(_default_driver_memory()[:-1]) // fits))
+    builder = SparkSession.builder.master(
+        f"local-cluster[{n_executors},{cores_per_executor},8192]").appName(app_name)
+    conf = engine_conf(cores_per_executor) | {"spark.executor.memory": f"{heap_gib}g"}
     # executors start their Python daemons in their own work dirs, and
     # py-files reach the workers only after the daemon has started
     conf.pop(_DAEMON_KEY, None)
-    if not py_files:
-        conf |= _python_daemon_conf(workers_in_jvm_cwd=False)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf |= (extra_conf or {}) | {"spark.submit.pyFiles": py_files,
+                                  "spark.ui.enabled": "false"}
     for k, v in conf.items():
         builder = builder.config(k, v)
-    if py_files:
-        builder = builder.config("spark.submit.pyFiles", py_files)
-    builder = builder.config("spark.ui.enabled", "false")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if py_files:
-        spark.sparkContext.addPyFile(py_files)
+    spark.sparkContext.addPyFile(py_files)
     return spark
 
 
